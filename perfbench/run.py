@@ -27,7 +27,7 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 sys.path.insert(0, HERE)
 
-SETUPS = 3  # set-ups per run; setup_s reports their median
+SETUPS = 2  # set-ups per run; setup_s reports their median
 CALL_TIMEOUT_S = 90  # hard limit for one operator call
 DEADLINE_S = 150  # no new pass starts after this much process time
 DRIVER_MEMORY = "2g"
@@ -80,6 +80,18 @@ def tree_cpu_s() -> float:
     return total / os.sysconf("SC_CLK_TCK")
 
 
+def settle(max_s: float = 5.0) -> None:
+    """Wait until the process tree is nearly idle.  A call can leave work
+    running in the JVM for up to a second (0.6 to 1 CPU-s after some
+    cooc_sf0.01 calls); without the wait it is charged to the next call."""
+    t0, c = time.perf_counter(), tree_cpu_s()
+    while time.perf_counter() - t0 < max_s:
+        time.sleep(0.1)
+        c, prev = tree_cpu_s(), c
+        if c - prev < 0.03:
+            return
+
+
 def log(msg: str) -> None:
     print(f"perfbench: {msg}", file=sys.stderr, flush=True)
 
@@ -92,19 +104,20 @@ def _alarm(signum, frame):
     raise CallTimeout()
 
 
-def stray_spark_jvms() -> list[int]:
-    """Pids of Spark driver JVMs already alive: they would share the cores
-    and skew every timing."""
+def stray_jvms() -> list[int]:
+    """Pids of ``java`` processes already alive: a leftover Spark JVM keeps
+    spinning, shares the cores and skews every timing."""
     pids = []
     for pid in os.listdir("/proc"):
         if not pid.isdigit():
             continue
         try:
             with open(f"/proc/{pid}/cmdline", "rb") as f:
-                if b"org.apache.spark.deploy.SparkSubmit" in f.read():
-                    pids.append(int(pid))
+                argv0 = f.read().split(b"\0", 1)[0]
         except OSError:
             continue
+        if os.path.basename(argv0) == b"java":
+            pids.append(int(pid))
     return pids
 
 
@@ -161,8 +174,12 @@ def start_session(work: str, app: str):
         extra_conf={
             "spark.local.dir": os.path.join(work, "spark-local"),
             # a fixed heap and young generation keep peak RSS from
-            # following GC ergonomics from run to run
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work} -Xms{DRIVER_MEMORY} -Xmn512m",
+            # following GC ergonomics from run to run; the serial collector
+            # runs no concurrent GC threads, whose CPU time would follow
+            # the host's scheduling rather than the work
+            "spark.driver.extraJavaOptions": (
+                f"-Djava.io.tmpdir={work} -Xms{DRIVER_MEMORY} -Xmn512m -XX:+UseSerialGC"
+            ),
         },
     )
 
@@ -220,6 +237,7 @@ class Harness:
         span, or None when it failed."""
         from tcr_kcore_spark.superstep import release_state
 
+        settle()
         signal.alarm(CALL_TIMEOUT_S)
         try:
             with self.rec.span(op.name) as sp:
@@ -252,7 +270,10 @@ class Harness:
             outer_rounds=getattr(stats, "outer_rounds", 0),
             checkpoints=getattr(stats, "checkpoints", 0),
         )
-        self.outcome(f"{op.name}: wrong result", matches(rows, self.wl.oracle.ids, op.expect, op.tol))
+        if not matches(rows, self.wl.oracle.ids, op.expect, op.tol):
+            self.outcome(f"{op.name}: wrong result", False)
+        else:
+            self.outcome(f"{op.name}: unexpected stats {stats}"[:300], op.check is None or op.check(stats))
         return sp
 
 
@@ -373,9 +394,9 @@ def main(argv=None) -> int:
     if not os.path.isdir(os.path.join(ROOT, "tcr_kcore_spark")):
         log("engine package tcr_kcore_spark not found in the checkout")
         return 2
-    stray = stray_spark_jvms()
+    stray = stray_jvms()
     if stray:
-        log(f"refusing to start, Spark JVMs alive: {stray}")
+        log(f"refusing to start, java processes alive: {stray}")
         return 3
     prepare_env()
     work = os.path.join(WORK, f"{args.workload}-{args.seed}-{os.getpid()}")

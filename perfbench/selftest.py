@@ -8,8 +8,8 @@ the same harness as ``run.py``, traced, and checks that:
 
 - the oracles still give the results pinned in ``expected.json``;
 - every engine call matches its oracle and every span has its counters;
-- a deliberately perturbed result, and a call that raises, each count as
-  one failed call;
+- a deliberately perturbed result, a call that raises and a resume that
+  ignores its checkpoint each count as one failed call;
 - where the repository's test oracles are importable, the NumPy oracles
   agree with them on a small random graph.
 
@@ -109,13 +109,19 @@ def main() -> int:
                 problems.append(f"{name}: {h.errors}")
             # a wrong answer and a raising call must each count as failed
             first = wl.ops()[0]
-            perturbed = Op(first.name, lambda g, op=first: _perturb(*op.run(g)), first.expect, first.tol)
-            raising = Op("raises", lambda g: 1 / 0, first.expect)
+            bad = [
+                Op(first.name, lambda g, op=first: _perturb(*op.run(g)), first.expect, first.tol),
+                Op("raises", lambda g: 1 / 0, first.expect),
+            ]
+            resume = next((op for op in wl.ops() if op.name == "resume"), None)
+            if resume is not None:
+                # ignores the checkpoint: the same ranks, but no resume
+                bad.append(Op("resume", lambda g: wl.pagerank(g, False), resume.expect, resume.tol, resume.check))
             before = h.failed
-            h.call(perturbed, g)
-            h.call(raising, g)
-            if h.failed - before != 2:
-                problems.append(f"{name}: perturbed or raising call not counted as failed")
+            for op in bad:
+                h.call(op, g)
+            if h.failed - before != len(bad):
+                problems.append(f"{name}: a perturbed, raising or non-resuming call not counted as failed")
             wl.release(g)
             print(f"selftest: {name} ok, {h.attempted} calls", flush=True)
     finally:

@@ -185,20 +185,41 @@ def lpa(g: Graph, rounds: int) -> np.ndarray:
     return lab
 
 
-def trim_levels(g: Graph) -> int:
-    """Rounds of removing vertices with no live in- or out-edge until every
-    remaining vertex lies on a cycle path."""
+def scc_supersteps(g: Graph) -> int:
+    """Supersteps of forward-backward SCC colouring, the work the engine's
+    ``scc`` does: each outer round counts its trim levels (the last,
+    unchanged one included), then the rounds of a forward and a backward
+    min-label fixpoint, each round one hop plus one pointer jump (the last,
+    unchanged round included); vertices whose two labels agree retire."""
     alive = np.ones(g.n, bool)
-    levels = 0
-    while True:
+    steps = 0
+    while alive.any():
+        while alive.any():
+            live = alive[g.s] & alive[g.d]
+            keep = alive & (np.bincount(g.d[live], minlength=g.n) > 0) & (
+                np.bincount(g.s[live], minlength=g.n) > 0
+            )
+            steps += 1
+            if keep.sum() == alive.sum():
+                break
+            alive = keep
+        if not alive.any():
+            break
         live = alive[g.s] & alive[g.d]
-        keep = alive & (np.bincount(g.d[live], minlength=g.n) > 0) & (
-            np.bincount(g.s[live], minlength=g.n) > 0
-        )
-        if keep.sum() == alive.sum():
-            return levels
-        levels += 1
-        alive = keep
+        labels = []
+        for s, d in ((g.s[live], g.d[live]), (g.d[live], g.s[live])):
+            lab, chg = np.arange(g.n), alive.copy()
+            while True:
+                steps += 1
+                m = lab.copy()
+                np.minimum.at(m, d[chg[s]], lab[s[chg[s]]])
+                new = np.minimum(m, m[m])
+                chg, lab = new < lab, new
+                if not chg.any():
+                    break
+            labels.append(lab)
+        alive &= labels[0] != labels[1]
+    return steps
 
 
 def scc(g: Graph) -> np.ndarray:

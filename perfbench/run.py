@@ -1,6 +1,6 @@
 """Benchmark entry point: one workload, one seed, one JSON result line.
 
-    python3 perfbench/run.py --workload cooc_sf0.01 --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload cooc_sf0.01 --seed 1 --seconds 5 --trace 0
 
 Runs from the root of a checkout.  It starts one local Spark session on
 every core this process may use, sets the graph up several times, then runs
@@ -29,8 +29,9 @@ sys.path.insert(0, HERE)
 
 SETUPS = 2  # set-ups per run; setup_s reports their median
 CALL_TIMEOUT_S = 90  # hard limit for one operator call
-DEADLINE_S = 150  # no new pass starts after this much process time
+DEADLINE_S = 100  # no new pass starts after this much process time
 DRIVER_MEMORY = "2g"
+JIT_THREADS = (b"C1 CompilerThre", b"C2 CompilerThre")
 OP_COUNTERS = [
     "wall_s", "proc_cpu_s", "supersteps", "step_s", "op_setup_s", "final_s", "jobs",
     "tasks", "cpu_s", "shuffle_mb", "driver_gap_s", "task_skew",
@@ -80,15 +81,36 @@ def tree_cpu_s() -> float:
     return total / os.sysconf("SC_CLK_TCK")
 
 
-def settle(max_s: float = 5.0) -> None:
-    """Wait until the process tree is nearly idle.  A call can leave work
-    running in the JVM for up to a second (0.6 to 1 CPU-s after some
-    cooc_sf0.01 calls); without the wait it is charged to the next call."""
-    t0, c = time.perf_counter(), tree_cpu_s()
+def jit_cpu_s(pid: int) -> float:
+    """CPU time of the JIT compiler threads of the JVM ``pid``."""
+    total = 0
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/stat", "rb") as f:
+                head, tail = f.read().rsplit(b")", 1)
+        except OSError:
+            continue
+        if head.split(b"(", 1)[1].startswith(JIT_THREADS):
+            total += sum(int(x) for x in tail.split()[11:13])
+    return total / os.sysconf("SC_CLK_TCK")
+
+
+def work_cpu_s(jvm_pid: int) -> float:
+    """CPU time of the process tree without the JVM's JIT compiler threads,
+    whose share of a call follows the host's timing, not the work."""
+    return tree_cpu_s() - jit_cpu_s(jvm_pid)
+
+
+def settle(cpu, max_s: float = 5.0) -> None:
+    """Wait until the process tree is nearly idle by ``cpu()``.  A call can
+    leave work running in the JVM for up to a second (0.6 to 1 CPU-s after
+    some cooc_sf0.01 calls); without the wait it is charged to the next
+    call."""
+    t0, c = time.perf_counter(), cpu()
     while time.perf_counter() - t0 < max_s:
-        time.sleep(0.1)
-        c, prev = tree_cpu_s(), c
-        if c - prev < 0.03:
+        time.sleep(0.05)
+        c, prev = cpu(), c
+        if c - prev < 0.015:
             return
 
 
@@ -179,6 +201,9 @@ def start_session(work: str, app: str):
             # the host's scheduling rather than the work
             "spark.driver.extraJavaOptions": (
                 f"-Djava.io.tmpdir={work} -Xms{DRIVER_MEMORY} -Xmn512m -XX:+UseSerialGC"
+                # compiler threads live as long as the JVM, so their CPU
+                # time can be read and left out of the metrics
+                " -XX:-UseDynamicNumberOfCompilerThreads"
             ),
         },
     )
@@ -212,9 +237,12 @@ class Harness:
         from spans import Recorder
 
         self.spark, self.wl = spark, wl
+        self.jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+        self.cpu = lambda: work_cpu_s(self.jvm_pid)
         self.rec = Recorder(spark, name, traced)
         self.attempted = self.failed = 0
         self.errors: list[str] = []
+        self.idle_s = 0.0  # spent collecting the heap and waiting for idle
 
     def outcome(self, what: str, ok: bool) -> None:
         self.attempted += 1
@@ -225,29 +253,41 @@ class Harness:
     def setup(self, layer: str):
         """Build the graph once; returns (graph, edge count, span)."""
         with self.rec.span(layer) as sp:
-            c0 = tree_cpu_s()
+            c0 = self.cpu()
             g, n_edges = self.wl.build(self.spark)
             with self.rec.span("graph.vertices"):
                 g.vertices().count()
-            sp["proc_cpu_s"] = tree_cpu_s() - c0
+            sp["proc_cpu_s"] = self.cpu() - c0
         return g, n_edges, sp
+
+    def collect_heap(self) -> None:
+        """A full collection before each pass: every pass starts on the
+        same empty heap, so a collection an earlier pass made due is not
+        charged to this one."""
+        t = time.perf_counter()
+        self.spark.sparkContext._jvm.java.lang.System.gc()
+        self.idle_s += time.perf_counter() - t
 
     def call(self, op, g):
         """One timed operator call plus its final collect; returns its
         span, or None when it failed."""
         from tcr_kcore_spark.superstep import release_state
 
-        settle()
+        t = time.perf_counter()
+        settle(self.cpu)
+        self.idle_s += time.perf_counter() - t
         signal.alarm(CALL_TIMEOUT_S)
         try:
             with self.rec.span(op.name) as sp:
-                c0 = tree_cpu_s()
+                j0 = jit_cpu_s(self.jvm_pid)
+                c0 = self.cpu()
                 t0 = time.perf_counter()
                 df, stats = op.run(g)
                 t1 = time.perf_counter()
                 rows = df.collect()
                 t2 = time.perf_counter()
-                c2 = tree_cpu_s()
+                c2 = self.cpu()
+                j2 = jit_cpu_s(self.jvm_pid)
         except CallTimeout:
             self.spark.sparkContext.cancelAllJobs()
             self.outcome(f"{op.name}: timed out", False)
@@ -262,6 +302,7 @@ class Harness:
         sp.update(
             wall_s=t2 - t0,
             proc_cpu_s=c2 - c0,
+            jit_cpu_s=j2 - j0,
             final_s=t2 - t1,
             supersteps=stats.supersteps if stats is not None else 0,
             step_s=statistics.median(hist) if hist else 0.0,
@@ -286,10 +327,10 @@ def measure(args, work: str) -> dict:
     os.environ.update(wl.regime)
     c0, t0 = tree_cpu_s(), time.perf_counter()
     spark = start_session(work, f"perfbench-{args.workload}")
-    session_s, session_cpu_s = time.perf_counter() - t0, tree_cpu_s() - c0
+    session_s = time.perf_counter() - t0
     try:
-        jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
         h = Harness(spark, wl, args.workload, bool(args.trace))
+        session_cpu_s = h.cpu() - c0
         builds, g = [], None
         for _ in range(SETUPS):
             if g is not None:
@@ -310,20 +351,24 @@ def measure(args, work: str) -> dict:
         while not passes or (
             time.monotonic() - t_window < args.seconds and time.monotonic() - t_proc < DEADLINE_S
         ):
+            h.collect_heap()
             spans = [h.call(op, g) for op in ops]
             passes.append({op.name: sp for op, sp in zip(ops, spans) if sp is not None})
             log(f"pass {len(passes)}: " + " ".join(
-                f"{k} {sp['wall_s']:.2f}s ({sp['proc_cpu_s']:.2f} CPU-s)" for k, sp in passes[-1].items()))
+                f"{k} {sp['wall_s']:.2f}s ({sp['proc_cpu_s']:.2f} CPU-s, JIT {sp['jit_cpu_s']:.2f})"
+                for k, sp in passes[-1].items()
+            ))
             if None in spans:
                 break  # a failed call leaves no steady state to measure
-        rss = peak_rss_mb(jvm_pid)
+        rss = peak_rss_mb(h.jvm_pid)
         checkpoint_mb = dir_mb(os.path.join(work, "checkpoints"))
         wl.release(g)
     finally:
         stop_spark(spark)
     steal_s = (cpu_steal_jiffies() - steal0) / os.sysconf("SC_CLK_TCK")
     log(
-        f"{time.monotonic() - t_proc:.1f}s in all, {SETUPS} set-ups, {len(passes)} passes, "
+        f"{time.monotonic() - t_proc:.1f}s in all ({h.idle_s:.1f}s idle before calls), {SETUPS} set-ups, "
+        f"{len(passes)} passes, "
         f"{steal_s:.1f} CPU-s stolen by the host"
     )
 
@@ -340,7 +385,6 @@ def measure(args, work: str) -> dict:
         metrics = {
             "setup_s": session_cpu_s + statistics.median(sp["proc_cpu_s"] for sp in builds),
             "analytics_cpu_s": median(sum(sp["proc_cpu_s"] for sp in p.values()) for p in passes),
-            "pagerank_cpu_s": per_pass("proc_cpu_s", "pagerank"),
             "superstep_edges_per_cpu_s": median(e / c for e, c in iterative if c),
             "jvm_peak_rss_mb": rss,
         }
@@ -366,6 +410,7 @@ def measure(args, work: str) -> dict:
             metrics["superstep.checkpoints"] = per_pass("checkpoints", "pagerank")
             metrics["superstep.checkpoint_mb"] = checkpoint_mb
         metrics["analytics.wall_s"] = median(sum(sp["wall_s"] for sp in p.values()) for p in passes)
+        metrics["analytics.jit_cpu_s"] = median(sum(sp["jit_cpu_s"] for sp in p.values()) for p in passes)
         calls_s = sum(sp["wall_s"] for p in passes for sp in p.values())
         metrics["trace.overhead_pct"] = 100.0 * h.rec.overhead_s / calls_s if calls_s else 0.0
         h.rec.dump(os.path.join(WORK, f"spans-{args.workload}-{args.seed}.jsonl"))

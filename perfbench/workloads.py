@@ -115,9 +115,10 @@ class CorpusShuffle:
 
         # Tiny corpora differ widely in size, cycle structure and core depth,
         # and the work of every call follows them.  The seed picks the first
-        # corpus in its own sequence with 145 to 160 edges, one cyclic
-        # component behind two trim levels and a 4-round h-index fixpoint,
-        # so every seed gets a different corpus that costs about the same.
+        # corpus in its own sequence with 148 to 156 edges, a 4- or 5-round
+        # h-index fixpoint and 12 to 14 scc supersteps (one candidate in
+        # about 85), so every seed gets a different corpus that costs about
+        # the same number of supersteps.
         self.checkpoints = os.path.join(work, "checkpoints")
         for self.seed in _seeds(seed):
             self.oracle = oracle.corpus_edges(synth_corpus_pdf(self.size, self.seed))
@@ -127,10 +128,11 @@ class CorpusShuffle:
             raise RuntimeError(f"no corpus of the benchmark's shape for seed {seed}")
 
     def accept(self, g: oracle.Graph) -> bool:
-        if not 145 <= len(g.src) <= 160 or oracle.trim_levels(g) != 2 or oracle.hindex_rounds(g) != 4:
-            return False
-        _, sizes = np.unique(oracle.scc(g), return_counts=True)
-        return (sizes > 1).sum() == 1
+        return (
+            148 <= len(g.src) <= 156
+            and oracle.hindex_rounds(g) in (4, 5)
+            and 12 <= oracle.scc_supersteps(g) <= 14
+        )
 
     def build(self, spark):
         from tcr_kcore_spark import LinkGraph

@@ -191,56 +191,16 @@ class LinkGraph:
         ascending original-id order — the reference's ``vertex_to_index``
         densification (``TCR/src/type/CSRGraph.py:432-441``).
 
-        Implemented shuffle-minimally: a global ``row_number`` window over a
-        single ordering would serialize on one partition, so we compute
-        per-partition counts after a range partition and add driver-side
-        offsets (the distributed zipWithIndex pattern).
+        Numbered JVM-side by ``plans.partitioning.dense_index`` (range
+        partition, in-partition positions, driver-side partition offsets —
+        the distributed zipWithIndex pattern): a global ``row_number``
+        window would serialize on one partition.  The mapping is
+        materialized; free it with ``superstep.release_state``.
         """
-        spark = self.edges.sparkSession
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        # range-partition THEN sort within partitions: mapInPandas sees each
-        # partition as a stream of Arrow batches (~10k rows each), so the
-        # index must be carried ACROSS batches — a per-batch sort + per-batch
-        # range() silently produces duplicate ids beyond one batch/partition.
-        verts = self.vertices().repartitionByRange(nparts, "id").sortWithinPartitions("id")
+        # local import: the plans package imports this module
+        from tcr_kcore_spark.plans.partitioning import dense_index
 
-        def _index_part(pit):
-            start = 0  # running offset across the partition's Arrow batches
-            for pdf in pit:
-                pdf["pos"] = range(start, start + len(pdf))
-                start += len(pdf)
-                yield pdf
-
-        counted = verts.mapInPandas(_index_part, "id long, pos long")
-        counted.persist()  # pin partitioning so spark_partition_id is stable
-        # per-partition offsets via spark_partition_id — small driver collect
-        part_sizes = (
-            counted.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("n"), F.min("id").alias("lo"))
-            .orderBy("lo")
-            .collect()
-        )
-        offsets = {}
-        acc = 0
-        for r in part_sizes:
-            offsets[r["pid"]] = acc
-            acc += r["n"]
-        off_df = counted.sparkSession.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()], "pid int, off long"
-        )
-        out = (
-            counted.withColumn("pid", F.spark_partition_id())
-            .join(F.broadcast(off_df), "pid")
-            .select(F.col("id").alias("orig"), (F.col("pos") + F.col("off")).alias("id"))
-        )
-        # materialize the mapping, then free the pid-pinning cache (round 2
-        # leaked `counted` for the session); callers release the mapping's
-        # own blocks via superstep.release_state when done
-        from tcr_kcore_spark.superstep import truncate_lineage
-
-        out = truncate_lineage(out)
-        counted.unpersist()
-        return out
+        return dense_index(self.vertices().withColumnRenamed("id", "orig"), ["orig"], "id")
 
     def densify(self) -> tuple["LinkGraph", DataFrame]:
         """Rewrite edges onto dense ids; returns (graph, mapping).  The

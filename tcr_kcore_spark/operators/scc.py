@@ -153,6 +153,13 @@ def scc(
     acc: DataFrame | None = None
     n_live = live_v.count()
 
+    def _abort(msg: str, *frames: DataFrame) -> None:
+        """Release every cached frame of the loop, then raise."""
+        for df in (live_v, live_e, acc, *frames):
+            if df is not None:
+                release_state(df)
+        raise RuntimeError(msg)
+
     def _retire(done: DataFrame, acc: DataFrame | None) -> DataFrame:
         if acc is None:
             return done
@@ -210,10 +217,12 @@ def scc(
             # ADVICE r5 (high): retiring f == b vertices computed from
             # UNCONVERGED labels can split an SCC and silently mislabel the
             # remainder as singletons.  Refuse rather than corrupt.
-            raise RuntimeError(
+            _abort(
                 "scc: min-label propagation hit max_inner="
                 f"{max_inner} before converging (outer round "
-                f"{stats.outer_rounds}); raise max_inner"
+                f"{stats.outer_rounds}); raise max_inner",
+                fwd,
+                bwd,
             )
         lab = fwd.select("id", F.col("lab").alias("f")).join(
             bwd.select("id", F.col("lab").alias("b")), "id"
@@ -228,8 +237,8 @@ def scc(
         new_v = truncate_lineage(live_v.join(done, "id", "left_anti"))
         n_new = new_v.count()
         if n_new == n_live:
-            raise RuntimeError("scc made no progress (impossible: min live "
-                               "vertex always satisfies f == b)")
+            _abort("scc made no progress (impossible: min live "
+                   "vertex always satisfies f == b)", done, new_v)
         acc = _retire(done, acc)
         new_e = truncate_lineage(
             live_e.join(new_v.withColumnRenamed("id", "src"), "src", "left_semi")
@@ -239,15 +248,15 @@ def scc(
         release_state(live_v)
         release_state(live_e)
         live_v, live_e, n_live = new_v, new_e, n_new
-    release_state(live_v)
-    release_state(live_e)
     if n_live > 0:
         # ADVICE r5 (low): a silently partial labeling (live vertices absent
         # from the result) is worse than failing loudly.
-        raise RuntimeError(
+        _abort(
             f"scc: max_outer={max_outer} exhausted with {n_live} vertices "
             "unlabeled; raise max_outer"
         )
+    release_state(live_v)
+    release_state(live_e)
     if acc is None:
         acc = graph.edges.sparkSession.createDataFrame([], "id long, scc_id long")
     stats.wall_secs = time.time() - t0

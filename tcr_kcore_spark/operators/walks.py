@@ -42,10 +42,11 @@ def neighbor_index(edges: DataFrame, n_parts: int | None = None) -> DataFrame:
     order — HUB-SAFE.  A ``row_number`` window partitioned by src puts a
     vertex's whole adjacency in one task (a 10^8-degree hub serializes one
     task sorting 10^8 rows); this builds the same numbering with the
-    distributed zipWithIndex pattern instead (the ``file_ids`` boundary-
-    carry layout, sources/ingest.py): range-partition by (src, dst), a
-    vectorized per-partition groupby-cumcount with cross-Arrow-batch
-    carries, then driver-reconstructed offsets for the ≤ #partitions srcs
+    distributed zipWithIndex pattern instead (the range-partition and
+    driver-offset layout of ``plans.partitioning.dense_index``, plus
+    per-src carries): range-partition by (src, dst), a vectorized
+    per-partition groupby-cumcount with cross-Arrow-batch carries, then
+    driver-reconstructed offsets for the ≤ #partitions srcs
     that straddle a partition boundary (range partitioning makes a
     continuing src the FIRST src of every later partition it touches, so
     only (pid, first_src) pairs need a carry).  Driver data is

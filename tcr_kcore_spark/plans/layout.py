@@ -25,12 +25,14 @@ the synth corpus vs ~0.125 scrambled; test_layout.py).  locality_relabel
 is for edge tables that arrive WITHOUT that provenance — pre-built edge
 lists, external id spaces, unions of sources.
 
-Scale notes (100 TB): the renumber is the distributed zipWithIndex pattern
-(range partition on the key, per-partition running offsets, driver collect
-of O(#partitions) counts — never a global single-partition window); the
-edge rewrite is two hash joins against the V-row mapping — one-time cost
-amortized over every subsequent query on the relabeled table, exactly like
-the dense-id build it composes with.
+Scale notes (100 TB): the renumber is ``plans.partitioning.dense_index``,
+the distributed zipWithIndex pattern run JVM-side (range partition on the
+key, in-partition positions from ``monotonically_increasing_id``, a driver
+collect of O(#partitions) counts — never a global single-partition window,
+never a Python worker; only ``align_span``'s first-fit cluster packing
+walks partitions in pandas); the edge rewrite is two hash joins against
+the V-row mapping — one-time cost amortized over every subsequent query on
+the relabeled table, exactly like the dense-id build it composes with.
 """
 
 from __future__ import annotations
@@ -39,7 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import EDGE_COLS, LinkGraph
-from tcr_kcore_spark.superstep import SuperstepStats, truncate_lineage
+from tcr_kcore_spark.plans.partitioning import dense_index
+from tcr_kcore_spark.superstep import SuperstepStats, release_state, truncate_lineage
 
 
 def locality_relabel(
@@ -55,8 +58,10 @@ def locality_relabel(
     the labeling run's telemetry (0 supersteps when ``labels`` is given).
     New ids are dense ``0..V-1`` ordered by ``(label, orig_id)`` — ties
     inside a cluster keep ingest order, so an already-local layout is
-    preserved.  ``labels``: any ``(id, <key>)`` DataFrame; the key column
-    may be numeric or string (e.g. the corpus repo name).  The mapping is
+    preserved — numbered JVM-side by ``plans.partitioning.dense_index``
+    over ``n_parts`` range partitions.  ``labels``: any ``(id, <key>)``
+    DataFrame with one row per vertex; the key column may be numeric or
+    string (e.g. the corpus repo name).  The mapping is
     materialized (lineage-truncated); release with
     ``superstep.release_state(mapping)`` when done.
 
@@ -89,54 +94,15 @@ def locality_relabel(
         labels = labels.select("id", F.col(key_col).alias("lbl"))
 
     nparts = int(n_parts or spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    keyed = labels.repartitionByRange(nparts, "lbl", "id").sortWithinPartitions(
-        "lbl", "id"
-    )
-    lbl_type = keyed.schema["lbl"].dataType.simpleString()
-
-    def _index_part(pit):
-        # running offset ACROSS Arrow batches — a per-batch range() would
-        # hand duplicate positions to every batch past the first
-        start = 0
-        for pdf in pit:
-            pdf = pdf[["id", "lbl"]]
-            pdf["pos"] = range(start, start + len(pdf))
-            start += len(pdf)
-            yield pdf
-
-    counted = keyed.mapInPandas(
-        _index_part, f"id long, lbl {lbl_type}, pos long"
-    ).persist()  # pin partitioning so spark_partition_id is stable
-    part_rows = (
-        counted.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            # min over the (lbl, id) TUPLE — independent per-column mins
-            # would pair one partition's min lbl with another row's id
-            F.min(F.struct("lbl", "id")).alias("lo"),
-        )
-        .collect()
-    )
-    stats.actions += 1
-    acc = 0
-    offsets = []
-    for r in sorted(part_rows, key=lambda r: (r["lo"]["lbl"], r["lo"]["id"])):
-        offsets.append((int(r["pid"]), acc))
-        acc += r["n"]
-    off_df = spark.createDataFrame(offsets, "pid int, off long")
     if align_span is None:
-        mapping = (
-            counted.withColumn("pid", F.spark_partition_id())
-            .join(F.broadcast(off_df), "pid")
-            .select(
-                F.col("id").alias("orig"), (F.col("pos") + F.col("off")).alias("id")
-            )
+        mapping = dense_index(
+            labels.withColumnRenamed("id", "orig"), ["lbl", "orig"], "id", nparts, ["orig"]
         )
-        mapping = truncate_lineage(mapping)
-        counted.unpersist()
     else:
-        mapping = _aligned_mapping(counted, off_df, int(align_span), nparts, stats)
-        counted.unpersist()
+        dense = dense_index(labels, ["lbl", "id"], "gpos", nparts)
+        mapping = _aligned_mapping(dense, int(align_span), nparts, stats)
+        release_state(dense)
+    stats.actions += 1  # dense_index's per-partition count collect
 
     attrs = [c for c in graph.edges.columns if c not in EDGE_COLS]
     e = (
@@ -154,26 +120,19 @@ def locality_relabel(
 
 
 def _aligned_mapping(
-    counted: DataFrame, off_df: DataFrame, span: int, nparts: int, stats: SuperstepStats
+    dense: DataFrame, span: int, nparts: int, stats: SuperstepStats
 ) -> DataFrame:
-    """Bin-packed sparse ids: per-cluster (p0, n) in dense-order, clusters
-    first-fit packed into ``span``-sized bins, new_id = cluster_start +
-    (dense_pos - p0).  All cluster walks are per-partition with driver
-    prefix offsets (same distributed zipWithIndex shape as the dense
-    path); every partition's padded extent is rounded up to a span
-    multiple, so local ``% span`` alignment decisions stay valid under
-    the absolute base."""
-    spark = counted.sparkSession
-    dense = (
-        counted.withColumn("pid", F.spark_partition_id())
-        .join(F.broadcast(off_df), "pid")
-        .select("id", "lbl", (F.col("pos") + F.col("off")).alias("gpos"))
-    )
-    dense = truncate_lineage(dense)
+    """Bin-packed sparse ids from the dense ``(id, lbl, gpos)`` numbering:
+    per-cluster (p0, n) in dense order, clusters first-fit packed into
+    ``span``-sized bins, new_id = cluster_start + (gpos - p0).  The
+    cluster walk is per-partition with driver prefix offsets; every
+    partition's padded extent is rounded up to a span multiple, so local
+    ``% span`` alignment decisions stay valid under the absolute base."""
+    spark = dense.sparkSession
     clusters = dense.groupBy("lbl").agg(
         F.min("gpos").alias("p0"), F.count(F.lit(1)).alias("n")
     )
-    lbl_type = counted.schema["lbl"].dataType.simpleString()
+    lbl_type = dense.schema["lbl"].dataType.simpleString()
     walked_schema = f"lbl {lbl_type}, p0 long, n long, cstart long, fill long"
 
     def _pack(pit):

@@ -9,6 +9,8 @@ and cumulative-degree searchsorted range splits
   axis where cumulative degree mass crosses ``i·E/P`` — so each partition
   of the edge table holds ~equal EDGES even under Zipf-skewed degrees (a
   plain hash partition holds equal *keys*, not equal edges);
+- ``dense_index``: dense row numbers ``0..N-1`` in key order (the
+  distributed zipWithIndex behind every dense-id map), JVM-side;
 - ``salted_sum`` / ``salted_count``: two-level aggregation for aggregations
   whose per-key fan-in is hub-skewed AND whose aggregate is algebraic —
   split each key into ``n_salt`` sub-keys, partially aggregate, then merge.
@@ -27,6 +29,12 @@ import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from tcr_kcore_spark.superstep import truncate_lineage
+
+# monotonically_increasing_id() puts the partition index in the upper 31
+# bits and the row's position within its partition in the lower 33
+_POS_BITS = 33
 
 
 def broadcast_max_rows() -> int:
@@ -69,6 +77,56 @@ def plan_superstep_edges(edges: DataFrame, bcast: bool, npart: int | None = None
     if npart is None:
         npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     return edges.repartition(npart, "dst" if bcast else "src")
+
+
+def dense_index(
+    df: DataFrame,
+    keys: list[str],
+    col: str,
+    n_parts: int | None = None,
+    cols: list[str] | None = None,
+) -> DataFrame:
+    """``df`` plus ``col``: dense row numbers ``0..N-1`` in ascending
+    ``keys`` order — ``row_number() OVER (ORDER BY keys) - 1`` without a
+    global single-partition window and without a Python worker.
+
+    Range-partition on ``keys`` (ascending key ranges go to ascending
+    partition ids) and sort within partitions; the projection right above
+    the sort reads each row's in-partition position from the low 33 bits
+    of ``monotonically_increasing_id`` and its partition from the high
+    bits.  That frame is persisted, one driver collect of per-partition
+    row counts (O(#partitions) rows) gives prefix offsets in partition
+    order, and a broadcast join adds them.
+
+    ``keys`` must be unique over ``df``: ties have no defined order, and a
+    recomputed cache block must sort its rows exactly as before.  Each
+    range partition may hold at most 2^33 rows.  ``cols`` selects the
+    output columns besides ``col`` (default: all of ``df``'s).  The result
+    is materialized (lineage-truncated); free it with
+    ``superstep.release_state``."""
+    spark = df.sparkSession
+    nparts = int(n_parts or spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    out_cols = list(cols or df.columns)
+    counted = (
+        df.repartitionByRange(nparts, *keys)
+        .sortWithinPartitions(*keys)
+        .select(*out_cols, F.monotonically_increasing_id().alias("__mid"))
+        .withColumn("__pid", F.shiftright("__mid", _POS_BITS))
+        .persist()
+    )
+    sizes = counted.groupBy("__pid").count().collect()
+    offsets, acc = [], 0
+    for r in sorted(sizes, key=lambda r: r["__pid"]):
+        offsets.append((r["__pid"], acc))
+        acc += r["count"]
+    off_df = spark.createDataFrame(offsets, "__pid long, __off long")
+    pos = F.col("__mid").bitwiseAND((1 << _POS_BITS) - 1)
+    out = counted.join(F.broadcast(off_df), "__pid").select(
+        *out_cols, (pos + F.col("__off")).alias(col)
+    )
+    out = truncate_lineage(out)
+    counted.unpersist()
+    return out
 
 
 def degree_range_bounds(degrees: DataFrame, n_parts: int, id_col: str = "id", deg_col: str = "degree") -> list[int]:

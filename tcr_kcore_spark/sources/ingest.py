@@ -3,8 +3,8 @@
 Pipeline, all JVM-side (regexp_extract_all / split / explode — no Python in
 the hot path, per the input_hint mandate):
 
-1. fingerprint every row with ``sha2(content, 256)`` — the per-row invariant
-   the north_rule requires us to preserve and verify;
+1. fingerprint every row with ``sha2(content, 256)`` (``file_table``) — the
+   per-row invariant the north_rule requires us to preserve and verify;
 2. extract import statements with one vectorized regex per import kind
    (intra-repo / cross-repo; syntax per ``corpus.py``);
 3. resolve targets against the file table (joins, broadcast when small);
@@ -18,8 +18,10 @@ the hot path, per the input_hint mandate):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from tcr_kcore_spark.plans.partitioning import dense_index
 
 INTRA_RE = r'(?:from|import)\s+"?src[./]m(\d+)'
 CROSS_RE = r'ext[./]([A-Za-z0-9_]+[./]m\d+)'
@@ -30,71 +32,23 @@ def fingerprint(corpus: DataFrame) -> DataFrame:
     return corpus.withColumn("sha256", F.sha2(F.col("content"), 256))
 
 
+def _file_num() -> Column:
+    return F.regexp_extract("path", r"m(\d+)\.", 1).cast("long").alias("file_num")
+
+
 def file_table(corpus: DataFrame) -> DataFrame:
     """(repo, path, lang, file_num, sha256) — one row per file."""
-    return fingerprint(corpus).select(
-        "repo",
-        "path",
-        "lang",
-        F.regexp_extract("path", r"m(\d+)\.", 1).cast("long").alias("file_num"),
-        "sha256",
-    )
+    return fingerprint(corpus).select("repo", "path", "lang", _file_num(), "sha256")
 
 
 def file_ids(files: DataFrame) -> DataFrame:
     """(repo, path, id): dense ids 0..V-1 in (repo, path) order.
 
-    Distributed zipWithIndex: range-partition by the sort key, index within
-    partitions via a vectorized pandas batch, add driver-computed offsets.
-    No global single-partition window — survives 10^12 files.
-    """
-    verts = files.select("repo", "path").distinct()
-    spark = files.sparkSession
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # sortWithinPartitions: mapInPandas streams each partition as ~10k-row
-    # Arrow batches, so ordering and indexing must span batches — the index
-    # carries a running offset (a per-batch sort + range() restarts at 0
-    # every batch and collides ids for partitions holding >1 batch).
-    ranged = verts.repartitionByRange(nparts, "repo", "path").sortWithinPartitions(
-        "repo", "path"
-    )
-
-    def _index(pit):
-        start = 0  # running offset across the partition's Arrow batches
-        for pdf in pit:
-            pdf["pos"] = range(start, start + len(pdf))
-            start += len(pdf)
-            yield pdf
-
-    counted = ranged.mapInPandas(_index, "repo string, path string, pos long").persist()
-    # the partition sort key must be the minimum (repo, path) TUPLE — a
-    # struct min.  Independent min(repo), min(path) aggregates pair the
-    # smallest repo with a path from a DIFFERENT repo whenever a range
-    # partition spans a repo boundary, scrambling the offset order (found
-    # round 4 by the DuckDB corpus oracle; ids were not globally ordered).
-    sizes = (
-        counted.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("n"), F.min(F.struct("repo", "path")).alias("lo"))
-        .collect()
-    )
-    sizes.sort(key=lambda r: (r["lo"]["repo"], r["lo"]["path"]))
-    offsets, acc = [], 0
-    for r in sizes:
-        offsets.append((r["pid"], acc))
-        acc += r["n"]
-    off_df = files.sparkSession.createDataFrame(offsets, "pid int, off long")
-    out = (
-        counted.withColumn("pid", F.spark_partition_id())
-        .join(F.broadcast(off_df), "pid")
-        .select("repo", "path", (F.col("pos") + F.col("off")).alias("id"))
-    )
-    # materialize the id map, then free the pid-pinning cache; callers
-    # release the map's blocks via superstep.release_state when done
-    from tcr_kcore_spark.superstep import truncate_lineage
-
-    out = truncate_lineage(out)
-    counted.unpersist()
-    return out
+    Numbered JVM-side by ``plans.partitioning.dense_index`` (range
+    partition, in-partition positions, driver-side partition offsets) —
+    no global single-partition window, no Python worker.  The result is
+    materialized; free it with ``superstep.release_state``."""
+    return dense_index(files.select("repo", "path").distinct(), ["repo", "path"], "id")
 
 
 def extract_imports(corpus: DataFrame) -> DataFrame:
@@ -137,7 +91,8 @@ def corpus_to_edges(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     (lineage-truncated); free with ``superstep.release_state``."""
     from tcr_kcore_spark.superstep import truncate_lineage
 
-    files = file_table(corpus).persist()
+    # the fingerprint is file_table's public contract; the edges never read it
+    files = corpus.select("repo", "path", _file_num()).persist()
     ids = file_ids(files)  # already materialized by file_ids
 
     imports = extract_imports(corpus)

@@ -31,6 +31,7 @@ import warnings
 from dataclasses import dataclass, field
 from typing import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -201,23 +202,46 @@ class ObservedConvergence:
     all of them fire inside the one chained job and ``take`` reads the
     last (the state the convergence check is about)."""
 
+    # bound on draining the listener bus before declaring a frame unrun
+    _DRAIN_MS = 10_000
+
     def __init__(self) -> None:
         self._pending: list = []
+        self._attached = 0
+        self._sc = None
 
     def attach(self, df: DataFrame, *exprs) -> DataFrame:
         from pyspark.sql import Observation
 
         ob = Observation()
         self._pending.append(ob)
+        self._attached += 1
+        self._sc = df.sparkSession.sparkContext
         return df.observe(ob, *exprs)
 
     def take(self) -> dict | None:
         """Observed row of the most recently attached step (the others,
-        if any, fired in the same job and are discarded)."""
+        if any, fired in the same job and are discarded).  Raises
+        RuntimeError if that step's frame never ran — ``Observation.get``
+        would wait forever."""
         if not self._pending:
             return None
         last = self._pending[-1]
         self._pending.clear()
+        if not last._jo.future().isCompleted():
+            # the observation completes from a query-execution listener, so
+            # it lags the job that ran it; drain the listener bus once
+            # before concluding the frame never ran
+            try:
+                self._sc._jsc.sc().listenerBus().waitUntilEmpty(self._DRAIN_MS)
+            except Py4JJavaError:  # TimeoutException: the check below decides
+                pass
+            if not last._jo.future().isCompleted():
+                raise RuntimeError(
+                    f"ObservedConvergence.take: observed step {self._attached} "
+                    "never ran — materialize the frame returned by attach() "
+                    "before take()"
+                )
         return last.get
 
 

@@ -112,3 +112,16 @@ def test_densify_and_ingest_release_to_baseline(spark):
     release_state(edges)
     release_state(ids)
     assert _persistent_ids(spark) - base == set()
+
+
+def test_scc_error_exit_releases_to_baseline(spark):
+    import pytest
+
+    from tcr_kcore_spark.operators import scc
+
+    # a 30-cycle needs more than 2 min-propagation rounds per direction
+    g = LinkGraph(edges_df(spark, [(i, (i + 1) % 30) for i in range(30)]), directed=True)
+    base = _persistent_ids(spark)
+    with pytest.raises(RuntimeError, match="max_inner=2"):
+        scc(g, max_inner=2)
+    assert _persistent_ids(spark) - base == set()

@@ -67,21 +67,11 @@ def hits(
             df.unpersist()
         held.clear()
 
-    # A/B switch for the bench evidence only (SPARK_GRAFT_HITS_HOLD=0
-    # reproduces the round-2 immediate-unpersist behavior; default holds)
-    import os as _os
-
-    hold = _os.environ.get("SPARK_GRAFT_HITS_HOLD", "1") != "0"
-
     def _l2_normalize(df: DataFrame, col: str) -> DataFrame:
         df = df.persist()
-        if hold:
-            held.append(df)
+        held.append(df)
         norm = df.agg(F.sqrt(F.sum(F.col(col) * F.col(col)))).first()[0] or 1.0
-        out = df.withColumn(col, F.col(col) / F.lit(norm))
-        if not hold:
-            df.unpersist()
-        return out
+        return df.withColumn(col, F.col(col) / F.lit(norm))
 
     def step(state: DataFrame, i: int) -> DataFrame:
         # caches from step i-1: safe to drop — state is already a

@@ -395,11 +395,7 @@ def kcore_hindex_rounds(
                 "id", "est"
             )
             k += 1
-            if (
-                k < truncate_every
-                and i + k < rounds
-                and os.environ.get("SPARK_GRAFT_CHAIN_CACHE", "1") != "0"
-            ):
+            if k < truncate_every and i + k < rounds:
                 # cache intermediate chained states so the next round's
                 # multiple reads don't re-evaluate the h-window subtree
                 # (see run_supersteps for the rationale)

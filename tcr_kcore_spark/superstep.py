@@ -268,8 +268,8 @@ class SuperstepStats:
     # measured in-block edge fraction of the blocked layout (cascade mode
     # only; -1.0 = not measured) — the prior that seeds the round type
     local_edge_frac: float = -1.0
-    # scc: forward-backward coloring outer rounds (each runs two inner
-    # min-propagation fixpoints; supersteps counts the inner rounds)
+    # scc: forward-backward coloring outer rounds (each runs one joint
+    # fixpoint; supersteps counts trim levels + each direction's rounds)
     outer_rounds: int = 0
 
     @property
@@ -296,12 +296,14 @@ def _write_checkpoint(
     state.write.mode("overwrite").parquet(path)
     spark = state.sparkSession
     reread = spark.read.parquet(path)
+    # one grouped query gives both the per-partition and the total rows
+    partitions = _partition_metrics(reread)
     manifest = {
         "name": name,
         "step": step,
-        "rows": reread.count(),
+        "rows": sum(p["rows"] for p in partitions),
         "schema": reread.schema.simpleString(),
-        "partitions": _partition_metrics(reread),
+        "partitions": partitions,
         "input_fingerprint": fingerprint,
         "wall_time": time.time(),
         "path": path,
@@ -387,11 +389,7 @@ def run_supersteps(
         while k < truncate_every and i + k < max_iter:
             lazy = step_fn(lazy, i + k)
             k += 1
-            if (
-                k < truncate_every
-                and i + k < max_iter
-                and os.environ.get("SPARK_GRAFT_CHAIN_CACHE", "1") != "0"
-            ):
+            if k < truncate_every and i + k < max_iter:
                 # Intermediate chained state: the NEXT step's plan consumes
                 # it several times (message join, apply join, changed-set
                 # pruning), and without a cache the whole subtree — window

@@ -157,3 +157,31 @@ def test_scc_unconverged_inner_raises(spark):
     g = LinkGraph.from_edges(edges_df(spark, edges))
     with pytest.raises(RuntimeError, match="max_inner"):
         scc(g, max_inner=2)
+
+
+def test_scc_job_budget_shuffle_regime(spark, monkeypatch):
+    """Noise-free fixed-cost evidence: the Spark jobs one ``scc`` call
+    issues on a directed 30-cycle with a 5-vertex DAG tail, shuffle regime
+    (8 cores, 8 shuffle partitions, the test session).  Two sequential
+    min-propagation fixpoints per round, each with its own change-count
+    job, and per-level retirement frames measured 560-562 jobs; the joint
+    (id, dir) fixpoint with observed counts measured 325-329.  Round
+    structure is unchanged: 6 trim levels plus 5 forward and 30 backward
+    rounds (41 supersteps) in one outer round."""
+    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_MAX_ROWS", "0")
+    edges = [(i, (i + 1) % 30) for i in range(30)]
+    edges += [(29, 30), (30, 31), (31, 32), (32, 33), (33, 34)]
+    g = LinkGraph(edges_df(spark, edges), directed=True)
+    sc = spark.sparkContext
+    sc.setJobGroup("scc_job_budget", "scc job budget")
+    try:
+        out, stats = scc(g)
+        jobs = len(sc.statusTracker().getJobIdsForGroup("scc_job_budget"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = {r["id"]: r["scc_id"] for r in out.collect()}
+    assert got == {**{v: 0 for v in range(30)}, **{v: v for v in range(30, 35)}}
+    assert (stats.supersteps, stats.outer_rounds) == (41, 1)
+    assert jobs <= 450, jobs
+    # one wall time per trim level and per joint coloring round
+    assert len(stats.history) == 6 + 30

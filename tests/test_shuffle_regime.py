@@ -29,10 +29,12 @@ from tcr_kcore_spark.operators import (
     kcore,
     label_propagation,
     pagerank,
+    scc,
     sssp,
 )
 
 from tests.conftest import edges_df
+from tests.test_scc import tarjan_scc_ids
 
 
 @pytest.fixture()
@@ -120,3 +122,30 @@ def test_planted_hub_kcore_lpa(spark):
     assert all(got[i] == 1 for i in range(10, 20))
     lp, _ = label_propagation(g, rounds=2)
     assert lp.count() == n + 4
+
+
+def test_shuffle_regime_scc_matches_broadcast(spark, force_shuffle_regime):
+    """scc's joint (id, dir) fixpoint in both regimes: equal labels and
+    equal round structure on a graph with self-loops, multi-edges, a DAG
+    tail, two nontrivial SCCs, ids past int32 and one id near 2^62 (the
+    direction is a key column, never packed into the id)."""
+    b, h = 2**31, 2**62 - 3
+    edges = [
+        (b, b + 1), (b, b + 1), (b + 1, b + 2), (b + 2, b), (b + 1, b + 1),
+        (b + 2, b + 5), (b + 5, b + 6), (b + 6, h), (h, b + 5), (h, h),
+        (7, b), (b + 6, 10), (10, 11), (11, 12), (11, 13), (12, 13), (12, 12),
+    ]
+    verts = {v for e in edges for v in e}
+    expect = tarjan_scc_ids(edges, verts)
+    assert {expect[b + 1], expect[h]} == {b, b + 5}
+
+    def run():
+        out, st = scc(LinkGraph(edges_df(spark, edges), directed=True))
+        return {r["id"]: r["scc_id"] for r in out.collect()}, st
+
+    got, st = run()
+    del os.environ["SPARK_GRAFT_BROADCAST_MAX_ROWS"]
+    got2, st2 = run()
+    os.environ["SPARK_GRAFT_BROADCAST_MAX_ROWS"] = "0"  # fixture teardown
+    assert got == got2 == expect
+    assert (st.supersteps, st.outer_rounds) == (st2.supersteps, st2.outer_rounds)

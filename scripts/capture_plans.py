@@ -1,11 +1,13 @@
-"""Capture .explain("formatted") for the query paths touched in r06.
+"""Capture .explain("formatted") for the engine's query paths.
 
 Usage: python scripts/capture_plans.py before|after [unit ...]
 
 Writes plans/r06/<unit>_<suffix>.txt.  For iterative operators the
 returned frame is a truncated (bare-scan) frame, so the meaningful plan
-is ONE superstep's lazy plan — captured by building the step function's
-output against the same cached inputs the operator uses.
+is ONE superstep's lazy plan — captured by running the operator for one
+superstep with truncate_lineage hooked.  To compare two commits, run the
+same script in a checkout of each and diff the files with the ``#<n>``
+expression ids stripped.
 """
 
 from __future__ import annotations
@@ -50,21 +52,13 @@ def plan_vertices(spark):
 
 
 def plan_kcore_hindex_round(spark):
-    from pyspark.sql import functions as F
-
-    from tcr_kcore_spark.operators.kcore import _HUB_WINDOW_MAX_DEG, _hindex_round
-    from tcr_kcore_spark.plans.partitioning import plan_superstep_edges
+    """The distributed h-index step (the local finish is off)."""
+    from tcr_kcore_spark.operators import kcore
 
     g = _graph(spark)
-    edges = plan_superstep_edges(g.edges.select("src", "dst"), True).persist()
-    edges.count()
-    degrees = g.degrees()
-    est = degrees.select("id", F.col("degree").cast("long").alias("est"))
-    from tcr_kcore_spark.superstep import truncate_lineage
-
-    est = truncate_lineage(est)
-    out = _hindex_round(edges, est, None, True, False)
-    return _explain_str(out)
+    return _capture_operator_step(
+        spark, lambda: kcore(g, local_finish_vertices=0, max_iter=1)
+    )
 
 
 def plan_kcore_exact(spark):
@@ -80,35 +74,11 @@ def plan_kcore_exact(spark):
     )
 
 
-def plan_pagerank_step_operator(spark):
-    """One superstep's plan as the OPERATOR currently builds it (uses the
-    module's step closure via a 1-iteration probe with explain hook)."""
-    import importlib
-
-    pr_mod = importlib.import_module("tcr_kcore_spark.operators.pagerank")
-
-    g = _graph(spark)
-    plans = []
-    import tcr_kcore_spark.superstep as ss
-
-    orig = ss.truncate_lineage
-
-    def capture(df):
-        plans.append(_explain_str(df))
-        return orig(df)
-
-    ss.truncate_lineage = capture
-    try:
-        pr_mod.pagerank(g, tol=-1.0, max_iter=1)
-    finally:
-        ss.truncate_lineage = orig
-    # plans[0] = init truncation, plans[1] = first step's full lazy plan
-    return plans[-1]
-
-
 def _capture_operator_step(spark, run):
-    """Generic: hook truncate_lineage, run `run`, return last captured
-    step plan (plans[0] is the init truncation)."""
+    """One superstep's plan as the OPERATOR builds it: hook
+    truncate_lineage, run the 1-step call `run`, return the last captured
+    plan (the step's; an operator that truncates its init state captures
+    that first)."""
     import tcr_kcore_spark.superstep as ss
 
     plans = []
@@ -124,6 +94,25 @@ def _capture_operator_step(spark, run):
     finally:
         ss.truncate_lineage = orig
     return plans[-1]
+
+
+def plan_pagerank_step(spark):
+    from tcr_kcore_spark.operators import pagerank
+
+    g = _graph(spark)
+    return _capture_operator_step(spark, lambda: pagerank(g, tol=-1.0, max_iter=1))
+
+
+def plan_personalized_pagerank_step(spark):
+    from pyspark.sql import functions as F
+
+    from tcr_kcore_spark.operators import personalized_pagerank
+
+    g = _graph(spark)
+    src = int(g.edges.agg(F.min("src")).first()[0])
+    return _capture_operator_step(
+        spark, lambda: personalized_pagerank(g, seeds=[src], max_iter=1)
+    )
 
 
 def plan_components_step(spark):
@@ -143,6 +132,32 @@ def plan_bfs_step(spark):
     g = _graph(spark)
     src = int(g.edges.agg(F.min("src")).first()[0])
     return _capture_operator_step(spark, lambda: bfs(g, source=src, max_iter=1))
+
+
+def plan_sssp_step(spark):
+    from pyspark.sql import functions as F
+
+    from tcr_kcore_spark.operators import sssp
+
+    g = _graph(spark)
+    src = int(g.edges.agg(F.min("src")).first()[0])
+    return _capture_operator_step(spark, lambda: sssp(g, source=src, max_iter=1))
+
+
+def plan_hits_step(spark):
+    from tcr_kcore_spark.graph import LinkGraph
+    from tcr_kcore_spark.operators import hits
+
+    g = _graph(spark)
+    d = LinkGraph(g.edges, directed=True)
+    return _capture_operator_step(spark, lambda: hits(d, max_iter=1, tol=-1.0))
+
+
+def plan_louvain_phase1_round(spark):
+    from tcr_kcore_spark.operators import louvain_phase1
+
+    g = _graph(spark)
+    return _capture_operator_step(spark, lambda: louvain_phase1(g, max_rounds=1))
 
 
 def plan_lpa_round(spark):
@@ -225,53 +240,21 @@ def plan_ktruss_support(spark):
     return _explain_str(edge_support(cur))
 
 
-def plan_scc_minprop_round(spark):
-    from pyspark.sql import functions as F
-
-    from tcr_kcore_spark.superstep import truncate_lineage
-
-    # directed corpus-style graph: order->part edges
-    from tcr_kcore_spark.sources.relational import order_part_edges
-
-    e = truncate_lineage(order_part_edges(spark, SF_DIR).limit(200000))
-    verts = truncate_lineage(
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    state = truncate_lineage(
-        verts.select("id", F.col("id").alias("lab"), F.lit(True).alias("chg"))
-    )
-    frontier = state.where("chg").select(F.col("id").alias("src"), "lab")
-    msgs = (
-        e.join(frontier, "src")
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.min("lab").alias("m"))
-    )
-    new = (
-        state.join(msgs, "id", "left")
-        .select(
-            "id",
-            F.least(F.col("lab"), F.coalesce(F.col("m"), F.col("lab"))).alias("nl"),
-            "lab",
-        )
-        .select("id", F.col("nl").alias("lab"), (F.col("nl") < F.col("lab")).alias("chg"))
-    )
-    return _explain_str(new)
-
-
 UNITS = {
     "edges_cooccur": plan_edges_cooccur,
     "vertices": plan_vertices,
     "kcore_hindex_round": plan_kcore_hindex_round,
     "kcore_exact": plan_kcore_exact,
-    "pagerank_step": plan_pagerank_step_operator,
+    "pagerank_step": plan_pagerank_step,
+    "personalized_pagerank_step": plan_personalized_pagerank_step,
     "components_step": plan_components_step,
     "bfs_step": plan_bfs_step,
+    "sssp_step": plan_sssp_step,
     "lpa_round": plan_lpa_round,
+    "hits_step": plan_hits_step,
+    "louvain_phase1_round": plan_louvain_phase1_round,
     "triangles": plan_triangles,
     "ktruss_support": plan_ktruss_support,
-    "scc_minprop_round": plan_scc_minprop_round,
 }
 
 

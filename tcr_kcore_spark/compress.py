@@ -53,16 +53,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
-from tcr_kcore_spark.plans.partitioning import (
-    broadcast_max_rows,
-    plan_superstep_edges,
-    state_side,
-)
-from tcr_kcore_spark.superstep import (
-    SuperstepStats,
-    propagate_release,
-    run_supersteps,
-)
+from tcr_kcore_spark.plans.partitioning import broadcast_max_rows, state_side
+from tcr_kcore_spark.superstep import SuperstepStats, vertex_program
 
 
 @dataclass
@@ -158,58 +150,48 @@ def pagerank_factored(
     per-superstep exchange is the V-row state meeting the cached tables,
     never the tables themselves).  The per-set sums (≤ one row per shared
     set) broadcast to the members fan-out when they fit."""
-    verts = cg.verts.persist()
-    n = verts.count()
-    bcast = n <= broadcast_max_rows()
     w = cg.out_deg.select(
         F.col("id").alias("src"), (F.lit(damping) / F.col("out_deg")).alias("w")
     )
-    direct_w = plan_superstep_edges(cg.direct.join(w, "src"), bcast).persist()
-    owners_w = cg.owners.join(w, "src")
-    # broadcast regime: the state join is map-side, so a (vh1, vh2)
-    # partitioning survives it and the per-set groupBy needs no exchange;
-    # shuffle regime: partition by src so the state exchange meets it.
-    owners_w = (
-        owners_w.repartition("vh1", "vh2") if bcast else owners_w.repartition("src")
-    ).persist()
-    n_sets = owners_w.select("vh1", "vh2").distinct().count()
-    direct_w.count()
-    sets_bcast = n_sets <= broadcast_max_rows()
-
-    init = verts.select("id", F.lit(1.0).alias("rank"))
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        s = state_side(state.withColumnRenamed("id", "src"), bcast)
-        m_direct = direct_w.join(s, "src").select(
-            F.col("dst").alias("id"), (F.col("w") * F.col("rank")).alias("c")
+    with vertex_program(cg.verts, cg.direct.join(w, "src")) as vp:
+        owners_w = cg.owners.join(w, "src")
+        # broadcast regime: the state join is map-side, so a (vh1, vh2)
+        # partitioning survives it and the per-set groupBy needs no exchange;
+        # shuffle regime: partition by src so the state exchange meets it.
+        owners_w = vp.keep(
+            owners_w.repartition("vh1", "vh2") if vp.bcast else owners_w.repartition("src")
         )
-        # set-node accumulation (the reference's rule-node rank pass):
-        # sum the owners' contributions once per set, fan out to members
-        v_in = (
-            owners_w.join(s, "src")
-            .groupBy("vh1", "vh2")
-            .agg(F.sum(F.col("w") * F.col("rank")).alias("c"))
-        )
-        m_set = cg.members.join(
-            F.broadcast(v_in) if sets_bcast else v_in, ["vh1", "vh2"]
-        ).select(F.col("dst").alias("id"), "c")
-        msgs = m_direct.unionByName(m_set).groupBy("id").agg(F.sum("c").alias("msg"))
-        msgs_b = F.broadcast(msgs) if bcast else msgs
-        return verts.join(msgs_b, "id", "left").select(
-            "id",
-            (F.lit(1.0 - damping) + F.coalesce(F.col("msg"), F.lit(0.0))).alias("rank"),
-        )
+        n_sets = owners_w.select("vh1", "vh2").distinct().count()
+        vp.edges.count()
+        sets_bcast = n_sets <= broadcast_max_rows()
 
-    state, stats = run_supersteps(
-        init,
-        step,
-        None,
-        max_iter=iters,
-        name="pagerank_factored",
-        truncate_every=truncate_every,
-    )
-    out = propagate_release(state.select("id", "rank"), state)
-    verts.unpersist()
-    direct_w.unpersist()
-    owners_w.unpersist()
-    return out, stats
+        def step(state: DataFrame, i: int) -> DataFrame:
+            s = state_side(state.withColumnRenamed("id", "src"), vp.bcast)
+            m_direct = vp.edges.join(s, "src").select(
+                F.col("dst").alias("id"), (F.col("w") * F.col("rank")).alias("c")
+            )
+            # set-node accumulation (the reference's rule-node rank pass):
+            # sum the owners' contributions once per set, fan out to members
+            v_in = (
+                owners_w.join(s, "src")
+                .groupBy("vh1", "vh2")
+                .agg(F.sum(F.col("w") * F.col("rank")).alias("c"))
+            )
+            m_set = cg.members.join(
+                F.broadcast(v_in) if sets_bcast else v_in, ["vh1", "vh2"]
+            ).select(F.col("dst").alias("id"), "c")
+            msgs = m_direct.unionByName(m_set).groupBy("id").agg(F.sum("c").alias("msg"))
+            msgs_b = F.broadcast(msgs) if vp.bcast else msgs
+            return vp.verts.join(msgs_b, "id", "left").select(
+                "id",
+                (F.lit(1.0 - damping) + F.coalesce(F.col("msg"), F.lit(0.0))).alias("rank"),
+            )
+
+        return vp.run(
+            vp.verts.select("id", F.lit(1.0).alias("rank")),
+            step,
+            result=("id", "rank"),
+            max_iter=iters,
+            name="pagerank_factored",
+            truncate_every=truncate_every,
+        )

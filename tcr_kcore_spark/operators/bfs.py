@@ -17,17 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
-from tcr_kcore_spark.plans.partitioning import (
-    broadcast_max_rows,
-    plan_superstep_edges,
-    state_side,
-)
-from tcr_kcore_spark.superstep import (
-    ObservedConvergence,
-    SuperstepStats,
-    propagate_release,
-    run_supersteps,
-)
+from tcr_kcore_spark.plans.partitioning import state_side
+from tcr_kcore_spark.superstep import SuperstepStats, vertex_program
 
 
 def bfs(
@@ -45,67 +36,48 @@ def bfs(
     g = graph if (directed is None or directed == graph.directed) else (
         graph.undirected_view() if not directed else graph
     )
-    # one distinct scan for the vertex set (persisted: bcast decision +
-    # init); edge cache materializes inside superstep 1 (no eager count)
-    verts = g.vertices().persist()
-    bcast = verts.count() <= broadcast_max_rows()
-    edges = plan_superstep_edges(g.edges.select("src", "dst"), bcast).persist()
+    with vertex_program(g.vertices(), g.edges.select("src", "dst")) as vp:
 
-    # state: (id, dist, frontier) — frontier = reached exactly last step
-    init = verts.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0)).cast("long").alias("dist"),
-        (F.col("id") == source).alias("frontier"),
-    )
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        frontier = state.where("frontier").select(F.col("id").alias("src"))
-        frontier = state_side(frontier, bcast)
-        reached = (
-            edges.join(frontier, "src", "left_semi")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .withColumn("hit", F.lit(True))
-        )
-        out = (
-            state.join(F.broadcast(reached) if bcast else reached, "id", "left")
-            .select(
-                "id",
-                F.coalesce(
-                    F.col("dist"),
-                    F.when(F.col("hit"), F.lit(i + 1).cast("long")),
-                ).alias("new_dist"),
-                "dist",
+        def step(state: DataFrame, i: int) -> DataFrame:
+            frontier = state.where("frontier").select(F.col("id").alias("src"))
+            reached = (
+                vp.edges.join(state_side(frontier, vp.bcast), "src", "left_semi")
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .withColumn("hit", F.lit(True))
             )
-            .select(
-                "id",
-                F.col("new_dist").alias("dist"),
-                (F.col("new_dist").isNotNull() & F.col("dist").isNull()).alias("frontier"),
+            return (
+                state.join(F.broadcast(reached) if vp.bcast else reached, "id", "left")
+                .select(
+                    "id",
+                    F.coalesce(
+                        F.col("dist"),
+                        F.when(F.col("hit"), F.lit(i + 1).cast("long")),
+                    ).alias("new_dist"),
+                    "dist",
+                )
+                .select(
+                    "id",
+                    F.col("new_dist").alias("dist"),
+                    (F.col("new_dist").isNotNull() & F.col("dist").isNull()).alias(
+                        "frontier"
+                    ),
+                )
             )
+
+        # state: (id, dist, frontier) — frontier = reached exactly last step
+        return vp.run(
+            vp.verts.select(
+                "id",
+                F.when(F.col("id") == source, F.lit(0)).cast("long").alias("dist"),
+                (F.col("id") == source).alias("frontier"),
+            ),
+            step,
+            halt=(F.sum(F.col("frontier").cast("long")).alias("n"), lambda row: not row["n"]),
+            result=("id", F.col("dist").alias("distance")),
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            name="bfs",
+            resume=resume,
         )
-        # frontier size collected during the materialization job (r6)
-        return oc.attach(out, F.sum(F.col("frontier").cast("long")).alias("n"))
-
-    oc = ObservedConvergence()
-
-    def converged(prev: DataFrame, new: DataFrame, i: int) -> bool:
-        row = oc.take()
-        if row is not None:
-            return (row["n"] or 0) == 0
-        return new.where("frontier").limit(1).count() == 0
-
-    state, stats = run_supersteps(
-        init,
-        step,
-        converged,
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        name="bfs",
-        resume=resume,
-        truncate_init=False,  # init projects the persisted vertex set
-    )
-    out = propagate_release(state.select("id", F.col("dist").alias("distance")), state)
-    edges.unpersist()
-    verts.unpersist()
-    return out, stats

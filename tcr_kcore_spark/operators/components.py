@@ -24,16 +24,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
-from tcr_kcore_spark.plans.partitioning import (
-    broadcast_max_rows,
-    plan_superstep_edges,
-    state_side,
-)
+from tcr_kcore_spark.plans.partitioning import state_side
 from tcr_kcore_spark.superstep import (
-    ObservedConvergence,
     SuperstepStats,
     propagate_release,
     run_supersteps,
+    vertex_program,
 )
 
 
@@ -61,68 +57,48 @@ def _hashmin(
     checkpoint_every: int,
     resume: bool,
 ) -> tuple[DataFrame, SuperstepStats]:
-    # persist the vertex set: it feeds both the bcast decision and the init
-    # state (one distinct scan over E instead of two); the edge cache
-    # materializes inside superstep 1 rather than via an eager pre-count
-    verts = g.vertices().persist()
-    bcast = verts.count() <= broadcast_max_rows()
-    edges = plan_superstep_edges(g.edges.select("src", "dst"), bcast).persist()
-    # state: (id, component, changed) — changed doubles as the frontier mask
-    init = verts.select("id", F.col("id").alias("component"), F.lit(True).alias("changed"))
+    with vertex_program(g.vertices(), g.edges.select("src", "dst")) as vp:
 
-    def step(state: DataFrame, i: int) -> DataFrame:
-        frontier = state.where("changed").select(
-            F.col("id").alias("src"), "component"
-        )
-        frontier = state_side(frontier, bcast)
-        msgs = (
-            edges.join(frontier, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("component").alias("msg"))
-        )
-        msgs_b = F.broadcast(msgs) if bcast else msgs
-        out = (
-            state.join(msgs_b, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("component"), F.coalesce(F.col("msg"), F.col("component"))).alias(
-                    "new_component"
-                ),
-                "component",
+        def step(state: DataFrame, i: int) -> DataFrame:
+            frontier = state.where("changed").select(
+                F.col("id").alias("src"), "component"
             )
-            .select(
-                "id",
-                F.col("new_component").alias("component"),
-                (F.col("new_component") < F.col("component")).alias("changed"),
+            msgs = (
+                vp.edges.join(state_side(frontier, vp.bcast), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("component").alias("msg"))
             )
+            msgs_b = F.broadcast(msgs) if vp.bcast else msgs
+            return (
+                state.join(msgs_b, "id", "left")
+                .select(
+                    "id",
+                    F.least(
+                        F.col("component"), F.coalesce(F.col("msg"), F.col("component"))
+                    ).alias("new_component"),
+                    "component",
+                )
+                .select(
+                    "id",
+                    F.col("new_component").alias("component"),
+                    (F.col("new_component") < F.col("component")).alias("changed"),
+                )
+            )
+
+        # state: (id, component, changed) — changed doubles as the frontier mask
+        return vp.run(
+            vp.verts.select(
+                "id", F.col("id").alias("component"), F.lit(True).alias("changed")
+            ),
+            step,
+            halt=(F.sum(F.col("changed").cast("long")).alias("n"), lambda row: not row["n"]),
+            result=("id", "component"),
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            name="cc_hashmin",
+            resume=resume,
         )
-        # changed-count collected during the materialization job (r6) —
-        # no separate per-round count action
-        return oc.attach(out, F.sum(F.col("changed").cast("long")).alias("n"))
-
-    oc = ObservedConvergence()
-
-    def converged(prev: DataFrame, new: DataFrame, i: int) -> bool:
-        row = oc.take()
-        if row is not None:
-            return (row["n"] or 0) == 0
-        return new.where("changed").limit(1).count() == 0
-
-    state, stats = run_supersteps(
-        init,
-        step,
-        converged,
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        name="cc_hashmin",
-        resume=resume,
-        truncate_init=False,  # init projects the persisted vertex set
-    )
-    out = propagate_release(state.select("id", "component"), state)
-    edges.unpersist()
-    verts.unpersist()
-    return out, stats
 
 
 def _alternating_star(

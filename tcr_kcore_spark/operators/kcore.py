@@ -40,19 +40,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
-from tcr_kcore_spark.plans.partitioning import (
-    broadcast_max_rows,
-    plan_superstep_edges,
-    state_side,
-)
+from tcr_kcore_spark.plans.partitioning import state_side
 from tcr_kcore_spark.superstep import (
     checkpoint_block,
-    ObservedConvergence,
-    propagate_release,
     SuperstepStats,
     release_state,
-    run_supersteps,
     truncate_lineage,
+    vertex_program,
 )
 
 
@@ -315,56 +309,45 @@ def _hindex(
         stats.wall_secs = time.time() - t0
         return out, stats
 
-    bcast = n_verts <= broadcast_max_rows()
-    # partitioned once for the whole loop (dst under broadcast — zero
-    # per-round exchanges; src under shuffle — only V-row state exchanges)
-    edges = plan_superstep_edges(g.edges.select("src", "dst"), bcast).persist()
-    init = degrees.select(
-        "id", F.col("degree").cast("long").alias("est"), F.lit(True).alias("changed")
-    )
-
     # Delta-pruning pays only once the changed set is small: the targets
     # computation costs an extra edge scan + distinct + broadcast per
     # round, and in early rounds (most estimates still dropping) the
-    # pruned recompute set is ~everything anyway.  The convergence
-    # check's count (free — it ran as limit(1) before) feeds the skip:
-    # prune only when < _PRUNE_MAX_CHANGED_FRAC of vertices changed last
-    # round (threshold rationale + measured changed-fraction trajectory
-    # at the constant's definition above).
+    # pruned recompute set is ~everything anyway.  The observed changed
+    # count feeds the skip: prune only when < _PRUNE_MAX_CHANGED_FRAC of
+    # vertices changed last round (threshold rationale + measured
+    # changed-fraction trajectory at the constant's definition above).
     last_changed = {"n": None}
-    oc = ObservedConvergence()
 
-    def step(state: DataFrame, i: int) -> DataFrame:
-        n = last_changed["n"]
-        prune = i > 0 and n is not None and n < _PRUNE_MAX_CHANGED_FRAC * n_verts
-        changed = state.where("changed").select("id") if prune else None
-        out = _hindex_round(
-            edges, state.select("id", "est"), changed, bcast, hub_safe
+    def halted(row) -> bool:
+        last_changed["n"] = row["n"] or 0
+        return last_changed["n"] == 0
+
+    # the degree table is the vertex frame: V is known from the planning
+    # aggregate, and init projects the cached degrees (no truncation job)
+    with vertex_program(degrees, g.edges.select("src", "dst"), n=n_verts) as vp:
+
+        def step(state: DataFrame, i: int) -> DataFrame:
+            n = last_changed["n"]
+            prune = i > 0 and n is not None and n < _PRUNE_MAX_CHANGED_FRAC * n_verts
+            changed = state.where("changed").select("id") if prune else None
+            return _hindex_round(
+                vp.edges, state.select("id", "est"), changed, vp.bcast, hub_safe
+            )
+
+        return vp.run(
+            vp.verts.select(
+                "id", F.col("degree").cast("long").alias("est"), F.lit(True).alias("changed")
+            ),
+            step,
+            halt=(F.sum(F.col("changed").cast("long")).alias("n"), halted),
+            result=("id", F.col("est").alias("coreness")),
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            name="kcore_hindex",
+            resume=resume,
+            truncate_every=truncate_every,
         )
-        # changed-count collected during the materialization job (r6) —
-        # it feeds both convergence and the delta-pruning decision
-        return oc.attach(out, F.sum(F.col("changed").cast("long")).alias("n"))
-
-    def converged(prev: DataFrame, new: DataFrame, i: int) -> bool:
-        row = oc.take()
-        n = (row["n"] or 0) if row is not None else new.where("changed").count()
-        last_changed["n"] = n
-        return n == 0
-
-    state, stats = run_supersteps(
-        init,
-        step,
-        converged,
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        name="kcore_hindex",
-        resume=resume,
-        truncate_every=truncate_every,
-    )
-    out = propagate_release(state.select("id", F.col("est").alias("coreness")), state)
-    edges.unpersist()
-    return out, stats
 
 
 def kcore_hindex_rounds(
@@ -381,34 +364,18 @@ def kcore_hindex_rounds(
     prow = degrees.agg(
         F.count(F.lit(1)).alias("v"), F.max("degree").alias("mx")
     ).first()
-    bcast = prow["v"] <= broadcast_max_rows()
-    edges = plan_superstep_edges(g.edges.select("src", "dst"), bcast).persist()
     hub_safe = (prow["mx"] or 0) > _HUB_WINDOW_MAX_DEG
-    est = degrees.select("id", F.col("degree").cast("long").alias("est"))
-    i = 0
-    while i < rounds:
-        lazy = est
-        k = 0
-        held = []
-        while k < truncate_every and i + k < rounds:
-            lazy = _hindex_round(edges, lazy, bcast=bcast, hub_safe=hub_safe).select(
-                "id", "est"
-            )
-            k += 1
-            if k < truncate_every and i + k < rounds:
-                # cache intermediate chained states so the next round's
-                # multiple reads don't re-evaluate the h-window subtree
-                # (see run_supersteps for the rationale)
-                lazy = lazy.persist()
-                held.append(lazy)
-        new_est = truncate_lineage(lazy)
-        for h in held:
-            h.unpersist()
-        release_state(est)
-        est = new_est
-        i += k
-    out = propagate_release(est.select("id", F.col("est").alias("coreness")), est)
-    edges.unpersist()
+    with vertex_program(degrees, g.edges.select("src", "dst"), n=prow["v"]) as vp:
+        out, _ = vp.run(
+            vp.verts.select("id", F.col("degree").cast("long").alias("est")),
+            lambda est, i: _hindex_round(
+                vp.edges, est, bcast=vp.bcast, hub_safe=hub_safe
+            ).select("id", "est"),
+            result=("id", F.col("est").alias("coreness")),
+            max_iter=rounds,
+            name="kcore_hindex_rounds",
+            truncate_every=truncate_every,
+        )
     return out
 
 

@@ -45,17 +45,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
-from tcr_kcore_spark.plans.partitioning import (
-    broadcast_max_rows,
-    plan_superstep_edges,
-    state_side,
-)
+from tcr_kcore_spark.plans.partitioning import state_side
 from tcr_kcore_spark.superstep import (
     propagate_release,
     SuperstepStats,
     release_state,
-    run_supersteps,
     truncate_lineage,
+    vertex_program,
 )
 
 GAIN_THRESHOLD = 0.012  # reference MODULARITY_UPDATE_THRESHOLD, Louvain.py:33
@@ -113,96 +109,84 @@ def louvain_phase1(
         e = g.edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
     else:
         e = g.edges.select("src", "dst", F.lit(1.0).alias("w"))
-    # persist the vertex set (bcast decision + init — one distinct scan);
     # no eager edge count: the m aggregation right below materializes the
     # edge cache as its first consumer
-    verts = g.vertices().persist()
-    bcast = verts.count() <= broadcast_max_rows()
-    maybe_b = lambda df: state_side(df, bcast)
-    edges = plan_superstep_edges(e, bcast).persist()
+    with vertex_program(g.vertices(), e) as vp:
+        maybe_b = lambda df: state_side(df, vp.bcast)
 
-    # m = sum of symmetric-table entry weights (reference Louvain.py:30)
-    m = edges.agg(F.sum("w")).first()[0]
-    two_m = 2.0 * m
-    wdeg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
+        # m = sum of symmetric-table entry weights (reference Louvain.py:30)
+        m = vp.edges.agg(F.sum("w")).first()[0]
+        two_m = 2.0 * m
+        wdeg = vp.edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
 
-    init = verts.select("id", F.col("id").alias("comm"), F.lit(True).alias("changed"))
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        comm = state.select("id", "comm")
-        # community aggregates against the round-(i-1) assignment
-        sum_tot = (
-            comm.join(maybe_b(wdeg), "id")
-            .groupBy("comm")
-            .agg(F.sum("k").alias("sum_tot"))
-        )
-        dst_comm = comm.select(F.col("id").alias("dst"), F.col("comm").alias("dcomm"))
-        tagged = edges.join(maybe_b(dst_comm), "dst")
-        src_comm = comm.select(F.col("id").alias("src"), F.col("comm").alias("scomm"))
-        with_src = tagged.join(maybe_b(src_comm), "src")
-        sum_in = (
-            with_src.where(F.col("scomm") == F.col("dcomm"))
-            .groupBy(F.col("scomm").alias("comm"))
-            .agg(F.sum("w").alias("sum_in"))
-        )
-        # candidate (u, C) pairs: C over neighbor communities of u
-        k_i_in = (
-            tagged.groupBy(F.col("src").alias("id"), F.col("dcomm").alias("cand"))
-            .agg(F.sum("w").alias("k_i_in"))
-        )
-        cand = (
-            k_i_in.join(maybe_b(comm), "id")
-            .where(F.col("cand") != F.col("comm"))  # own community: gain 0
-            .join(maybe_b(wdeg), "id")
-            .join(
-                maybe_b(sum_tot.select(F.col("comm").alias("cand"), "sum_tot")),
-                "cand",
+        def step(state: DataFrame, i: int) -> DataFrame:
+            comm = state.select("id", "comm")
+            # community aggregates against the round-(i-1) assignment
+            sum_tot = (
+                comm.join(maybe_b(wdeg), "id")
+                .groupBy("comm")
+                .agg(F.sum("k").alias("sum_tot"))
             )
-            .join(
-                maybe_b(sum_in.select(F.col("comm").alias("cand"), "sum_in")),
-                "cand",
-                "left",
+            dst_comm = comm.select(F.col("id").alias("dst"), F.col("comm").alias("dcomm"))
+            tagged = vp.edges.join(maybe_b(dst_comm), "dst")
+            src_comm = comm.select(F.col("id").alias("src"), F.col("comm").alias("scomm"))
+            with_src = tagged.join(maybe_b(src_comm), "src")
+            sum_in = (
+                with_src.where(F.col("scomm") == F.col("dcomm"))
+                .groupBy(F.col("scomm").alias("comm"))
+                .agg(F.sum("w").alias("sum_in"))
             )
-            .withColumn("sum_in", F.coalesce(F.col("sum_in"), F.lit(0.0)))
-        )
-        gain = (
-            (F.col("sum_in") + 2.0 * F.col("k_i_in")) / two_m
-            - F.pow((F.col("sum_tot") + F.col("k")) / two_m, 2)
-        ) - (
-            F.col("sum_in") / two_m
-            - F.pow(F.col("sum_tot") / two_m, 2)
-            - F.pow(F.col("k") / two_m, 2)
-        )
-        best = (
-            cand.select("id", "cand", gain.alias("gain"))
-            .where(F.col("gain") > gain_threshold)
-            .groupBy("id")
-            .agg(F.max(F.struct(F.col("gain"), (-F.col("cand")).alias("neg"))).alias("m"))
-            .select("id", (-F.col("m.neg")).alias("new_comm"))
-        )
-        return state.join(maybe_b(best), "id", "left").select(
-            "id",
-            F.coalesce(F.col("new_comm"), F.col("comm")).alias("comm"),
-            (
-                F.col("new_comm").isNotNull() & (F.col("new_comm") != F.col("comm"))
-            ).alias("changed"),
-        )
+            # candidate (u, C) pairs: C over neighbor communities of u
+            k_i_in = (
+                tagged.groupBy(F.col("src").alias("id"), F.col("dcomm").alias("cand"))
+                .agg(F.sum("w").alias("k_i_in"))
+            )
+            cand = (
+                k_i_in.join(maybe_b(comm), "id")
+                .where(F.col("cand") != F.col("comm"))  # own community: gain 0
+                .join(maybe_b(wdeg), "id")
+                .join(
+                    maybe_b(sum_tot.select(F.col("comm").alias("cand"), "sum_tot")),
+                    "cand",
+                )
+                .join(
+                    maybe_b(sum_in.select(F.col("comm").alias("cand"), "sum_in")),
+                    "cand",
+                    "left",
+                )
+                .withColumn("sum_in", F.coalesce(F.col("sum_in"), F.lit(0.0)))
+            )
+            gain = (
+                (F.col("sum_in") + 2.0 * F.col("k_i_in")) / two_m
+                - F.pow((F.col("sum_tot") + F.col("k")) / two_m, 2)
+            ) - (
+                F.col("sum_in") / two_m
+                - F.pow(F.col("sum_tot") / two_m, 2)
+                - F.pow(F.col("k") / two_m, 2)
+            )
+            best = (
+                cand.select("id", "cand", gain.alias("gain"))
+                .where(F.col("gain") > gain_threshold)
+                .groupBy("id")
+                .agg(F.max(F.struct(F.col("gain"), (-F.col("cand")).alias("neg"))).alias("m"))
+                .select("id", (-F.col("m.neg")).alias("new_comm"))
+            )
+            return state.join(maybe_b(best), "id", "left").select(
+                "id",
+                F.coalesce(F.col("new_comm"), F.col("comm")).alias("comm"),
+                (
+                    F.col("new_comm").isNotNull() & (F.col("new_comm") != F.col("comm"))
+                ).alias("changed"),
+            )
 
-    def converged(prev: DataFrame, new: DataFrame, i: int) -> bool:
-        return new.where("changed").limit(1).count() == 0
-
-    state, stats = run_supersteps(
-        init,
-        step,
-        converged,
-        max_iter=max_rounds,
-        name="louvain_p1",
-        truncate_init=False,  # init projects the persisted vertex set
-    )
-    out = propagate_release(state.select("id", F.col("comm").alias("community")), state)
-    edges.unpersist()
-    verts.unpersist()
-    return out, stats
+        return vp.run(
+            vp.verts.select("id", F.col("id").alias("comm"), F.lit(True).alias("changed")),
+            step,
+            halt=(F.sum(F.col("changed").cast("long")).alias("n"), lambda row: not row["n"]),
+            result=("id", F.col("comm").alias("community")),
+            max_iter=max_rounds,
+            name="louvain_p1",
+        )
 
 
 def louvain(

@@ -20,12 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
-from tcr_kcore_spark.plans.partitioning import (
-    broadcast_max_rows,
-    plan_superstep_edges,
-    state_side,
-)
-from tcr_kcore_spark.superstep import SuperstepStats, propagate_release, run_supersteps
+from tcr_kcore_spark.plans.partitioning import state_side
+from tcr_kcore_spark.superstep import SuperstepStats, vertex_program
 
 
 def lpa_round(edges: DataFrame, labels: DataFrame, bcast: bool = True) -> DataFrame:
@@ -66,27 +62,14 @@ def label_propagation(
     rounds (the reference runs a fixed ``maxsteps``, default 3 from CLI /
     50 in-code — ``LabelPropagation.py:18,79``)."""
     g = graph.undirected_view()
-    # one distinct scan for the vertex set (persisted: bcast decision +
-    # init); edge cache materializes inside round 1 (no eager count)
-    verts = g.vertices().persist()
-    bcast = verts.count() <= broadcast_max_rows()
-    edges = plan_superstep_edges(g.edges.select("src", "dst"), bcast).persist()
-    init = verts.select("id", F.col("id").alias("label"))
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        return lpa_round(edges, state, bcast)
-
-    state, stats = run_supersteps(
-        init,
-        step,
-        converged=None,
-        max_iter=rounds,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        name="lpa",
-        resume=resume,
-        truncate_init=False,  # init projects the persisted vertex set
-    )
-    edges.unpersist()
-    verts.unpersist()
-    return propagate_release(state.select("id", "label"), state), stats
+    with vertex_program(g.vertices(), g.edges.select("src", "dst")) as vp:
+        return vp.run(
+            vp.verts.select("id", F.col("id").alias("label")),
+            lambda state, i: lpa_round(vp.edges, state, vp.bcast),
+            result=("id", "label"),
+            max_iter=rounds,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            name="lpa",
+            resume=resume,
+        )

@@ -31,17 +31,49 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
-from tcr_kcore_spark.plans.partitioning import (
-    broadcast_max_rows,
-    plan_superstep_edges,
-    state_side,
-)
-from tcr_kcore_spark.superstep import (
-    ObservedConvergence,
-    SuperstepStats,
-    propagate_release,
-    run_supersteps,
-)
+from tcr_kcore_spark.plans.partitioning import state_side
+from tcr_kcore_spark.superstep import SuperstepStats, vertex_program
+
+
+def _folded_edges(graph: LinkGraph, damping: float) -> DataFrame:
+    """(src, dst, w) with the message weight ``damping/outdeg(src)``
+    constant-folded into the edge table (D3 trick), so a superstep needs
+    no per-step weight join."""
+    return (
+        graph.edges.select("src", "dst")
+        .join(graph.out_degrees().withColumnRenamed("id", "src"), "src")
+        .select("src", "dst", (F.lit(damping) / F.col("out_deg")).alias("w"))
+    )
+
+
+def _rank_step(vp, base, keep: tuple = (), mass=None):
+    """The PageRank superstep ``rank' = base + Σ_{u∈in(v)} w_u·rank_u``
+    (plus ``mass(state)``, a driver-side scalar, when given), carrying the
+    state columns ``keep`` and ``delta = |rank' − rank|``.  Apply via ONE
+    outer join: the state already has one row per vertex, so state ⟕ msgs
+    yields both the new rank and the old one for the delta."""
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        # only (src, rank) crosses to the message join — the state's delta
+        # column from the previous step stays out of the broadcast
+        s = state.select(F.col("id").alias("src"), "rank")
+        msgs = (
+            vp.edges.join(state_side(s, vp.bcast), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(F.col("w") * F.col("rank")).alias("msg"))
+        )
+        new_rank = base + F.coalesce(F.col("msg"), F.lit(0.0))
+        if mass is not None:
+            new_rank = new_rank + F.lit(mass(state))
+        msgs_b = F.broadcast(msgs) if vp.bcast else msgs
+        return state.join(msgs_b, "id", "left").select(
+            "id",
+            *keep,
+            new_rank.alias("rank"),
+            F.abs(new_rank - F.col("rank")).alias("delta"),
+        )
+
+    return step
 
 
 def pagerank(
@@ -63,101 +95,34 @@ def pagerank(
     mass is a driver-side action and must see a materialized state)."""
     if dangling:
         truncate_every = 1
-    spark = graph.edges.sparkSession
-    verts = graph.vertices().persist()
-    n = verts.count()
-
-    # state has one row per vertex: when it fits a broadcast (the usual
-    # case below ~10^6-10^7 vertices), the message join is map-side; above
-    # the threshold the state shuffle-joins against src-partitioned edges
-    # (see plan_superstep_edges — exchange ∝ V per superstep, never ∝ E).
-    bcast = n <= broadcast_max_rows()
-
-    out_deg = graph.out_degrees()
-    # Constant-fold damping/outdeg into the cached edge table (D3 trick)
-    # and hash-partition it ONCE for the whole superstep loop — a converged
-    # PageRank run does exactly one edge shuffle total, here at build time.
-    edges_w = plan_superstep_edges(
-        graph.edges.select("src", "dst")
-        .join(out_deg.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.lit(damping) / F.col("out_deg")).alias("w")),
-        bcast,
-    ).persist()
-    # no eager count: the first superstep materializes the cache en route —
-    # one fewer full pre-loop pass over E (guide §1.2: don't compute what
-    # you throw away)
-
-    if dangling:
-        dangles = verts.join(
-            out_deg.select(F.col("id")), "id", "left_anti"
-        ).persist()  # vertices with no out-edges
-
-    init = verts.select("id", F.lit(1.0).alias("rank"))
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # only (src, rank) crosses to the message join — the state's delta
-        # column from the previous step stays out of the broadcast
-        s = state.select(F.col("id").alias("src"), "rank")
-        msgs = (
-            edges_w.join(state_side(s, bcast), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("w") * F.col("rank")).alias("msg"))
-        )
-        base = F.lit(1.0 - damping)
+    # the weighted edge table is partitioned ONCE for the whole loop — a
+    # converged PageRank run does exactly one edge shuffle total
+    with vertex_program(graph.vertices(), _folded_edges(graph, damping)) as vp:
+        mass = None
         if dangling:
-            mass_row = (
-                state.join(dangles, "id", "left_semi").agg(F.sum("rank")).first()[0]
+            # vertices with no out-edges
+            dangles = vp.keep(
+                vp.verts.join(graph.out_degrees().select("id"), "id", "left_anti")
             )
-            mass = (mass_row or 0.0) / n
-            # msg already carries the damping factor (folded into edge w);
-            # only the dangling mass still needs damping applied
-            new_rank = (
-                base
-                + F.coalesce(F.col("msg"), F.lit(0.0))
-                + F.lit(damping * mass)
-            )
-        else:
-            new_rank = base + F.coalesce(F.col("msg"), F.lit(0.0))
-        # apply via ONE outer join: the state already has exactly one row
-        # per vertex, so joining state ⟕ msgs yields both the new rank and
-        # the old rank for the delta — r5 joined verts ⟕ msgs and then
-        # state again (two joins + an extra broadcast build per superstep)
-        msgs_b = F.broadcast(msgs) if bcast else msgs
-        out = state.join(msgs_b, "id", "left").select(
-            "id",
-            (new_rank).alias("rank"),
-            F.abs(new_rank - F.col("rank")).alias("delta"),
+
+            def mass(state: DataFrame) -> float:
+                # msg already carries the damping factor (folded into edge
+                # w); only the dangling mass still needs damping applied
+                row = state.join(dangles, "id", "left_semi").agg(F.sum("rank")).first()
+                return damping * ((row[0] or 0.0) / vp.n)
+
+        return vp.run(
+            vp.verts.select("id", F.lit(1.0).alias("rank")),
+            _rank_step(vp, F.lit(1.0 - damping), mass=mass),
+            halt=(F.max("delta").alias("d"), lambda row: (row["d"] or 0.0) <= tol),
+            result=("id", "rank"),
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            name="pagerank",
+            resume=resume,
+            truncate_every=truncate_every,
         )
-        # max|Δ| is collected DURING the materialization job (r6) — the
-        # separate per-chain agg action disappears (guide §1.2)
-        return oc.attach(out, F.max("delta").alias("d"))
-
-    oc = ObservedConvergence()
-
-    def converged(prev: DataFrame, new: DataFrame, i: int) -> bool:
-        row = oc.take()
-        d = row["d"] if row is not None else new.agg(F.max("delta")).first()[0]
-        return (d or 0.0) <= tol
-
-    state, stats = run_supersteps(
-        init,
-        step,
-        converged,
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        name="pagerank",
-        resume=resume,
-        truncate_every=truncate_every,
-        # init is a projection of the persisted vertex set — no truncation job
-        truncate_init=False,
-    )
-    result = propagate_release(state.select("id", "rank"), state)
-    edges_w.unpersist()
-    verts.unpersist()
-    if dangling:
-        dangles.unpersist()
-    return result, stats
 
 
 def pagerank_fixed_iters(
@@ -207,72 +172,27 @@ def personalized_pagerank(
     spark = graph.edges.sparkSession
     if not isinstance(seeds, DataFrame):
         seeds = spark.createDataFrame([(int(s),) for s in seeds], "id long")
-    verts = graph.vertices()
     k = seeds.count()
     if k == 0:
         raise ValueError("personalized_pagerank needs at least one seed")
-    verts_p = (
-        verts.join(seeds.select("id", F.lit(1.0 / k).alias("p")), "id", "left")
-        .select("id", F.coalesce("p", F.lit(0.0)).alias("p"))
-        .persist()
-    )
-    n = verts_p.count()
-    bcast = n <= broadcast_max_rows()
-
-    out_deg = graph.out_degrees()
-    edges_w = plan_superstep_edges(
-        graph.edges.select("src", "dst")
-        .join(out_deg.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.lit(damping) / F.col("out_deg")).alias("w")),
-        bcast,
-    ).persist()
-    # no eager count — first superstep materializes the cache (see pagerank)
-
-    # carry the reset probability in the state so the apply phase is ONE
-    # outer join (state ⟕ msgs) instead of verts_p ⟕ msgs ⋈ state
-    init = verts_p.select("id", "p", F.col("p").alias("rank"))
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        s = state.select(F.col("id").alias("src"), "rank")
-        msgs = (
-            edges_w.join(state_side(s, bcast), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("w") * F.col("rank")).alias("msg"))
+    verts_p = graph.vertices().join(
+        seeds.select("id", F.lit(1.0 / k).alias("p")), "id", "left"
+    ).select("id", F.coalesce("p", F.lit(0.0)).alias("p"))
+    with vertex_program(verts_p, _folded_edges(graph, damping)) as vp:
+        # carry the reset probability in the state so the apply phase is ONE
+        # outer join (state ⟕ msgs) instead of verts_p ⟕ msgs ⋈ state
+        return vp.run(
+            vp.verts.select("id", "p", F.col("p").alias("rank")),
+            _rank_step(vp, F.lit(1.0 - damping) * F.col("p"), keep=("p",)),
+            halt=(
+                F.max("delta").alias("d"),
+                lambda row: tol > 0 and (row["d"] or 0.0) <= tol,
+            ),
+            result=("id", "rank"),
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            name="ppr",
+            resume=resume,
+            truncate_every=truncate_every,
         )
-        new_rank = F.lit(1.0 - damping) * F.col("p") + F.coalesce(
-            F.col("msg"), F.lit(0.0)
-        )
-        msgs_b = F.broadcast(msgs) if bcast else msgs
-        out = state.join(msgs_b, "id", "left").select(
-            "id",
-            "p",
-            new_rank.alias("rank"),
-            F.abs(new_rank - F.col("rank")).alias("delta"),
-        )
-        return oc.attach(out, F.max("delta").alias("d"))
-
-    oc = ObservedConvergence()
-
-    def converged(prev: DataFrame, new: DataFrame, i: int) -> bool:
-        row = oc.take()  # clears the pending observation either way
-        if tol <= 0:
-            return False
-        d = row["d"] if row is not None else new.agg(F.max("delta")).first()[0]
-        return (d or 0.0) <= tol
-
-    state, stats = run_supersteps(
-        init,
-        step,
-        converged,
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        name="ppr",
-        resume=resume,
-        truncate_every=truncate_every,
-        truncate_init=False,  # init projects the persisted verts_p
-    )
-    result = propagate_release(state.select("id", "rank"), state)
-    edges_w.unpersist()
-    verts_p.unpersist()
-    return result, stats

@@ -13,17 +13,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
-from tcr_kcore_spark.plans.partitioning import (
-    broadcast_max_rows,
-    plan_superstep_edges,
-    state_side,
-)
-from tcr_kcore_spark.superstep import (
-    ObservedConvergence,
-    SuperstepStats,
-    propagate_release,
-    run_supersteps,
-)
+from tcr_kcore_spark.plans.partitioning import state_side
+from tcr_kcore_spark.superstep import SuperstepStats, vertex_program
 
 
 def sssp(
@@ -43,73 +34,52 @@ def sssp(
         )
     else:
         edges = graph.edges.select(*cols, F.lit(1.0).alias("w"))
-    # one distinct scan for the vertex set (persisted: bcast decision +
-    # init); edge cache materializes inside superstep 1 (no eager count)
-    verts = graph.vertices().persist()
-    bcast = verts.count() <= broadcast_max_rows()
-    edges = plan_superstep_edges(edges, bcast).persist()
+    with vertex_program(graph.vertices(), edges) as vp:
 
-    init = verts.select(
-        "id",
-        F.when(F.col("id") == source, F.lit(0.0)).alias("dist"),
-        (F.col("id") == source).alias("changed"),
-    )
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        frontier = state.where("changed").select(
-            F.col("id").alias("src"), F.col("dist").alias("sdist")
-        )
-        frontier = state_side(frontier, bcast)
-        msgs = (
-            edges.join(frontier, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(F.col("sdist") + F.col("w")).alias("msg"))
-        )
-        out = (
-            state.join(F.broadcast(msgs) if bcast else msgs, "id", "left")
-            .select(
-                "id",
-                F.when(
-                    F.col("msg").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("msg") < F.col("dist"))),
-                    F.col("msg"),
+        def step(state: DataFrame, i: int) -> DataFrame:
+            frontier = state.where("changed").select(
+                F.col("id").alias("src"), F.col("dist").alias("sdist")
+            )
+            msgs = (
+                vp.edges.join(state_side(frontier, vp.bcast), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min(F.col("sdist") + F.col("w")).alias("msg"))
+            )
+            return (
+                state.join(F.broadcast(msgs) if vp.bcast else msgs, "id", "left")
+                .select(
+                    "id",
+                    F.when(
+                        F.col("msg").isNotNull()
+                        & (F.col("dist").isNull() | (F.col("msg") < F.col("dist"))),
+                        F.col("msg"),
+                    )
+                    .otherwise(F.col("dist"))
+                    .alias("new_dist"),
+                    "dist",
                 )
-                .otherwise(F.col("dist"))
-                .alias("new_dist"),
-                "dist",
+                .select(
+                    "id",
+                    F.col("new_dist").alias("dist"),
+                    (
+                        F.col("new_dist").isNotNull()
+                        & (F.col("dist").isNull() | (F.col("new_dist") < F.col("dist")))
+                    ).alias("changed"),
+                )
             )
-            .select(
+
+        return vp.run(
+            vp.verts.select(
                 "id",
-                F.col("new_dist").alias("dist"),
-                (
-                    F.col("new_dist").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("new_dist") < F.col("dist")))
-                ).alias("changed"),
-            )
+                F.when(F.col("id") == source, F.lit(0.0)).alias("dist"),
+                (F.col("id") == source).alias("changed"),
+            ),
+            step,
+            halt=(F.sum(F.col("changed").cast("long")).alias("n"), lambda row: not row["n"]),
+            result=("id", F.col("dist").alias("distance")),
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            name="sssp",
+            resume=resume,
         )
-        # changed-count collected during the materialization job (r6)
-        return oc.attach(out, F.sum(F.col("changed").cast("long")).alias("n"))
-
-    oc = ObservedConvergence()
-
-    def converged(prev: DataFrame, new: DataFrame, i: int) -> bool:
-        row = oc.take()
-        if row is not None:
-            return (row["n"] or 0) == 0
-        return new.where("changed").limit(1).count() == 0
-
-    state, stats = run_supersteps(
-        init,
-        step,
-        converged,
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        name="sssp",
-        resume=resume,
-        truncate_init=False,  # init projects the persisted vertex set
-    )
-    out = propagate_release(state.select("id", F.col("dist").alias("distance")), state)
-    edges.unpersist()
-    verts.unpersist()
-    return out, stats

@@ -4,6 +4,7 @@ Reference mapping: ``GASProgram.compute`` + ``SimpleStrategy.compute``
 (``TCR/src/framework/strategy/SimpleStrategy.py:43-77``) run gather → sum →
 apply → scatter until the activation mask empties.  Here each superstep is a
 function ``state -> state`` built from DataFrame ops; the driver loop
+(``run_supersteps``)
 
 - persists the new state and unpersists the previous one (double-buffering,
   the Spark analog of the reference's mask swap at ``SimpleStrategy.py:55-63``),
@@ -13,11 +14,23 @@ function ``state -> state`` built from DataFrame ops; the driver loop
 - writes a JSON manifest per checkpoint with the step number, row count,
   per-partition row/byte metrics and the input fingerprint, enabling
   mid-iteration resume (north_rule requirement; generalizes the reference's
-  deleted-bitmap checkpoint, ``TCR/src/demo/KCore_big.py:252-259``).
+  deleted-bitmap checkpoint, ``TCR/src/demo/KCore_big.py:252-259``),
+- releases its live state when a step, a convergence check or a checkpoint
+  write raises.
 
-Convergence is a driver-side action per superstep (``max(delta)`` or a
-frontier count) — the analog of the reference's all-reduce termination vote
-(``KCore_big.py:227-243``), global by construction in Spark.
+A vertex program's convergence is observed, not a separate action: the
+step's output carries an aggregate (``max(delta)`` or a frontier count)
+that ``ObservedConvergence`` reads off the state's materialization job —
+the analog of the reference's all-reduce termination vote
+(``KCore_big.py:227-243``), global by construction in Spark.  (A
+``converged`` callback may still run actions, e.g. the edge-set
+comparison of the small-star components.)
+
+``vertex_program`` is the one set-up every vertex-program operator runs
+through: it persists the vertex set, picks the broadcast/shuffle regime
+from its size, partitions and caches the edge table once, wires the
+observed halt into ``run_supersteps`` and frees every cache it holds on
+normal and error exits alike.
 """
 
 from __future__ import annotations
@@ -28,8 +41,9 @@ import os
 import shutil
 import time
 import warnings
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Iterator
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -195,8 +209,7 @@ class ObservedConvergence:
     materializes eagerly before calling ``converged``).  ``take`` then
     returns the LAST attached step's observed row without launching a job
     — replacing the r5 pattern of one extra ``agg``/``count`` job per
-    convergence check.  Returns None when nothing was attached (callers
-    keep their explicit aggregation as the fallback).
+    convergence check.  Returns None when nothing was attached.
 
     With ``truncate_every > 1`` several chained steps attach observations;
     all of them fire inside the one chained job and ``take`` reads the
@@ -380,46 +393,138 @@ def run_supersteps(
     if truncate_init:
         state = truncate_lineage(state)
     i = start_step
-    while i < max_iter:
-        t_step = time.time()
-        prev = state
-        lazy = state
-        k = 0
-        held: list[DataFrame] = []
-        while k < truncate_every and i + k < max_iter:
-            lazy = step_fn(lazy, i + k)
-            k += 1
-            if k < truncate_every and i + k < max_iter:
-                # Intermediate chained state: the NEXT step's plan consumes
-                # it several times (message join, apply join, changed-set
-                # pruning), and without a cache the whole subtree — window
-                # aggregations included — re-evaluates per consumer inside
-                # the one chained job.  persist() is lazy, so the chain
-                # still runs as a single job; the cache is dropped as soon
-                # as the chain materializes.  K is small, so the plan/stat
-                # growth within one chain stays trivial (truncate_lineage
-                # cuts it at the chain boundary).
-                lazy = lazy.persist()
-                held.append(lazy)
-        new_state = truncate_lineage(lazy)
+    new_state = state
+    held: list[DataFrame] = []
+    try:
+        while i < max_iter:
+            t_step = time.time()
+            prev = state
+            lazy = state
+            k = 0
+            held = []
+            while k < truncate_every and i + k < max_iter:
+                lazy = step_fn(lazy, i + k)
+                k += 1
+                if k < truncate_every and i + k < max_iter:
+                    # Intermediate chained state: the NEXT step's plan consumes
+                    # it several times (message join, apply join, changed-set
+                    # pruning), and without a cache the whole subtree — window
+                    # aggregations included — re-evaluates per consumer inside
+                    # the one chained job.  persist() is lazy, so the chain
+                    # still runs as a single job; the cache is dropped as soon
+                    # as the chain materializes.  K is small, so the plan/stat
+                    # growth within one chain stays trivial (truncate_lineage
+                    # cuts it at the chain boundary).
+                    lazy = lazy.persist()
+                    held.append(lazy)
+            new_state = truncate_lineage(lazy)
+            for h in held:
+                h.unpersist()
+            i += k
+            st.supersteps += k
+            done = bool(converged(prev, new_state, i)) if converged else False
+            st.history.append(round(time.time() - t_step, 3))
+            release_state(prev)
+            state = new_state
+            if checkpoint_dir and (done or i % checkpoint_every == 0):
+                reread = _write_checkpoint(state, checkpoint_dir, i, name, fingerprint)
+                release_state(state)
+                state = truncate_lineage(reread)
+                st.checkpoints += 1
+            if done:
+                st.converged = True
+                break
+    except BaseException:
+        # error exit: free the chain caches and both live states (release
+        # is idempotent, so a state already released is harmless here)
         for h in held:
             h.unpersist()
-        i += k
-        st.supersteps += k
-        done = bool(converged(prev, new_state, i)) if converged else False
-        st.history.append(round(time.time() - t_step, 3))
-        release_state(prev)
-        state = new_state
-        if checkpoint_dir and (done or i % checkpoint_every == 0):
-            reread = _write_checkpoint(state, checkpoint_dir, i, name, fingerprint)
-            release_state(state)
-            state = truncate_lineage(reread)
-            st.checkpoints += 1
-        if done:
-            st.converged = True
-            break
+        release_state(state)
+        release_state(new_state)
+        raise
     st.wall_secs += time.time() - t0
     return state, st
+
+
+class VertexProgram:
+    """Handle yielded by :func:`vertex_program`."""
+
+    verts: DataFrame  # persisted, one row per vertex
+    n: int  # its row count
+    bcast: bool  # the regime: broadcast the V-row state?
+    edges: DataFrame | None  # partitioned for the regime, persisted
+
+    def __init__(self) -> None:
+        self._held: list[DataFrame] = []
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` for the whole program; freed on exit."""
+        df = df.persist()
+        self._held.append(df)
+        return df
+
+    def run(
+        self,
+        init: DataFrame,
+        step: Callable[[DataFrame, int], DataFrame],
+        *,
+        result: tuple,
+        halt: tuple | None = None,
+        **kw,
+    ) -> tuple[DataFrame, SuperstepStats]:
+        """``run_supersteps`` from ``init``, a projection of the persisted
+        vertex set (so no initial truncation job).  ``halt = (agg, pred)``
+        observes ``agg`` on every step's output during its materialization
+        job and stops once ``pred(observed_row)`` holds; ``halt=None`` runs
+        ``max_iter`` supersteps.  Returns the final state's ``result``
+        columns, carrying its release handles, and the stats; ``kw`` goes
+        to ``run_supersteps``."""
+        converged = None
+        if halt is not None:
+            agg, pred = halt
+            oc = ObservedConvergence()
+            body = step
+
+            def step(state: DataFrame, i: int) -> DataFrame:
+                return oc.attach(body(state, i), agg)
+
+            def converged(prev: DataFrame, new: DataFrame, i: int) -> bool:
+                return pred(oc.take())
+
+        state, stats = run_supersteps(init, step, converged, truncate_init=False, **kw)
+        return propagate_release(state.select(*result), state), stats
+
+
+@contextmanager
+def vertex_program(
+    verts: DataFrame, edges: DataFrame | None = None, n: int | None = None
+) -> Iterator[VertexProgram]:
+    """Superstep set-up shared by every vertex-program operator: persist
+    ``verts`` (one row per vertex) and count it unless the caller already
+    knows ``n``; pick the regime — ``bcast`` when the V-row state fits a
+    broadcast (the message join is map-side), else the state shuffle-joins
+    src-partitioned edges; partition ``edges`` for that regime ONCE and
+    cache it (``plan_superstep_edges``: no per-superstep exchange is ever
+    proportional to E).  The edge cache has no eager count — superstep 1
+    materializes it en route.  Every frame the program persists is
+    unpersisted on exit, whether or not the body raised."""
+    from tcr_kcore_spark.plans.partitioning import (
+        broadcast_max_rows,
+        plan_superstep_edges,
+    )
+
+    vp = VertexProgram()
+    try:
+        vp.verts = vp.keep(verts)
+        vp.n = vp.verts.count() if n is None else n
+        vp.bcast = vp.n <= broadcast_max_rows()
+        if edges is not None:
+            edges = vp.keep(plan_superstep_edges(edges, vp.bcast))
+        vp.edges = edges
+        yield vp
+    finally:
+        for df in vp._held:
+            df.unpersist()
 
 
 def clear_checkpoints(ckpt_dir: str) -> None:

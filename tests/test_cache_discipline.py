@@ -125,3 +125,84 @@ def test_scc_error_exit_releases_to_baseline(spark):
     with pytest.raises(RuntimeError, match="max_inner=2"):
         scc(g, max_inner=2)
     assert _persistent_ids(spark) - base == set()
+
+
+def test_vertex_programs_error_exit_release_to_baseline(spark, tmp_path, monkeypatch):
+    """Every vertex-program operator frees its caches when it raises.
+
+    Two failure points: a ``checkpoint_dir`` that is a regular file makes
+    the loop raise ``FileExistsError`` before superstep 1 (the operator's
+    vertex and edge caches are live), and ``truncate_lineage`` raising on
+    its 2nd call fails superstep 2 (a truncated state is live too; the
+    only failure point for operators without ``checkpoint_dir``).  The
+    cache is cleared before each case: the CacheManager dedupes identical
+    plans, so one case's leaked vertex cache would hide the next case's
+    leak of the same frame."""
+    import pytest
+
+    from tcr_kcore_spark import superstep
+    from tcr_kcore_spark.compress import compress_graph, pagerank_factored
+    from tcr_kcore_spark.operators import (
+        bfs,
+        connected_components,
+        hits,
+        kcore,
+        kcore_hindex_rounds,
+        label_propagation,
+        louvain_phase1,
+        pagerank,
+        personalized_pagerank,
+        sssp,
+    )
+
+    g = _graph(spark)
+    d = LinkGraph(g.edges, directed=True)
+    cg = compress_graph(d)
+    bad = tmp_path / "regular_file"
+    bad.write_text("")
+    cases = {
+        "pagerank": lambda ck: pagerank(g, max_iter=3, checkpoint_dir=ck),
+        "personalized_pagerank": lambda ck: personalized_pagerank(
+            g, seeds=[0], max_iter=3, checkpoint_dir=ck
+        ),
+        "components": lambda ck: connected_components(g, checkpoint_dir=ck),
+        "bfs": lambda ck: bfs(g, source=0, checkpoint_dir=ck),
+        "sssp": lambda ck: sssp(g, source=0, checkpoint_dir=ck),
+        "lpa": lambda ck: label_propagation(g, rounds=3, checkpoint_dir=ck),
+        "hits": lambda ck: hits(d, max_iter=3, tol=-1.0, checkpoint_dir=ck),
+        "kcore": lambda ck: kcore(g, local_finish_vertices=0, checkpoint_dir=ck),
+        "louvain_phase1": lambda ck: louvain_phase1(g, max_rounds=3, gain_threshold=1e-9),
+        "kcore_hindex_rounds": lambda ck: kcore_hindex_rounds(g, 3),
+        "pagerank_factored": lambda ck: pagerank_factored(cg, 3),
+    }
+    no_checkpoint_dir = {"louvain_phase1", "kcore_hindex_rounds", "pagerank_factored"}
+    real_truncate = superstep.truncate_lineage
+
+    def fail_second_call():
+        calls = []
+
+        def truncate(df):
+            calls.append(1)
+            if len(calls) == 2:
+                raise RuntimeError("injected superstep failure")
+            return real_truncate(df)
+
+        return truncate
+
+    def assert_released(name, run, exc, match):
+        spark.catalog.clearCache()
+        base = _persistent_ids(spark)
+        with pytest.raises(exc, match=match):
+            run()
+        leaked = _persistent_ids(spark) - base
+        assert leaked == set(), f"{name} leaked persistent RDDs: {leaked}"
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        assert cache.isEmpty(), f"{name} left cached frames behind"
+
+    for name, run in cases.items():
+        if name not in no_checkpoint_dir:
+            assert_released(name, lambda: run(str(bad)), FileExistsError, "")
+        monkeypatch.setattr(superstep, "truncate_lineage", fail_second_call())
+        assert_released(name, lambda: run(None), RuntimeError, "injected superstep failure")
+        monkeypatch.setattr(superstep, "truncate_lineage", real_truncate)
+    cg.unpersist()

@@ -177,7 +177,7 @@ def plan_triangles(spark):
     from tcr_kcore_spark.plans.partitioning import broadcast_max_rows
 
     g = _graph(spark)
-    verts = g.undirected_view().vertices().persist()
+    verts, _ = g.undirected_view().vertex_set()
     vrow = verts.agg(
         F.count(F.lit(1)).alias("n"), F.min("id").alias("mn"), F.max("id").alias("mx")
     ).first()

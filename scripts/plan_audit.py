@@ -28,32 +28,28 @@ def superstep_plan(spark, sf_dir: str) -> str:
     from tcr_kcore_spark.graph import LinkGraph
     from tcr_kcore_spark.plans.partitioning import (
         broadcast_max_rows,
-        plan_superstep_edges,
         state_side,
     )
     from tcr_kcore_spark.sources.relational import cooccurrence_edges
 
     g = LinkGraph(cooccurrence_edges(spark, sf_dir), directed=False)
-    verts = g.vertices()
-    n = verts.count()
+    g.materialize()
+    verts, n = g.vertex_set()
     bcast = n <= broadcast_max_rows()
-    out_deg = g.out_degrees()
-    edges_w = plan_superstep_edges(
-        g.edges.select("src", "dst")
-        .join(out_deg.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.lit(0.85) / F.col("out_deg")).alias("w")),
-        bcast,
-    ).persist()
-    edges_w.count()
-    state = verts.select("id", F.lit(1.0).alias("rank"))
-    s = state.withColumnRenamed("id", "src")
+    edges = g.superstep_edges(bcast)
+    edges.count()
+    # pagerank's state: each vertex carries its message weight w
+    w = g.out_degree_table().select("id", (F.lit(0.85) / F.col("out_deg")).alias("w"))
+    s = verts.join(w, "id", "left").select(
+        F.col("id").alias("src"), "w", F.lit(1.0).alias("rank")
+    )
     msgs = (
-        edges_w.join(state_side(s, bcast), "src")
+        edges.join(state_side(s, bcast), "src")
         .groupBy(F.col("dst").alias("id"))
         .agg(F.sum(F.col("w") * F.col("rank")).alias("msg"))
     )
     plan = msgs._jdf.queryExecution().executedPlan().toString()
-    edges_w.unpersist()
+    g.unpersist()
     return f"regime={'broadcast' if bcast else 'shuffle'} (V={n})\n" + plan
 
 

@@ -153,7 +153,7 @@ def pagerank_factored(
     w = cg.out_deg.select(
         F.col("id").alias("src"), (F.lit(damping) / F.col("out_deg")).alias("w")
     )
-    with vertex_program(cg.verts, cg.direct.join(w, "src")) as vp:
+    with vertex_program(verts=cg.verts, edges=cg.direct.join(w, "src")) as vp:
         owners_w = cg.owners.join(w, "src")
         # broadcast regime: the state join is map-side, so a (vh1, vh2)
         # partitioning survives it and the per-set groupBy needs no exchange;

@@ -17,16 +17,43 @@ Ingest semantics reproduced exactly (SURVEY.md §1.3):
   (``TCR/src/type/CSRGraph.py:432-441``) — done with a window-free
   ``zipWithIndex``-equivalent only when requested; algorithms work on raw
   ids so densification is not on the hot path.
+
+Cache ownership.  A *materialized* graph (``materialize()``/``cache()``)
+owns its edge cache and the tables derived from it, each built lazily on
+first use and shared by every later operator call — the reference builds
+its CSR/CSC topology once and every GAS program reuses it
+(``TCR/src/framework/strategy/SimpleStrategy.py:24-26``):
+
+- the superstep edge layout, one per regime (``superstep_edges``);
+- the vertex set and its row count (``vertex_set``);
+- the out-degree table (``out_degree_table``);
+- for a directed graph, its symmetrized view (``undirected_view``), itself
+  a materialized graph with tables of its own.
+
+``unpersist()`` frees all of them.  An operator never persists or frees a
+graph-owned table; it frees the caches it made itself before it returns
+(``superstep.vertex_program``).  A graph that is not materialized owns
+nothing: each accessor returns a fresh per-call plan.  The public
+``vertices()``/``out_degrees()``/``degrees()`` are always per-call plans.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 EDGE_COLS = ("src", "dst")
+
+
+def _persisted(df: DataFrame) -> bool:
+    """Whether ``df``'s plan is in the CacheManager now.  False once
+    ``spark.catalog.clearCache()`` dropped it, although the Python frame
+    still reports ``is_cached``."""
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
 
 
 @dataclass
@@ -41,6 +68,10 @@ class LinkGraph:
     edges: DataFrame
     directed: bool = True
     _cached: bool = field(default=False, repr=False)
+    # graph-owned derived tables (module docstring), keyed by name
+    _tables: dict = field(default_factory=dict, repr=False, compare=False)
+    _n_verts: int | None = field(default=None, repr=False, compare=False)
+    _view: "LinkGraph | None" = field(default=None, repr=False, compare=False)
 
     # -- constructors -------------------------------------------------------
 
@@ -97,10 +128,19 @@ class LinkGraph:
 
     def undirected_view(self) -> "LinkGraph":
         """Symmetrized closure of a directed graph (used by k-core/CC/LPA/TC
-        when the input edge list is directed)."""
+        when the input edge list is directed).  A materialized graph owns
+        its view: built and persisted on first use, materialized by its
+        first consumer, and itself a materialized graph whose tables are
+        shared too."""
         if not self.directed:
             return self
-        return LinkGraph.from_edges(self.edges, directed=False)
+        if not self._cached:
+            return LinkGraph.from_edges(self.edges, directed=False)
+        self._revive()
+        if self._view is None:
+            self._view = LinkGraph.from_edges(self.edges, directed=False).cache()
+        self._view._revive()
+        return self._view
 
     # -- persistence --------------------------------------------------------
 
@@ -113,6 +153,14 @@ class LinkGraph:
         return self
 
     def unpersist(self) -> "LinkGraph":
+        """Free the edge cache and every graph-owned table."""
+        for df in self._tables.values():
+            df.unpersist()
+        self._tables.clear()
+        self._n_verts = None
+        if self._view is not None:
+            self._view.unpersist()
+            self._view = None
         if self._cached:
             self.edges.unpersist()
             self._cached = False
@@ -122,6 +170,62 @@ class LinkGraph:
         """Force the cache and return the edge count."""
         self.cache()
         return self.edges.count()
+
+    def owned_caches(self) -> list[DataFrame]:
+        """Every persisted frame this graph owns: the edge cache, the
+        derived tables built so far and its view's."""
+        if not self._cached:
+            return []
+        view = self._view.owned_caches() if self._view is not None else []
+        return [self.edges, *self._tables.values(), *view]
+
+    # -- graph-owned derived tables (module docstring) ----------------------
+
+    def _revive(self) -> None:
+        """Re-persist the edge cache if ``clearCache()`` dropped it, so the
+        tables rebuilt from it do not re-read its source per build."""
+        if not _persisted(self.edges):
+            self.edges.persist()
+
+    def _table(self, key, build: Callable[[], DataFrame]) -> DataFrame:
+        """The graph-owned table ``key``: ``build()`` persisted on first
+        use (no eager job; its first consumer materializes it), rebuilt
+        rather than read uncached once its cache was dropped."""
+        df = self._tables.get(key)
+        if df is None or not _persisted(df):
+            self._revive()
+            df = self._tables[key] = build().persist()
+        return df
+
+    def vertex_set(self) -> tuple[DataFrame, int | None]:
+        """``(verts, n)``: the vertex set and its row count.  On a
+        materialized graph both are graph-owned: persisted and counted on
+        first use, then shared.  Otherwise ``(vertices(), None)``: a
+        per-call plan the caller persists and counts."""
+        if not self._cached:
+            return self.vertices(), None
+        verts = self._table("verts", self.vertices)
+        if self._n_verts is None:
+            self._n_verts = verts.count()
+        return verts, self._n_verts
+
+    def out_degree_table(self) -> DataFrame:
+        """``out_degrees()``, graph-owned on a materialized graph."""
+        if not self._cached:
+            return self.out_degrees()
+        return self._table("out_deg", self.out_degrees)
+
+    def superstep_edges(self, bcast: bool) -> DataFrame:
+        """The ``(src, dst)`` edges in the superstep layout for the regime
+        (``plans.partitioning.plan_superstep_edges``): graph-owned on a
+        materialized graph, else a per-call plan the caller persists."""
+        # local import: the plans package imports this module
+        from tcr_kcore_spark.plans.partitioning import plan_superstep_edges
+
+        def build() -> DataFrame:
+            return plan_superstep_edges(self.edges.select(*EDGE_COLS), bcast)
+
+        return self._table(("edges", bcast), build) if self._cached else build()
 
     # -- accessors (SURVEY.md §2.A) ----------------------------------------
 

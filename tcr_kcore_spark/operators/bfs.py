@@ -36,7 +36,7 @@ def bfs(
     g = graph if (directed is None or directed == graph.directed) else (
         graph.undirected_view() if not directed else graph
     )
-    with vertex_program(g.vertices(), g.edges.select("src", "dst")) as vp:
+    with vertex_program(g) as vp:
 
         def step(state: DataFrame, i: int) -> DataFrame:
             frontier = state.where("frontier").select(F.col("id").alias("src"))

@@ -57,7 +57,7 @@ def _hashmin(
     checkpoint_every: int,
     resume: bool,
 ) -> tuple[DataFrame, SuperstepStats]:
-    with vertex_program(g.vertices(), g.edges.select("src", "dst")) as vp:
+    with vertex_program(g) as vp:
 
         def step(state: DataFrame, i: int) -> DataFrame:
             frontier = state.where("changed").select(

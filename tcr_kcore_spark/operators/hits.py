@@ -29,20 +29,21 @@ def hits(
     resume: bool = False,
 ) -> tuple[DataFrame, SuperstepStats]:
     """Returns ((id, hub, auth), stats) on the directed graph."""
-    npart = int(graph.edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     # the vertex set is persisted: every superstep joins it twice (auth and
     # hub zero-fill) — unpersisted, each of those joins re-derived the
     # union+distinct over the whole edge table (2 extra E-scans/superstep)
-    with vertex_program(graph.vertices()) as vp:
+    with vertex_program(graph) as vp:
         # HITS gathers over BOTH orientations per superstep (auth from
         # in-edges, hub from out-edges) — the reference keeps CSR *and* CSC
         # for the same reason (``TCR/src/type/CSRCGraph.py:14-56``).  Under
         # the shuffle regime cache each orientation partitioned on its join
         # key so neither pass ever re-exchanges the E-sized table; under
-        # broadcast one copy suffices (the state joins are map-side).  No
-        # eager counts: superstep 1 materializes the caches en route.
-        edges = vp.keep(graph.edges.select("src", "dst").repartition(npart, "src"))
-        edges_by_dst = edges if vp.bcast else vp.keep(edges.repartition(npart, "dst"))
+        # broadcast one copy suffices (the state joins are map-side).  The
+        # two orientations are the graph's src- and dst-partitioned layouts
+        # (shared when it is materialized).  No eager counts: superstep 1
+        # materializes the caches en route.
+        edges = vp.keep(graph.superstep_edges(bcast=False))
+        edges_by_dst = edges if vp.bcast else vp.keep(graph.superstep_edges(bcast=True))
 
         # Per-step caches: each normalized score frame is consumed up to
         # three times within a superstep (the norm action, the opposite-side

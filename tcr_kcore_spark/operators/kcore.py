@@ -262,14 +262,16 @@ def _hindex(
     local_finish_vertices: int = 2_000_000,
     local_finish_edges: int = 8_000_000,
 ) -> tuple[DataFrame, SuperstepStats]:
-    degrees = g.degrees()
+    # the symmetric degree table (g is undirected; shared when the graph
+    # is materialized)
+    degrees = g.out_degree_table()
     # ONE planning action for V, E (= sum of symmetric degrees) and max
     # degree — r5 paid three driver actions here (vertices().count(),
     # edges.count(), max-degree agg) before the first superstep.
     prow = degrees.agg(
         F.count(F.lit(1)).alias("v"),
-        F.sum("degree").alias("e"),
-        F.max("degree").alias("mx"),
+        F.sum("out_deg").alias("e"),
+        F.max("out_deg").alias("mx"),
     ).first()
     n_verts = prow["v"]
     n_edges = int(prow["e"] or 0)
@@ -295,10 +297,15 @@ def _hindex(
     ):
         stats = SuperstepStats()
         t0 = time.time()
+        # coalesce(1), not a shuffle: the one task scans the symmetric edge
+        # cache directly — the graph's own, or for a materialized directed
+        # graph its cached view.  A directed graph that is not materialized
+        # still pays its per-call view's exchange and distinct below the
+        # coalesce, and that final aggregate then runs inside the one task.
         local = (
             g.edges.select("src", "dst")
             .where(F.col("src") < F.col("dst"))  # one row per undirected edge
-            .coalesce(1)  # no shuffle: the one task reads the cache directly
+            .coalesce(1)
             .mapInArrow(_bz_layered_arrow(), "id long, coreness long")
         )
         out = truncate_lineage(local)
@@ -324,7 +331,7 @@ def _hindex(
 
     # the degree table is the vertex frame: V is known from the planning
     # aggregate, and init projects the cached degrees (no truncation job)
-    with vertex_program(degrees, g.edges.select("src", "dst"), n=n_verts) as vp:
+    with vertex_program(g, degrees, n=n_verts) as vp:
 
         def step(state: DataFrame, i: int) -> DataFrame:
             n = last_changed["n"]
@@ -336,7 +343,7 @@ def _hindex(
 
         return vp.run(
             vp.verts.select(
-                "id", F.col("degree").cast("long").alias("est"), F.lit(True).alias("changed")
+                "id", F.col("out_deg").cast("long").alias("est"), F.lit(True).alias("changed")
             ),
             step,
             halt=(F.sum(F.col("changed").cast("long")).alias("n"), halted),
@@ -359,15 +366,15 @@ def kcore_hindex_rounds(
     ``truncate_every``: rounds chained lazily per materialization
     (amortizes fixed per-job costs; see run_supersteps)."""
     g = graph.undirected_view()
-    degrees = g.degrees()
+    degrees = g.out_degree_table()
     # one planning action for V and max degree (was two driver actions)
     prow = degrees.agg(
-        F.count(F.lit(1)).alias("v"), F.max("degree").alias("mx")
+        F.count(F.lit(1)).alias("v"), F.max("out_deg").alias("mx")
     ).first()
     hub_safe = (prow["mx"] or 0) > _HUB_WINDOW_MAX_DEG
-    with vertex_program(degrees, g.edges.select("src", "dst"), n=prow["v"]) as vp:
+    with vertex_program(g, degrees, n=prow["v"]) as vp:
         out, _ = vp.run(
-            vp.verts.select("id", F.col("degree").cast("long").alias("est")),
+            vp.verts.select("id", F.col("out_deg").cast("long").alias("est")),
             lambda est, i: _hindex_round(
                 vp.edges, est, bcast=vp.bcast, hub_safe=hub_safe
             ).select("id", "est"),

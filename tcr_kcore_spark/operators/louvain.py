@@ -111,7 +111,7 @@ def louvain_phase1(
         e = g.edges.select("src", "dst", F.lit(1.0).alias("w"))
     # no eager edge count: the m aggregation right below materializes the
     # edge cache as its first consumer
-    with vertex_program(g.vertices(), e) as vp:
+    with vertex_program(g, edges=e) as vp:
         maybe_b = lambda df: state_side(df, vp.bcast)
 
         # m = sum of symmetric-table entry weights (reference Louvain.py:30)

@@ -8,10 +8,12 @@ label wins — and document the deviation (SURVEY.md §7 "LPA determinism").
 Default round count mirrors the reference CLI default (``maxsteps``).
 
 Spark formulation (reference B12): ``msgs.groupBy(id, label).count()`` then
-a second hash aggregation ``max(struct(cnt, -label))`` per vertex — the
-mode with the deterministic (count desc, label asc) tie-break expressed as
-two map-side-combinable aggregations, no window.  Both levels absorb
-in-degree hubs through Tungsten partial aggregation.
+a second aggregation ``max(struct(cnt, -label))`` per vertex — the mode
+with the deterministic (count desc, label asc) tie-break expressed as two
+map-side-combinable aggregations, no window.  Both levels absorb in-degree
+hubs through partial aggregation.  The first is a hash aggregation; the
+second plans as ``SortAggregate`` over a ``Sort`` on each side of its
+exchange, because a struct aggregation buffer is not hash-aggregatable.
 """
 
 from __future__ import annotations
@@ -26,7 +28,10 @@ from tcr_kcore_spark.superstep import SuperstepStats, vertex_program
 
 def lpa_round(edges: DataFrame, labels: DataFrame, bcast: bool = True) -> DataFrame:
     """One synchronous LPA round over symmetrized ``edges``;
-    ``labels`` = (id, label)."""
+    ``labels`` = (id, label).  Physical shape: a hash aggregation of the
+    (id, label) vote counts, then ``max(struct(cnt, -label))`` per id as a
+    partial and a final ``SortAggregate``, each over a ``Sort`` (a struct
+    buffer is not hash-aggregatable) — not one hash aggregation."""
     lab = labels.select(F.col("id").alias("src"), F.col("label").alias("nbr_label"))
     lab = state_side(lab, bcast)
     msgs = edges.join(
@@ -34,10 +39,11 @@ def lpa_round(edges: DataFrame, labels: DataFrame, bcast: bool = True) -> DataFr
         "src",
     ).select(F.col("dst").alias("id"), F.col("nbr_label").alias("label"))
     counts = msgs.groupBy("id", "label").agg(F.count(F.lit(1)).alias("cnt"))
-    # mode with deterministic tie-break (count desc, label asc) as ONE hash
+    # mode with deterministic tie-break (count desc, label asc) as one
     # aggregation: max of struct(cnt, -label) — map-side combinable, so a
     # hub's label votes partially aggregate on the map side instead of
     # funneling its whole distinct-label set through one window partition
+    # (it plans as sort-based, not hash, aggregation: see the docstring)
     best = (
         counts.groupBy("id")
         .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m"))
@@ -62,7 +68,7 @@ def label_propagation(
     rounds (the reference runs a fixed ``maxsteps``, default 3 from CLI /
     50 in-code — ``LabelPropagation.py:18,79``)."""
     g = graph.undirected_view()
-    with vertex_program(g.vertices(), g.edges.select("src", "dst")) as vp:
+    with vertex_program(g) as vp:
         return vp.run(
             vp.verts.select("id", F.col("id").alias("label")),
             lambda state, i: lpa_round(vp.edges, state, vp.bcast),

@@ -12,11 +12,12 @@ Exact semantics reproduced:
 
 Spark-first design:
 
-- the per-edge message weight ``damping / outdeg`` is **constant-folded into
-  the edge table once** (the reference folds 0.85 into 1/outdeg the same way,
-  ``TCR/single/PR.py:30``), so each superstep is exactly one join + one
-  aggregation + one outer join:
-  ``edges_w ⋈ state on src → groupBy(dst).sum(w·r) → vertices ⟕ msgs``;
+- the message weight ``w = damping / outdeg`` is **folded into each
+  vertex's state once** (the reference folds 0.85 into 1/outdeg the same
+  way, ``TCR/single/PR.py:30``), so the supersteps read the graph's shared
+  ``(src, dst)`` layout with no per-call weighted edge copy, and each is
+  exactly one join + one aggregation + one outer join:
+  ``edges ⋈ state(w, r) on src → groupBy(dst).sum(w·r) → state ⟕ msgs``;
 - the groupBy(dst) aggregation gets map-side partial aggregation from
   Tungsten automatically, which is what neutralizes in-degree hubs (the
   reference needs Gemini/LPT partitioners for the same skew, SURVEY §2.C);
@@ -35,28 +36,31 @@ from tcr_kcore_spark.plans.partitioning import state_side
 from tcr_kcore_spark.superstep import SuperstepStats, vertex_program
 
 
-def _folded_edges(graph: LinkGraph, damping: float) -> DataFrame:
-    """(src, dst, w) with the message weight ``damping/outdeg(src)``
-    constant-folded into the edge table (D3 trick), so a superstep needs
-    no per-step weight join."""
-    return (
-        graph.edges.select("src", "dst")
-        .join(graph.out_degrees().withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.lit(damping) / F.col("out_deg")).alias("w"))
+def _rank_init(vp, graph: LinkGraph, damping: float, keep: tuple, rank) -> DataFrame:
+    """The init state ``(id, *keep, w, rank, delta)``: each vertex carries
+    its message weight ``w = damping/outdeg`` (D3 trick: no per-step
+    weight join; NULL on a vertex with no out-edges, which sends no
+    message).  ``delta`` is a placeholder so the init has the steps'
+    schema (a resumed checkpoint is checked against it)."""
+    w = graph.out_degree_table().select(
+        "id", (F.lit(damping) / F.col("out_deg")).alias("w")
+    )
+    return vp.verts.join(w, "id", "left").select(
+        "id", *keep, "w", rank.alias("rank"), F.lit(1.0).alias("delta")
     )
 
 
 def _rank_step(vp, base, keep: tuple = (), mass=None):
     """The PageRank superstep ``rank' = base + Σ_{u∈in(v)} w_u·rank_u``
     (plus ``mass(state)``, a driver-side scalar, when given), carrying the
-    state columns ``keep`` and ``delta = |rank' − rank|``.  Apply via ONE
-    outer join: the state already has one row per vertex, so state ⟕ msgs
-    yields both the new rank and the old one for the delta."""
+    state columns ``keep`` and ``w`` and ``delta = |rank' − rank|``.
+    Apply via ONE outer join: the state already has one row per vertex, so
+    state ⟕ msgs yields both the new rank and the old one for the delta."""
 
     def step(state: DataFrame, i: int) -> DataFrame:
-        # only (src, rank) crosses to the message join — the state's delta
-        # column from the previous step stays out of the broadcast
-        s = state.select(F.col("id").alias("src"), "rank")
+        # only (src, w, rank) crosses to the message join — the state's
+        # delta column from the previous step stays out of the broadcast
+        s = state.select(F.col("id").alias("src"), "w", "rank")
         msgs = (
             vp.edges.join(state_side(s, vp.bcast), "src")
             .groupBy(F.col("dst").alias("id"))
@@ -69,6 +73,7 @@ def _rank_step(vp, base, keep: tuple = (), mass=None):
         return state.join(msgs_b, "id", "left").select(
             "id",
             *keep,
+            "w",
             new_rank.alias("rank"),
             F.abs(new_rank - F.col("rank")).alias("delta"),
         )
@@ -95,24 +100,21 @@ def pagerank(
     mass is a driver-side action and must see a materialized state)."""
     if dangling:
         truncate_every = 1
-    # the weighted edge table is partitioned ONCE for the whole loop — a
-    # converged PageRank run does exactly one edge shuffle total
-    with vertex_program(graph.vertices(), _folded_edges(graph, damping)) as vp:
+    # the edge layout is the graph's: on a materialized graph it is
+    # partitioned once and shared by every call
+    with vertex_program(graph) as vp:
         mass = None
         if dangling:
-            # vertices with no out-edges
-            dangles = vp.keep(
-                vp.verts.join(graph.out_degrees().select("id"), "id", "left_anti")
-            )
 
             def mass(state: DataFrame) -> float:
-                # msg already carries the damping factor (folded into edge
-                # w); only the dangling mass still needs damping applied
-                row = state.join(dangles, "id", "left_semi").agg(F.sum("rank")).first()
+                # msg already carries the damping factor (folded into w);
+                # only the dangling mass (vertices with no out-edges, so
+                # no w) still needs damping applied
+                row = state.where(F.col("w").isNull()).agg(F.sum("rank")).first()
                 return damping * ((row[0] or 0.0) / vp.n)
 
         return vp.run(
-            vp.verts.select("id", F.lit(1.0).alias("rank")),
+            _rank_init(vp, graph, damping, (), F.lit(1.0)),
             _rank_step(vp, F.lit(1.0 - damping), mass=mass),
             halt=(F.max("delta").alias("d"), lambda row: (row["d"] or 0.0) <= tol),
             result=("id", "rank"),
@@ -163,8 +165,8 @@ def personalized_pagerank(
     with an ``id`` column, or an iterable of vertex ids) and ``r₀ = p`` —
     the seed-relative relevance vector used for related-item retrieval
     over link graphs.  The reference has no PPR; this reuses the plain
-    PageRank plan unchanged (folded damping/outdeg edge weights cached
-    and partitioned once, one join + one aggregation + one outer join per
+    PageRank plan unchanged (damping/outdeg folded into the state, the
+    graph's edge layout, one join + one aggregation + one outer join per
     superstep) — only the base term and the init differ, so every scale
     property of D1/D3 carries over.  ``tol <= 0`` runs exactly
     ``max_iter`` supersteps (the SQL-oracle-pinned mode); ``tol > 0``
@@ -175,14 +177,15 @@ def personalized_pagerank(
     k = seeds.count()
     if k == 0:
         raise ValueError("personalized_pagerank needs at least one seed")
-    verts_p = graph.vertices().join(
+    verts, n = graph.vertex_set()
+    verts_p = verts.join(
         seeds.select("id", F.lit(1.0 / k).alias("p")), "id", "left"
     ).select("id", F.coalesce("p", F.lit(0.0)).alias("p"))
-    with vertex_program(verts_p, _folded_edges(graph, damping)) as vp:
+    with vertex_program(graph, verts_p, n=n) as vp:
         # carry the reset probability in the state so the apply phase is ONE
         # outer join (state ⟕ msgs) instead of verts_p ⟕ msgs ⋈ state
         return vp.run(
-            vp.verts.select("id", "p", F.col("p").alias("rank")),
+            _rank_init(vp, graph, damping, ("p",), F.col("p")),
             _rank_step(vp, F.lit(1.0 - damping) * F.col("p"), keep=("p",)),
             halt=(
                 F.max("delta").alias("d"),

@@ -167,8 +167,13 @@ def scc(
     trim level and per joint coloring round."""
     stats = SuperstepStats()
     t0 = time.time()
-    verts = graph.vertices().persist()
-    n_live = verts.count()
+    # the vertex set and its count are the graph's when it is
+    # materialized, else persisted and counted for this call
+    verts, n_live = graph.vertex_set()
+    own_verts = n_live is None
+    if own_verts:
+        verts = verts.persist()
+        n_live = verts.count()
     bcast = n_live <= broadcast_max_rows()
     live_e = truncate_lineage(
         graph.edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
@@ -182,7 +187,8 @@ def scc(
         for df in (live_v, live_e, *retired, *frames):
             if df is not None:
                 release_state(df)
-        verts.unpersist()
+        if own_verts:
+            verts.unpersist()
         raise RuntimeError(msg)
 
     def _counted(df: DataFrame) -> tuple[DataFrame, int]:
@@ -272,7 +278,8 @@ def scc(
     out = truncate_lineage(labels.select("id", scc_id.alias("scc_id")))
     for df in retired:
         release_state(df)
-    verts.unpersist()
+    if own_verts:
+        verts.unpersist()
     stats.wall_secs = time.time() - t0
     stats.converged = True
     return out, stats

@@ -34,7 +34,7 @@ def sssp(
         )
     else:
         edges = graph.edges.select(*cols, F.lit(1.0).alias("w"))
-    with vertex_program(graph.vertices(), edges) as vp:
+    with vertex_program(graph, edges=edges) as vp:
 
         def step(state: DataFrame, i: int) -> DataFrame:
             frontier = state.where("changed").select(

@@ -33,7 +33,7 @@ def _oriented(g: LinkGraph) -> DataFrame:
     undirected edge.  The destination's (degree, id) key is kept as ``dd``
     so wedges can order their legs by the SAME total order."""
     und = g.undirected_view()
-    deg = und.out_degrees().select(
+    deg = und.out_degree_table().select(
         F.col("id"), F.col("out_deg").alias("d")
     )
     e = (
@@ -58,8 +58,11 @@ def triangles_per_vertex(g: LinkGraph) -> DataFrame:
     from tcr_kcore_spark.superstep import truncate_lineage
 
     # one planning action: vertex count (broadcast decision for the final
-    # zero-fill) + id range (int32 narrowing gate below)
-    verts = g.undirected_view().vertices().persist()
+    # zero-fill) + id range (int32 narrowing gate below).  The vertex set
+    # is the graph's when it is materialized, else persisted for this call
+    verts, shared = g.undirected_view().vertex_set()
+    if shared is None:
+        verts = verts.persist()
     vrow = verts.agg(
         F.count(F.lit(1)).alias("n"),
         F.min("id").alias("mn"),
@@ -142,7 +145,8 @@ def triangles_per_vertex(g: LinkGraph) -> DataFrame:
     out = truncate_lineage(out)
     tris.unpersist()
     o.unpersist()
-    verts.unpersist()
+    if shared is None:
+        verts.unpersist()
     return out
 
 

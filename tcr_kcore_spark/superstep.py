@@ -27,10 +27,12 @@ the analog of the reference's all-reduce termination vote
 comparison of the small-star components.)
 
 ``vertex_program`` is the one set-up every vertex-program operator runs
-through: it persists the vertex set, picks the broadcast/shuffle regime
-from its size, partitions and caches the edge table once, wires the
-observed halt into ``run_supersteps`` and frees every cache it holds on
-normal and error exits alike.
+through: it takes the vertex set, picks the broadcast/shuffle regime from
+its size, takes the edge table partitioned for that regime, wires the
+observed halt into ``run_supersteps`` and frees every cache it made on
+normal and error exits alike.  On a materialized graph the vertex set, its
+count and the edge layouts are the graph's own, built once and shared by
+every call (``graph.py``); the program neither persists nor frees them.
 """
 
 from __future__ import annotations
@@ -43,11 +45,14 @@ import time
 import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from typing import TYPE_CHECKING, Callable, Iterator
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from tcr_kcore_spark.graph import LinkGraph
 
 # scratch dirs created by the parquet fallback of truncate_lineage; freed in
 # release_state once the consumer is done, and swept at exit as a backstop
@@ -341,6 +346,20 @@ def latest_checkpoint(ckpt_dir: str) -> tuple[int, str] | None:
     return step, manifest["path"]
 
 
+def _check_resume_schema(ckpt_dir: str, step: int, init: DataFrame) -> None:
+    """Refuse to resume from a checkpoint whose state schema is not the
+    one the operator now starts from (e.g. written before its state gained
+    a column): the mismatch would otherwise surface deep inside a join."""
+    with open(os.path.join(ckpt_dir, f"manifest_{step:06d}.json")) as f:
+        saved = json.load(f)["schema"]
+    want = init.schema.simpleString()
+    if saved != want:
+        raise ValueError(
+            f"cannot resume from {ckpt_dir} step {step}: checkpoint state "
+            f"schema {saved} differs from the init state schema {want}"
+        )
+
+
 def run_supersteps(
     state: DataFrame,
     step_fn: Callable[[DataFrame, int], DataFrame],
@@ -360,7 +379,8 @@ def run_supersteps(
     ``converged(prev, new, i)`` runs AFTER the new state is materialized; it
     may run actions (e.g. ``agg(max(delta))``).  When ``checkpoint_dir`` is
     set, state is checkpointed every N steps with a manifest; ``resume=True``
-    restarts from the latest manifest instead of ``state``.
+    restarts from the latest manifest instead of ``state`` and raises
+    ``ValueError`` when the manifest's schema is not ``state``'s.
 
     ``truncate_every > 1`` lets K supersteps chain lazily into ONE Spark job
     before materializing/truncating — amortizing the fixed per-job cost
@@ -379,6 +399,7 @@ def run_supersteps(
         found = latest_checkpoint(checkpoint_dir)
         if found is not None:
             start_step, path = found
+            _check_resume_schema(checkpoint_dir, start_step, state)
             state = spark.read.parquet(path)
             st.resumed_from = start_step
 
@@ -452,16 +473,30 @@ class VertexProgram:
     verts: DataFrame  # persisted, one row per vertex
     n: int  # its row count
     bcast: bool  # the regime: broadcast the V-row state?
-    edges: DataFrame | None  # partitioned for the regime, persisted
 
-    def __init__(self) -> None:
+    def __init__(self, graph: LinkGraph | None = None) -> None:
+        self._graph = graph
+        self._edges: DataFrame | None = None
         self._held: list[DataFrame] = []
 
     def keep(self, df: DataFrame) -> DataFrame:
-        """Persist ``df`` for the whole program; freed on exit."""
+        """Persist ``df`` for the whole program; freed on exit.  A table
+        the graph owns is returned as it is: the graph frees it."""
+        if self._graph is not None and any(df is t for t in self._graph.owned_caches()):
+            return df
         df = df.persist()
         self._held.append(df)
         return df
+
+    @property
+    def edges(self) -> DataFrame | None:
+        """The edges partitioned for the regime, persisted.  Without an
+        ``edges`` argument: the graph's ``(src, dst)`` superstep layout,
+        looked up on first use (a program that never reads it builds
+        none)."""
+        if self._edges is None and self._graph is not None:
+            self._edges = self.keep(self._graph.superstep_edges(self.bcast))
+        return self._edges
 
     def run(
         self,
@@ -497,30 +532,43 @@ class VertexProgram:
 
 @contextmanager
 def vertex_program(
-    verts: DataFrame, edges: DataFrame | None = None, n: int | None = None
+    graph: LinkGraph | None = None,
+    verts: DataFrame | None = None,
+    edges: DataFrame | None = None,
+    n: int | None = None,
 ) -> Iterator[VertexProgram]:
-    """Superstep set-up shared by every vertex-program operator: persist
-    ``verts`` (one row per vertex) and count it unless the caller already
-    knows ``n``; pick the regime — ``bcast`` when the V-row state fits a
-    broadcast (the message join is map-side), else the state shuffle-joins
-    src-partitioned edges; partition ``edges`` for that regime ONCE and
-    cache it (``plan_superstep_edges``: no per-superstep exchange is ever
-    proportional to E).  The edge cache has no eager count — superstep 1
-    materializes it en route.  Every frame the program persists is
-    unpersisted on exit, whether or not the body raised."""
+    """Superstep set-up shared by every vertex-program operator.
+
+    ``verts`` (one row per vertex) defaults to ``graph``'s vertex set and
+    ``n`` to its row count; otherwise ``verts`` is persisted and counted
+    unless the caller knows ``n``.  The regime is ``bcast`` when the V-row
+    state fits a broadcast (the message join is map-side), else the state
+    shuffle-joins src-partitioned edges.  ``edges``, when given, is
+    partitioned for that regime ONCE and cached (``plan_superstep_edges``:
+    no per-superstep exchange is ever proportional to E); without it
+    ``vp.edges`` is the graph's own layout.  No eager count: superstep 1
+    materializes the edge cache en route.
+
+    A materialized ``graph`` owns its vertex set, count and layouts
+    (``LinkGraph`` docstring): they are shared with every other call and
+    the program neither persists nor frees them.  Every frame the program
+    persists itself is unpersisted on exit, whether or not the body
+    raised."""
     from tcr_kcore_spark.plans.partitioning import (
         broadcast_max_rows,
         plan_superstep_edges,
     )
 
-    vp = VertexProgram()
+    vp = VertexProgram(graph)
     try:
+        if verts is None:
+            verts, n_graph = graph.vertex_set()
+            n = n_graph if n is None else n
         vp.verts = vp.keep(verts)
         vp.n = vp.verts.count() if n is None else n
         vp.bcast = vp.n <= broadcast_max_rows()
         if edges is not None:
-            edges = vp.keep(plan_superstep_edges(edges, vp.bcast))
-        vp.edges = edges
+            vp._edges = vp.keep(plan_superstep_edges(edges, vp.bcast))
         yield vp
     finally:
         for df in vp._held:

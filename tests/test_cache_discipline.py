@@ -6,6 +6,13 @@ blocks (DataFrame.unpersist is a CacheManager op; localCheckpoint persists
 the underlying RDD directly).  These tests assert the persistent-RDD set
 returns to its baseline after each operator's result is released — a
 pipeline can now call operators repeatedly without accumulating blocks.
+
+Ownership rule: a materialized graph owns its edge cache and its derived
+tables (vertex set, out-degrees, superstep layouts, symmetrized view), and
+an operator call leaves exactly those behind — the persistent-RDD set is
+the baseline plus the graph-owned RDDs and the CacheManager holds only
+graph-owned plans — until ``g.unpersist()`` returns to the baseline taken
+before ``materialize()``.
 """
 
 from __future__ import annotations
@@ -24,6 +31,49 @@ from tests import oracles
 
 def _persistent_ids(spark) -> set:
     return set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
+
+
+def _cache_manager(spark):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
+def _owned_entries(spark, g: LinkGraph) -> list:
+    """The CacheManager entries behind ``g``'s graph-owned frames."""
+    cm = _cache_manager(spark)
+    found = [cm.lookupCachedData(df._jdf) for df in g.owned_caches()]
+    return [e.get() for e in found if e.isDefined()]
+
+
+def _owned_ids(spark, g: LinkGraph) -> set:
+    """RDD ids of ``g``'s graph-owned caches that have been materialized."""
+    ids = set()
+    for entry in _owned_entries(spark, g):
+        builder = entry.cachedRepresentation().cacheBuilder()
+        if builder.isCachedColumnBuffersLoaded():
+            ids.add(builder.cachedColumnBuffers().id())
+    return ids
+
+
+def _foreign_entries(spark, g: LinkGraph) -> int:
+    """CacheManager entries that are not ``g``'s (the entry list is a
+    private field: read it reflectively)."""
+    cm = _cache_manager(spark)
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)
+    owned = _owned_entries(spark, g)
+    return sum(
+        not any(entries.apply(i).equals(o) for o in owned) for i in range(entries.size())
+    )
+
+
+def _assert_only_graph_owned(spark, g: LinkGraph, base: set, what: str) -> None:
+    """The persistent-RDD set is ``base`` plus exactly ``g``'s RDDs, and
+    the CacheManager holds only ``g``'s plans."""
+    owned = _owned_ids(spark, g)
+    got = _persistent_ids(spark)
+    assert got == base | owned, f"{what} leaked persistent RDDs: {got - base - owned}"
+    assert _foreign_entries(spark, g) == 0, f"{what} left cached frames behind"
 
 
 def _graph(spark) -> LinkGraph:
@@ -61,9 +111,10 @@ def test_operators_release_to_baseline(spark):
         triangles_per_vertex,
     )
 
+    spark.catalog.clearCache()
     g = _graph(spark)
-    g.materialize()
     base = _persistent_ids(spark)
+    g.materialize()
 
     runs = [
         lambda: pagerank(g, tol=1e-4, max_iter=6)[0],
@@ -91,9 +142,12 @@ def test_operators_release_to_baseline(spark):
         out = run()
         assert out.count() >= 1
         release_state(out)
-        leaked = _persistent_ids(spark) - base
-        assert leaked == set(), f"operator #{i} leaked persistent RDDs: {leaked}"
+        _assert_only_graph_owned(spark, g, base, f"operator #{i}")
+    # the calls shared the graph's tables rather than building their own
+    assert len(g.owned_caches()) > 1
     g.unpersist()
+    assert _persistent_ids(spark) == base
+    assert _cache_manager(spark).isEmpty()
 
 
 def test_densify_and_ingest_release_to_baseline(spark):
@@ -121,10 +175,20 @@ def test_scc_error_exit_releases_to_baseline(spark):
 
     # a 30-cycle needs more than 2 min-propagation rounds per direction
     g = LinkGraph(edges_df(spark, [(i, (i + 1) % 30) for i in range(30)]), directed=True)
+    spark.catalog.clearCache()
     base = _persistent_ids(spark)
     with pytest.raises(RuntimeError, match="max_inner=2"):
         scc(g, max_inner=2)
     assert _persistent_ids(spark) - base == set()
+    # on a materialized graph the error exit keeps exactly the graph's own
+    # tables, and unpersist returns to the baseline before materialize()
+    g.materialize()
+    with pytest.raises(RuntimeError, match="max_inner=2"):
+        scc(g, max_inner=2)
+    _assert_only_graph_owned(spark, g, base, "scc")
+    g.unpersist()
+    assert _persistent_ids(spark) == base
+    assert _cache_manager(spark).isEmpty()
 
 
 def test_vertex_programs_error_exit_release_to_baseline(spark, tmp_path, monkeypatch):
@@ -137,7 +201,12 @@ def test_vertex_programs_error_exit_release_to_baseline(spark, tmp_path, monkeyp
     only failure point for operators without ``checkpoint_dir``).  The
     cache is cleared before each case: the CacheManager dedupes identical
     plans, so one case's leaked vertex cache would hide the next case's
-    leak of the same frame."""
+    leak of the same frame.
+
+    Every case runs on a graph that is not materialized (everything the
+    call persisted must go) and on a materialized one, whose tables the
+    cleared cache makes it rebuild: the exit keeps exactly the graph-owned
+    caches, and ``unpersist`` returns to the baseline."""
     import pytest
 
     from tcr_kcore_spark import superstep
@@ -194,15 +263,21 @@ def test_vertex_programs_error_exit_release_to_baseline(spark, tmp_path, monkeyp
         base = _persistent_ids(spark)
         with pytest.raises(exc, match=match):
             run()
-        leaked = _persistent_ids(spark) - base
-        assert leaked == set(), f"{name} leaked persistent RDDs: {leaked}"
-        cache = spark._jsparkSession.sharedState().cacheManager()
-        assert cache.isEmpty(), f"{name} left cached frames behind"
+        _assert_only_graph_owned(spark, g, base, name)
 
-    for name, run in cases.items():
-        if name not in no_checkpoint_dir:
-            assert_released(name, lambda: run(str(bad)), FileExistsError, "")
-        monkeypatch.setattr(superstep, "truncate_lineage", fail_second_call())
-        assert_released(name, lambda: run(None), RuntimeError, "injected superstep failure")
-        monkeypatch.setattr(superstep, "truncate_lineage", real_truncate)
+    def run_cases():
+        for name, run in cases.items():
+            if name not in no_checkpoint_dir:
+                assert_released(name, lambda: run(str(bad)), FileExistsError, "")
+            monkeypatch.setattr(superstep, "truncate_lineage", fail_second_call())
+            assert_released(name, lambda: run(None), RuntimeError, "injected superstep failure")
+            monkeypatch.setattr(superstep, "truncate_lineage", real_truncate)
+
+    run_cases()
+    assert g.owned_caches() == []
+    base = _persistent_ids(spark)
+    g.materialize()
+    run_cases()
+    g.unpersist()
+    assert _persistent_ids(spark) == base
     cg.unpersist()

@@ -68,3 +68,40 @@ def test_degree_stats(spark):
     e = edges_df(spark, [(0, 1), (0, 2), (0, 3), (1, 2)])
     stats = LinkGraph.from_edges(e).degree_stats()
     assert stats["v"] == 2 and stats["e"] == 4 and stats["max_deg"] == 3
+
+
+def test_graph_owned_tables_are_shared_and_survive_clear_cache(spark):
+    """A materialized graph builds its derived tables once and hands the
+    same frames to every caller; after ``spark.catalog.clearCache()`` it
+    rebuilds them (and re-persists its edges) rather than handing out
+    uncached frames.  A graph that is not materialized owns nothing."""
+    e = edges_df(spark, [(0, 1), (1, 2), (2, 0), (3, 0)])
+    g = LinkGraph.from_edges(e, directed=True)
+    verts, n = g.vertex_set()
+    assert n is None and not verts.is_cached and g.owned_caches() == []
+    assert g.undirected_view() is not g.undirected_view()
+
+    g.materialize()
+    verts, n = g.vertex_set()
+    layout = g.superstep_edges(bcast=True)
+    view = g.undirected_view()
+    assert n == 4 and g.vertex_set()[0] is verts
+    assert g.superstep_edges(bcast=True) is layout
+    assert g.superstep_edges(bcast=False) is not layout
+    assert g.undirected_view() is view and not view.directed
+    assert g.out_degree_table() is g.out_degree_table()
+    assert {r["id"]: r["out_deg"] for r in g.out_degree_table().collect()} == {
+        0: 1, 1: 1, 2: 1, 3: 1
+    }
+
+    spark.catalog.clearCache()
+    verts2, n2 = g.vertex_set()
+    assert verts2 is not verts and n2 == 4
+    for df in (verts2, g.edges, g.superstep_edges(bcast=True), g.undirected_view().edges):
+        assert df.storageLevel.useMemory
+    assert {r["id"] for r in verts2.collect()} == {0, 1, 2, 3}
+    assert g.undirected_view().vertex_set()[1] == 4
+
+    g.unpersist()
+    assert g.owned_caches() == [] and view.owned_caches() == []
+    assert not g.edges.storageLevel.useMemory

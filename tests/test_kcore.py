@@ -372,3 +372,53 @@ def test_layered_bz_arrays_matches_oracle():
         dst = np.concatenate([b, a])
         ids, core = _layered_bz_arrays(src, dst)
         assert dict(zip(ids.tolist(), core.tolist())) == want
+
+
+def _nodes_below(df, name: str) -> set:
+    """Physical-plan node names in the subtree under the first ``name``
+    node of ``df``'s plan (a cached scan is a leaf: its build plan is not
+    part of this query)."""
+
+    def walk(p, under: bool):
+        if p.nodeName().startswith("AdaptiveSparkPlan"):
+            p = p.inputPlan()
+        here = under or p.nodeName() == name
+        found = {p.nodeName()} if under else set()
+        kids = p.children()
+        for i in range(kids.size()):
+            found |= walk(kids.apply(i), here)
+        return found
+
+    return walk(df._jdf.queryExecution().executedPlan(), False)
+
+
+def test_local_kernel_reads_cached_view_of_materialized_directed_graph(spark, monkeypatch):
+    """The one-task kernel's ``coalesce(1)`` input: a directed graph that is
+    not materialized symmetrizes per call below the coalesce (an exchange
+    and an aggregate); a materialized one reads its cached view."""
+    import importlib
+
+    # the module, not the ``operators.kcore`` function the package exports
+    kc = importlib.import_module("tcr_kcore_spark.operators.kcore")
+    kernels = []
+    real = kc.truncate_lineage
+
+    def capture(df):
+        kernels.append(df)
+        return real(df)
+
+    monkeypatch.setattr(kc, "truncate_lineage", capture)
+    edges = oracles.er_graph(n=80, avg_deg=6, seed=11)
+    want = oracles.coreness(edges)
+    g = LinkGraph.from_edges(edges_df(spark, edges), directed=True)
+    shuffles = {"Exchange", "HashAggregate"}
+
+    kcore(g)
+    assert shuffles & _nodes_below(kernels[-1], "Coalesce")
+    g.materialize()
+    out, st = kcore(g)
+    assert st.local_finish_secs > 0
+    below = _nodes_below(kernels[-1], "Coalesce")
+    assert "InMemoryTableScan" in below and not shuffles & below, below
+    assert {r["id"]: r["coreness"] for r in out.collect()} == want
+    g.unpersist()

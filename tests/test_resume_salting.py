@@ -45,6 +45,23 @@ def test_pagerank_checkpoint_resume_identical(spark, tmp_path):
         assert got[v] == pytest.approx(want, abs=1e-9), v
 
 
+def test_resume_rejects_checkpoint_of_another_schema(spark, tmp_path):
+    """A checkpoint whose state schema differs from the operator's init
+    state (pagerank's state before it carried ``w``) fails on resume with
+    an error naming both schemas, not deep inside a join."""
+    from tcr_kcore_spark.superstep import run_supersteps
+
+    ck = str(tmp_path / "old_pr_ck")
+    old = spark.range(5).select("id", F.lit(1.0).alias("rank"), F.lit(0.0).alias("delta"))
+    run_supersteps(old, lambda s, i: s, max_iter=2, checkpoint_dir=ck, checkpoint_every=1)
+    g = LinkGraph.from_edges(edges_df(spark, [(0, 1), (1, 2), (2, 0)]), directed=True)
+    with pytest.raises(ValueError) as err:
+        pagerank(g, checkpoint_dir=ck, resume=True)
+    msg = str(err.value)
+    assert "struct<id:bigint,rank:double,delta:double>" in msg
+    assert "struct<id:bigint,w:double,rank:double,delta:double>" in msg
+
+
 def test_checkpoint_manifest_contents(spark, tmp_path):
     edges = oracles.er_graph(n=100, avg_deg=4)
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)

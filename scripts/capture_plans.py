@@ -268,6 +268,9 @@ def main() -> None:
             text = UNITS[name](spark)
         except Exception as exc:  # capture what we can, keep going
             text = f"ERROR capturing {name}: {exc!r}\n"
+        # each unit builds its own graph: drop the last unit's caches, so no
+        # unit plans over a table an earlier one materialized
+        spark.catalog.clearCache()
         path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(text)

@@ -170,8 +170,8 @@ def scc(
     # the vertex set and its count are the graph's when it is
     # materialized, else persisted and counted for this call
     verts, n_live = graph.vertex_set()
-    own_verts = n_live is None
-    if own_verts:
+    per_call = n_live is None
+    if per_call:
         verts = verts.persist()
         n_live = verts.count()
     bcast = n_live <= broadcast_max_rows()
@@ -187,7 +187,7 @@ def scc(
         for df in (live_v, live_e, *retired, *frames):
             if df is not None:
                 release_state(df)
-        if own_verts:
+        if per_call:
             verts.unpersist()
         raise RuntimeError(msg)
 
@@ -278,7 +278,7 @@ def scc(
     out = truncate_lineage(labels.select("id", scc_id.alias("scc_id")))
     for df in retired:
         release_state(df)
-    if own_verts:
+    if per_call:
         verts.unpersist()
     stats.wall_secs = time.time() - t0
     stats.converged = True

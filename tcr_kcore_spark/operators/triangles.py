@@ -60,8 +60,9 @@ def triangles_per_vertex(g: LinkGraph) -> DataFrame:
     # one planning action: vertex count (broadcast decision for the final
     # zero-fill) + id range (int32 narrowing gate below).  The vertex set
     # is the graph's when it is materialized, else persisted for this call
-    verts, shared = g.undirected_view().vertex_set()
-    if shared is None:
+    verts, n = g.undirected_view().vertex_set()
+    per_call = n is None
+    if per_call:
         verts = verts.persist()
     vrow = verts.agg(
         F.count(F.lit(1)).alias("n"),
@@ -145,7 +146,7 @@ def triangles_per_vertex(g: LinkGraph) -> DataFrame:
     out = truncate_lineage(out)
     tris.unpersist()
     o.unpersist()
-    if shared is None:
+    if per_call:
         verts.unpersist()
     return out
 

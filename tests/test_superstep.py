@@ -75,8 +75,9 @@ def test_vertex_program_job_budgets(spark):
     pagerank, the first call, builds them (its count is the only counting
     job of the vertex set), and the later calls read them instead of
     persisting, counting and partitioning their own.  Before → after
-    graph-owned tables: pagerank 19 → 21 (it pays the shared out-degree
-    table's own job and the vertex count), personalized_pagerank 23 → 19,
+    graph-owned tables: pagerank 19 → 21 (the first call builds the
+    shared tables; the out-degree cache materializes as its own job),
+    personalized_pagerank 23 → 19,
     components 23 → 17, bfs 23 → 17, sssp 23 → 19 (its weighted edges
     stay per call), lpa 17 → 11, hits (3 steps) 47 → 47, louvain_phase1
     (3 rounds) 54 → 50."""
@@ -137,6 +138,8 @@ def test_shared_layout_no_edge_shuffle(spark):
     """Once one operator has run on a materialized graph, bfs, lpa and
     pagerank read its cached superstep layout: no stage of theirs writes an
     E-row shuffle (per-stage shuffle records from Spark's status store)."""
+    from py4j.protocol import Py4JJavaError
+
     from tcr_kcore_spark.graph import LinkGraph
     from tcr_kcore_spark.operators import bfs, connected_components, label_propagation, pagerank
     from tcr_kcore_spark.superstep import release_state
@@ -162,7 +165,15 @@ def test_shared_layout_no_edge_shuffle(spark):
         release_state(out)
         sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
         stages = {s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds}
-        return max(store.lastStageAttempt(s).shuffleWriteRecords() for s in stages)
+        return max(written(s) for s in stages)
+
+    def written(stage: int) -> int:
+        try:
+            return store.lastStageAttempt(stage).shuffleWriteRecords()
+        except Py4JJavaError:
+            # past spark.ui.retainedStages the store drops skipped stages
+            # first (they ran nothing); this call's run stages are newest
+            return 0
 
     # the first call builds the layout: one E-row exchange
     assert max_stage_shuffle_records("components", lambda: connected_components(g)) >= n_edges

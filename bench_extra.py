@@ -141,62 +141,19 @@ def cell_lpa(spark, g):
 
 
 def cell_triangles(spark, g):
-    """Mirrors triangles_per_vertex's internal phases for attribution."""
-    from pyspark.sql import functions as F
+    """One triangles_per_vertex call, and the regime it ran in."""
+    from tcr_kcore_spark.operators.triangles import triangles_per_vertex
 
-    from tcr_kcore_spark.operators.triangles import _oriented, triangles_per_vertex
-    from tcr_kcore_spark.superstep import truncate_lineage
-
-    # phase attribution run
     t0 = time.time()
-    o = _oriented(g).persist()
-    n_o = o.count()
+    out = triangles_per_vertex(g)
     t1 = time.time()
-    w = (
-        o.alias("a")
-        .join(o.alias("b"), F.col("a.src") == F.col("b.src"))
-        .where(
-            (F.col("a.dd") < F.col("b.dd"))
-            | ((F.col("a.dd") == F.col("b.dd")) & (F.col("a.dst") < F.col("b.dst")))
-        )
-        .select(
-            F.col("a.src").alias("apex"),
-            F.col("a.dst").alias("u"),
-            F.col("b.dst").alias("v"),
-        )
-    )
-    closing = o.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    tris = w.join(closing, ["u", "v"], "left_semi").persist()
-    n_tris = tris.count()
+    n = out.count()
     t2 = time.time()
-    per_vertex = (
-        tris.select(F.col("apex").alias("id"))
-        .unionByName(tris.select(F.col("u").alias("id")))
-        .unionByName(tris.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("triangles"))
-    )
-    out = (
-        g.undirected_view()
-        .vertices()
-        .join(per_vertex, "id", "left")
-        .select("id", F.coalesce(F.col("triangles"), F.lit(0)).alias("triangles"))
-    )
-    out = truncate_lineage(out)
-    t3 = time.time()
-    tris.unpersist()
-    o.unpersist()
-    # clean end-to-end run (same fresh-ish JVM, caches dropped)
-    t4 = time.time()
-    triangles_per_vertex(g).count()
-    t5 = time.time()
     return {
-        "orient_count": round(t1 - t0, 3),
-        "wedge_close_count": round(t2 - t1, 3),
-        "credit_final": round(t3 - t2, 3),
-        "e2e_second_run": round(t5 - t4, 3),
-        "oriented_edges": n_o,
-        "closed_wedges": n_tris,
+        "regime": out.regime,
+        "to_result": round(t1 - t0, 3),
+        "final_count": round(t2 - t1, 3),
+        "vertices": n,
     }
 
 

@@ -26,6 +26,7 @@ its CSR/CSC topology once and every GAS program reuses it
 
 - the superstep edge layout, one per regime (``superstep_edges``);
 - the vertex set and its row count (``vertex_set``);
+- the edge row count that ``materialize()`` took (``edge_count``);
 - the out-degree table (``out_degree_table``);
 - for a directed graph, its symmetrized view (``undirected_view``), itself
   a materialized graph with tables of its own.
@@ -71,6 +72,7 @@ class LinkGraph:
     # graph-owned derived tables (module docstring), keyed by name
     _tables: dict = field(default_factory=dict, repr=False, compare=False)
     _n_verts: int | None = field(default=None, repr=False, compare=False)
+    _n_edges: int | None = field(default=None, repr=False, compare=False)
     _view: "LinkGraph | None" = field(default=None, repr=False, compare=False)
 
     # -- constructors -------------------------------------------------------
@@ -158,6 +160,7 @@ class LinkGraph:
             df.unpersist()
         self._tables.clear()
         self._n_verts = None
+        self._n_edges = None
         if self._view is not None:
             self._view.unpersist()
             self._view = None
@@ -167,9 +170,11 @@ class LinkGraph:
         return self
 
     def materialize(self) -> int:
-        """Force the cache and return the edge count."""
+        """Force the cache and return the edge count (kept: see
+        ``edge_count``)."""
         self.cache()
-        return self.edges.count()
+        self._n_edges = self.edges.count()
+        return self._n_edges
 
     def owned_caches(self) -> list[DataFrame]:
         """Every persisted frame this graph owns: the edge cache, the
@@ -208,6 +213,16 @@ class LinkGraph:
         if self._n_verts is None:
             self._n_verts = verts.count()
         return verts, self._n_verts
+
+    def edge_count(self) -> int:
+        """Row count of the edge table: the count ``materialize()`` took,
+        else counted now (and kept while the graph is materialized)."""
+        if self._n_edges is not None:
+            return self._n_edges
+        n = self.edges.count()
+        if self._cached:
+            self._n_edges = n
+        return n
 
     def out_degree_table(self) -> DataFrame:
         """``out_degrees()``, graph-owned on a materialized graph."""

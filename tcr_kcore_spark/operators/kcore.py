@@ -25,10 +25,18 @@ Spark formulations:
   coreness (Lü et al. 2016).  Each round is one join + one window — O(few
   tens) of rounds total vs O(Σ peel rounds); this is the scale path, and
   converges to the SAME exact coreness as the peel.
+- the driver-local regime: a graph (hindex) or peel residual (peel) within
+  the caps of ``plans.partitioning.local_caps`` is collected to the driver
+  once and peeled there by the layered BZ kernel (``_layered_bz_arrays``)
+  — the reference's phase 2, which re-peels a small residual on one
+  device (``TCR/src/demo/KCore_subscr_one.py:79-141``).
 
-Isolated vertices: the engine's vertex set derives from edges after
-self-loop removal, so none arise; the reference's output writer likewise
-skips zero-degree vertices (``KCoreGPU-master/.../src/graph.cpp:133-136``).
+Self-loops count in no degree in any path, as in the reference
+(``KCoreGPU-master/.../src/graph.cpp:87-101``).  Every vertex of the
+undirected graph's ``vertices()`` gets a row: one whose only edge is a
+self-loop has coreness 0.  (The undirected view of a directed graph drops
+self-loops when it is built, so there such a vertex is not a vertex at all,
+as the reference's writer skips zero-degree vertices, ``graph.cpp:133-136``.)
 """
 
 from __future__ import annotations
@@ -40,7 +48,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
-from tcr_kcore_spark.plans.partitioning import state_side
+from tcr_kcore_spark.plans.partitioning import (
+    local_caps,
+    local_regime,
+    simple_pairs,
+    solve_local,
+    state_side,
+)
 from tcr_kcore_spark.superstep import (
     checkpoint_block,
     SuperstepStats,
@@ -95,29 +109,30 @@ def kcore(
     backoff (see _peel).  Set SPARK_GRAFT_CASCADE_PROBE=0 to force pure
     cascade rounds (A/B).
 
-    ``local_finish_vertices/edges`` (peel mode): once the survivor set
-    shrinks below both bounds, the residual graph is peeled to completion
-    inside ONE ``applyInPandas`` task (a CSR-block NumPy BZ kernel with
-    the current k as floor) — the reference's phase 2, which re-peels the
-    small residual on a single device (``KCore_subscr_one.py:79-141``).
-    This collapses the long tail of tiny peel rounds (each a full Spark
-    job) into one task.  Set local_finish_vertices=0 to disable (pure
-    distributed rounds).
+    ``local_finish_vertices/edges`` cap the driver-local regime
+    (``plans.partitioning.local_caps``: V ≤ ``broadcast_max_rows()`` and
+    at most ``LOCAL_MAX_ENTRIES`` symmetric entries); 0 disables it (pure
+    distributed rounds).  In hindex mode a graph within the caps, and with
+    no checkpoint or resume, is solved outright: one ``toArrow()`` collect
+    of its canonical edges, the layered BZ kernel on the driver, and a
+    local relation back (``plans.partitioning.solve_local`` — no Python
+    worker, no rounds).  In
+    peel mode, once the survivor set shrinks within the caps, the residual
+    goes the same way with the current k as floor — the reference's phase
+    2, collapsing the long tail of tiny peel rounds (each a full Spark job)
+    into one collect.
 
-    The trigger is EDGE-mass-driven and free: deg[v] is maintained as the
-    degree to survivors, so sum(deg) in the per-round bounds action IS the
-    exact residual edge count — no probe join.  Cap rationale: the array
-    BZ kernel peels ~1.1M edges/s single-task, linear in E (149k/599k/
-    2392k edges in 0.13/0.51/2.26 s — scripts/bench_bz_finisher.py,
-    BENCH/bz_finisher.jsonl), so the 8M edge cap bounds the serial tail at
-    ≤ ~8 s (~130 MB task footprint at 16 B/edge); the vertex cap (2M,
-    ~80 MB of id/bin arrays) only guards kernel memory.  On the
-    64x-disjoint 153M-edge bench the residual holds >8M edges until the
-    final cascade, so the finisher never fires there
-    (BENCH/peel_scale.jsonl local_finish_secs=0.0) — the cap pays off on
-    graphs whose residual shrinks gradually (test_peel_midway_edge_mass_
-    handoff exercises a mid-peel fire).  ``stats.local_finish_secs``
-    reports the actual cost per run."""
+    The peel's trigger is EDGE-mass-driven and free: deg[v] is maintained
+    as the degree to survivors, so sum(deg) in the per-round bounds action
+    IS the exact residual edge count — no probe join.  Cap rationale: the
+    BZ kernel is linear in E (BENCH/bz_finisher.jsonl: 1.1M edges/s for
+    the serial kernel this one replaced), so the 8M cap bounds the serial
+    tail at a few seconds.  On the 64x-disjoint 153M-edge bench the
+    residual holds >8M edges until the final cascade, so the finisher
+    never fires there (BENCH/peel_scale.jsonl local_finish_secs=0.0) — the
+    cap pays off on graphs whose residual shrinks gradually
+    (test_peel_midway_edge_mass_handoff exercises a mid-peel fire).
+    ``stats.local_finish_secs`` reports the actual cost per run."""
     g = graph.undirected_view()
     if mode == "hindex":
         return _hindex(
@@ -202,7 +217,7 @@ def _hindex_round(
     ``GASProgram.py:142-149``).
     """
     maybe_b = lambda df: state_side(df, bcast)
-    e = edges
+    e = edges.where(F.col("src") != F.col("dst"))  # the reference drops self-loops
     if changed is not None:
         targets = (
             e.join(maybe_b(changed.select(F.col("id").alias("src"))), "src", "left_semi")
@@ -236,12 +251,15 @@ def _hindex_round(
             .groupBy("id")
             .agg(F.max("cap").alias("h"))
         )
-    # est is monotone non-increasing; vertices absent from msgs keep est
+    # est is monotone non-increasing.  A vertex absent from msgs keeps est
+    # when pruning skipped it; in a full round it has no neighbor besides
+    # itself, so its h-index is 0
+    absent = F.col("est") if changed is not None else F.lit(0).cast("long")
     return (
         est.join(maybe_b(h), "id", "left")
         .select(
             "id",
-            F.least(F.col("est"), F.coalesce(F.col("h"), F.col("est"))).alias("new_est"),
+            F.least(F.col("est"), F.coalesce(F.col("h"), absent)).alias("new_est"),
             "est",
         )
         .select(
@@ -262,59 +280,38 @@ def _hindex(
     local_finish_vertices: int = 2_000_000,
     local_finish_edges: int = 8_000_000,
 ) -> tuple[DataFrame, SuperstepStats]:
-    # the symmetric degree table (g is undirected; shared when the graph
-    # is materialized)
-    degrees = g.out_degree_table()
-    # ONE planning action for V, E (= sum of symmetric degrees) and max
-    # degree — r5 paid three driver actions here (vertices().count(),
-    # edges.count(), max-degree agg) before the first superstep.
-    prow = degrees.agg(
-        F.count(F.lit(1)).alias("v"),
-        F.sum("out_deg").alias("e"),
-        F.max("out_deg").alias("mx"),
-    ).first()
-    n_verts = prow["v"]
-    n_edges = int(prow["e"] or 0)
-    hub_safe = (prow["mx"] or 0) > _HUB_WINDOW_MAX_DEG
-
-    # Whole-graph local finish (r6): when the graph fits the SAME caps the
-    # peel's phase-2 finisher documents (kcore() docstring: the array BZ
-    # kernel peels ~1.1M edges/s, so ≤8M symmetric entries bounds the
-    # serial task at ~8 s and ~130 MB), the h-index fixpoint is a worse
-    # plan than solving outright: tens of join+window rounds, each a full
-    # Spark job, against ONE applyInPandas task.  Both compute the same
-    # exact coreness (the iterated h-index fixpoint IS the BZ peel value,
-    # Lü et al. 2016), so this is a physical-plan choice, not an
-    # approximation — the distributed rounds remain the scale path above
-    # the caps (and under checkpoint/resume, whose manifests describe the
-    # round-structured state).
-    if (
-        0 < local_finish_vertices
-        and n_verts <= local_finish_vertices
-        and n_edges <= local_finish_edges
-        and checkpoint_dir is None
-        and not resume
-    ):
+    # Whole-graph local solve: a graph inside the driver-local regime
+    # (plans.partitioning.local_regime, capped further by this call's
+    # local_finish_* keywords) is peeled to completion by the layered BZ
+    # kernel on the driver instead of tens of join+window rounds, each a
+    # full Spark job.  Both compute the same exact coreness (the iterated
+    # h-index fixpoint IS the BZ peel value, Lü et al. 2016), so this is a
+    # physical-plan choice, not an approximation — the distributed rounds
+    # remain the scale path above the caps and under checkpoint/resume.
+    # On a materialized graph the gate reads kept counts: no planning
+    # aggregate, no degree table, one collect of the cached edges.
+    if local_regime(g, local_finish_vertices, local_finish_edges, checkpoint_dir, resume):
         stats = SuperstepStats()
         t0 = time.time()
-        # coalesce(1), not a shuffle: the one task scans the symmetric edge
-        # cache directly — the graph's own, or for a materialized directed
-        # graph its cached view.  A directed graph that is not materialized
-        # still pays its per-call view's exchange and distinct below the
-        # coalesce, and that final aggregate then runs inside the one task.
-        local = (
-            g.edges.select("src", "dst")
-            .where(F.col("src") < F.col("dst"))  # one row per undirected edge
-            .coalesce(1)
-            .mapInArrow(_bz_layered_arrow(), "id long, coreness long")
-        )
-        out = truncate_lineage(local)
-        stats.actions += 2  # the planning agg + the kernel materialization
+        out = solve_local(g.edges, _coreness_kernel())
+        stats.actions += 1  # the one collect
         stats.supersteps = 1
         stats.converged = True
         stats.local_finish_secs = round(time.time() - t0, 3)
         stats.wall_secs = time.time() - t0
         return out, stats
+
+    # the symmetric degree table (g is undirected; shared when the graph
+    # is materialized)
+    degrees = g.out_degree_table()
+    # ONE planning action for V and max degree — r5 paid three driver
+    # actions here (vertices().count(), edges.count(), max-degree agg)
+    # before the first superstep.
+    prow = degrees.agg(
+        F.count(F.lit(1)).alias("v"), F.max("out_deg").alias("mx")
+    ).first()
+    n_verts = prow["v"]
+    hub_safe = (prow["mx"] or 0) > _HUB_WINDOW_MAX_DEG
 
     # Delta-pruning pays only once the changed set is small: the targets
     # computation costs an extra edge scan + distinct + broadcast per
@@ -330,7 +327,10 @@ def _hindex(
         return last_changed["n"] == 0
 
     # the degree table is the vertex frame: V is known from the planning
-    # aggregate, and init projects the cached degrees (no truncation job)
+    # aggregate, and init projects the cached degrees (no truncation job).
+    # A self-loop counts in out_deg but sends no message: est₀ is then an
+    # upper bound of the loop-free degree, and the fixpoint reached from
+    # any upper bound of the coreness is the coreness.
     with vertex_program(g, degrees, n=n_verts) as vp:
 
         def step(state: DataFrame, i: int) -> DataFrame:
@@ -391,32 +391,37 @@ def kcore_hindex_rounds(
 # ---------------------------------------------------------------------------
 
 
-def _layered_bz_arrays(src, dst):
-    """Vectorized whole-graph exact coreness over symmetric NumPy edge
-    arrays: the layered ("parallel") Batagelj–Zaveršnik peel.  Instead of
-    the serial process-one-vertex-at-a-time loop of ``_bz_finish_kernel``
-    (pure-Python over every adjacency entry, measured ~1.1M edges/s), each
-    inner step peels the WHOLE ``deg ≤ k`` frontier at once with NumPy
-    gathers: the frontier's adjacency slices are concatenated via
-    repeat/cumsum, decrements land via ``bincount``, and ``k`` jumps to
-    the minimum remaining degree between levels.  Every adjacency entry is
-    gathered exactly once over the run (when its source peels), so total
-    work is O(E) vectorized + O(#levels) small steps.  Returns
-    (ids, coreness)."""
+def _layered_bz_arrays(n, s, d, k_floor: int = 0):
+    """Vectorized exact coreness of the simple graph on dense vertices
+    ``0..n-1`` with one ``(s, d)`` row per undirected edge (both NumPy):
+    the layered ("parallel") Batagelj–Zaveršnik peel.  Instead of the
+    serial process-one-vertex-at-a-time loop (pure Python over every
+    adjacency entry), each inner step peels the WHOLE ``deg ≤ k`` frontier
+    at once with NumPy gathers: the frontier's adjacency slices are
+    concatenated via repeat/cumsum, decrements land via ``bincount``, and
+    ``k`` jumps to the minimum remaining degree between levels.  Every
+    adjacency entry is gathered exactly once over the run (when its
+    source peels), so total work is O(E) vectorized + O(#levels) small
+    steps.
+
+    ``k_floor`` is the starting k: continuing a partial distributed peel
+    is order-independent, so peeling the residual (whose degrees already
+    reflect every earlier decrement) from the current k assigns exactly
+    the original coreness — a residual degree ≤ ``k_floor`` means "would
+    have peeled at the current k" and takes ``k_floor``.  A vertex with no
+    edge gets ``k_floor``.  Returns the coreness array."""
     import numpy as np
 
-    ids, s = np.unique(src, return_inverse=True)  # symmetric: src covers all
-    d = np.searchsorted(ids, dst)
-    n = ids.shape[0]
-    deg = np.bincount(s, minlength=n).astype(np.int64)
+    src = np.concatenate([s, d])
+    dst = np.concatenate([d, s])
+    deg = np.bincount(src, minlength=n).astype(np.int64)
     row_ptr = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(deg, out=row_ptr[1:])
-    order = np.argsort(s, kind="stable")
-    adj = d[order]
+    adj = dst[np.argsort(src, kind="stable")]
     alive = np.ones(n, dtype=bool)
     core = np.zeros(n, dtype=np.int64)
     cur = deg.copy()
-    k = 0
+    k = k_floor
     n_alive = n
     while n_alive:
         mn = int(cur[alive].min())
@@ -439,113 +444,16 @@ def _layered_bz_arrays(src, dst):
                 if t.size:
                     cur -= np.bincount(t, minlength=n)
             frontier = np.flatnonzero(alive & (cur <= k))
-    return ids, core
+    return core
 
 
-def _bz_layered_arrow():
-    """mapInArrow kernel wrapping :func:`_layered_bz_arrays` for the
-    hindex-mode whole-graph local finish.  The caller ships each
-    undirected edge ONCE (canonical src < dst — half the boundary bytes,
-    guide §2.3) and the symmetric closure is rebuilt here with two O(E)
-    concats; Arrow batches decode straight to NumPy (no pandas round-trip,
-    guide §4.2)."""
+def _coreness_kernel(k_floor: int = 0):
+    """``solve_local`` kernel: ``(id, coreness)`` for every vertex of the
+    collected rows, on the simple graph (``simple_pairs``)."""
 
-    def kernel(batch_iter):
-        import numpy as np
-        import pyarrow as pa
-
-        srcs, dsts = [], []
-        for batch in batch_iter:
-            srcs.append(batch.column(0).to_numpy(zero_copy_only=False))
-            dsts.append(batch.column(1).to_numpy(zero_copy_only=False))
-        if not srcs:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], type=pa.int64()), pa.array([], type=pa.int64())],
-                ["id", "coreness"],
-            )
-            return
-        src = np.concatenate(srcs)
-        dst = np.concatenate(dsts)
-        src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
-        ids, core = _layered_bz_arrays(src, dst)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids), pa.array(core)], ["id", "coreness"]
-        )
-
-    return kernel
-
-
-def _bz_finish_kernel(k_floor: int):
-    """Serial Batagelj–Zaveršnik peel with ``k_floor`` as the starting k —
-    continuing a partial distributed peel is order-independent, so running
-    BZ on the residual (whose degree table already reflects every remote
-    decrement) assigns exactly the original coreness.  Runs as ONE
-    applyInPandas group: the Arrow batch is the whole residual edge block
-    (the "CSR block" — reference phase 2 on one device).
-
-    Array formulation of the bin-sorted BZ algorithm (the same layout as
-    the reference's multicore phase, ``PKC/pkc.c:267-349``): a NumPy CSR
-    block (``row_ptr`` via cumsum of bincount), vertices bin-sorted by
-    degree (``argsort`` + position/bin_start arrays), then the O(E)
-    process-in-degree-order loop with swap-to-bin-front decrements.
-    ~16 bytes/edge + ~40 bytes/vertex — vs ~100+ bytes/edge for the
-    round-2 dict-of-sets version.  ``core[v] = max(k_floor, running max of
-    deg[v] at processing)``: residual degrees ≤ k_floor mean "would have
-    been peeled at the current distributed k", so they take k_floor."""
-
-    def kernel(pdf):
-        import numpy as np
-        import pandas as pd
-
-        src = pdf["src"].to_numpy(dtype="int64", copy=False)
-        dst = pdf["dst"].to_numpy(dtype="int64", copy=False)
-        # densify ids (the table is symmetric, so src covers every endpoint;
-        # use the union anyway for safety with weird inputs)
-        ids = np.unique(np.concatenate([src, dst]))
-        s = np.searchsorted(ids, src)
-        d = np.searchsorted(ids, dst)
-        n = ids.shape[0]
-        # CSR block: counting sort by src
-        deg = np.bincount(s, minlength=n)
-        row_ptr = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(deg, out=row_ptr[1:])
-        order = np.argsort(s, kind="stable")
-        adj = d[order]
-        # bin sort by degree: vert = vertices in ascending-degree order,
-        # pos = each vertex's index in vert, bin_start[dg] = first index of
-        # degree dg in vert (PKC pkc.c:267-349 layout)
-        vert = np.argsort(deg, kind="stable").astype(np.int64)
-        pos = np.empty(n, dtype=np.int64)
-        pos[vert] = np.arange(n, dtype=np.int64)
-        max_deg = int(deg.max()) if n else 0
-        bin_start = np.zeros(max_deg + 2, dtype=np.int64)
-        np.cumsum(np.bincount(deg, minlength=max_deg + 1), out=bin_start[1:])
-        core = np.empty(n, dtype=np.int64)
-        deg = deg.astype(np.int64)
-        k = k_floor
-        for i in range(n):
-            v = vert[i]
-            dv = deg[v]
-            if dv > k:
-                k = dv
-            core[v] = k
-            for j in range(row_ptr[v], row_ptr[v + 1]):
-                u = adj[j]
-                du = deg[u]
-                if du > dv:
-                    # swap u with the first vertex of its degree bin, then
-                    # shrink the bin — u drops one degree in O(1)
-                    pu = pos[u]
-                    pw = bin_start[du]
-                    w = vert[pw]
-                    if u != w:
-                        vert[pu] = w
-                        vert[pw] = u
-                        pos[u] = pw
-                        pos[w] = pu
-                    bin_start[du] = pw + 1
-                    deg[u] = du - 1
-        return pd.DataFrame({"id": ids, "coreness": core})
+    def kernel(src, dst):
+        ids, s, d = simple_pairs(src, dst)
+        return {"id": ids, "coreness": _layered_bz_arrays(ids.shape[0], s, d, k_floor)}
 
     return kernel
 
@@ -556,8 +464,9 @@ def _block_bz_kernel(k: int, span: int):
     all-reduces (``KCore_big.py:208-234``).  One cogrouped ``applyInPandas``
     call per (alive degrees of block, out-edges of block).
 
-    The block runs the same bin-sorted array BZ as ``_bz_finish_kernel``,
-    but over the *global* residual degrees from the degree table, with the
+    The block runs a bin-sorted array BZ (vertices bucketed by degree,
+    the layout of the reference's multicore phase, ``PKC/pkc.c:267-349``)
+    over the *global* residual degrees from the degree table, with the
     adjacency split in two:
 
     - *local* adjacency: in-block neighbors that are alive — decrements
@@ -760,12 +669,15 @@ def _peel(
     stats = SuperstepStats()
     t0 = time.time()
 
+    # the reference drops self-loops (graph.cpp:87-101): they count in no
+    # degree and decrement nothing, and a vertex whose only row is a
+    # self-loop keeps a degree-0 row (one aggregate over every row)
     deg = (
-        g.degrees()
-        .select("id", F.col("degree").cast("long").alias("deg"))
+        g.edges.groupBy(F.col("src").alias("id"))
+        .agg(F.sum((F.col("src") != F.col("dst")).cast("long")).alias("deg"))
         .persist()
     )
-    edges = g.edges.select("src", "dst")
+    edges = g.edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     if local_cascade:
         n_parts = int(n_blocks or spark.conf.get("spark.sql.shuffle.partitions", "32"))
         max_id = deg.agg(F.max("id")).first()[0] or 0
@@ -928,25 +840,25 @@ def _peel(
     # normal backoff cadence; in the ambiguous band the round-2 probe is
     # kept so a wrong prior costs at most one mispriced round.
     probing_on = os.environ.get("SPARK_GRAFT_CASCADE_PROBE", "1") != "0"
+    # the phase-2 handoff's caps: the driver-local regime's
+    max_v, max_e = local_caps(local_finish_vertices, local_finish_edges)
     frac = getattr(stats, "local_edge_frac", -1.0)
     incumbent = "cascade" if (not local_cascade or frac >= 0.5) else "legacy"
     pps: dict = {"cascade": None, "legacy": None}
     probe_countdown, stick = (1, 4) if 0.1 < frac < 0.9 else (4, 4)
     while alive > 0 and stats.supersteps < max_iter:
         # phase-2 handoff: peel the small residual to completion in ONE task
-        if 0 < alive <= local_finish_vertices and res_edges <= local_finish_edges:
+        if 0 < alive <= max_v and res_edges <= max_e:
             survivors = deg.select("id")
             residual = (
                 edges.select("src", "dst")
                 .join(survivors.withColumnRenamed("id", "src"), "src", "left_semi")
                 .join(survivors.withColumnRenamed("id", "dst"), "dst", "left_semi")
             )
-            kernel = _bz_finish_kernel(k_floor=k if k is not None else 0)
-            local = residual.groupBy(F.lit(1).alias("__g")).applyInPandas(
-                kernel, "id long, coreness long"
-            )
             t_fin = time.time()
-            local = truncate_lineage(local)  # materializes the one task
+            # the residual is symmetric: its canonical rows go to the
+            # driver-local kernel (plans.partitioning.solve_local)
+            local = solve_local(residual, _coreness_kernel(k if k is not None else 0))
             stats.actions += 1
             stats.local_finish_secs = round(time.time() - t_fin, 3)
             # survivors with no residual edges peel at the current k
@@ -954,7 +866,7 @@ def _peel(
             isolated = deg.join(local, "id", "left_anti").select(
                 "id", floor.alias("coreness")
             )
-            # `local` (a truncated frame) is the handle _flush releases
+            # `local` is a local relation: _flush has nothing to free
             pending.append((local, local.unionByName(isolated)))
             local_finished = True
             break

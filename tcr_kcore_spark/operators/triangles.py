@@ -17,6 +17,15 @@ Spark formulation — the canonical distributed TC, never a dense matrix:
 3. close the wedge against the oriented edge set: ``(o1.dst, o2.dst) ∈ O``;
 4. each triangle found once → credit all three corners for per-vertex
    counts; global = count of closed wedges.
+
+A small graph skips the wedge join: inside the driver-local regime
+(``plans.partitioning.local_regime``, the gate kcore uses) its canonical
+edges come to the driver in one Arrow collect and ``_triangle_kernel`` runs
+the same four steps in NumPy, unless the graph has more than
+``LOCAL_MAX_WEDGES`` oriented wedges.  ``triangle_count`` and
+``local_clustering_coefficient`` read ``triangles_per_vertex``, so they
+take the same path.  Self-loops close no triangle in either path, and every
+vertex of the undirected graph gets a row.
 """
 
 from __future__ import annotations
@@ -49,11 +58,101 @@ def _oriented(g: LinkGraph) -> DataFrame:
     return e
 
 
+# Oriented wedges above which the driver-local kernel declines and the
+# distributed wedge join runs instead.  Interleaved fresh-JVM runs on 4
+# cores (scripts/bench_local_regime.py, BENCH/local_regime.jsonl): the
+# kernel is single-threaded and the wedge join parallel, so the gap
+# narrows as wedges grow — local 5.4-6.1 s vs 9.7-10.7 s at 41.1M wedges
+# (sf0.1), 12.3-14.5 s vs 17.7-22.5 s at 123.3M (sf0.1 x3).  The cap sits
+# below the largest count measured as a local win.
+LOCAL_MAX_WEDGES = 100_000_000
+
+# Wedges enumerated per kernel chunk: bounds the kernel's scratch arrays
+# (about nine int64 arrays per wedge) to ~150 MB whatever the graph.
+_WEDGE_CHUNK = 1 << 21
+
+
+def _triangle_kernel(src, dst):
+    """``solve_local`` kernel: ``(id, triangles)`` on the simple graph of
+    the collected rows, with the distributed path's (degree, id)
+    orientation.  Vertices are relabelled by their rank in that order, so
+    every undirected edge is oriented from its lower to its higher rank
+    and each triangle is one wedge at its lowest-rank corner whose legs
+    ``u < v`` close by the oriented edge ``u → v``.  Wedges are enumerated
+    apex-chunk by apex-chunk (at most ``_WEDGE_CHUNK`` per chunk) and each
+    wedge probes its closing key ``u·n + v`` in the sorted key array of the
+    oriented edges; within an apex those probe keys ascend.  Returns None
+    (decline) when the graph has more than ``LOCAL_MAX_WEDGES`` oriented
+    wedges."""
+    import numpy as np
+
+    from tcr_kcore_spark.plans.partitioning import simple_pairs
+
+    ids, s, d = simple_pairs(src, dst)
+    n = ids.shape[0]
+    deg = np.bincount(s, minlength=n) + np.bincount(d, minlength=n)
+    rank = np.empty(n, dtype=np.int64)
+    rank[np.lexsort((np.arange(n), deg))] = np.arange(n, dtype=np.int64)
+    rs, rd = rank[s], rank[d]
+    keys = np.sort(np.minimum(rs, rd) * n + np.maximum(rs, rd))
+    apex, leg = keys // n, keys % n
+    out_deg = np.bincount(apex, minlength=n)
+    if int((out_deg * (out_deg - 1) // 2).sum()) > LOCAL_MAX_WEDGES:
+        return None
+    ptr = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(out_deg, out=ptr[1:])
+    # wedges whose first leg is oriented edge i: its later legs at the apex
+    m = keys.shape[0]
+    later = ptr[apex + 1] - np.arange(m, dtype=np.int64) - 1
+    ends = np.cumsum(later)
+    total_wedges = int(ends[-1]) if m else 0
+    cuts = np.searchsorted(ends, np.arange(_WEDGE_CHUNK, total_wedges, _WEDGE_CHUNK))
+    tri = np.zeros(n, dtype=np.int64)
+    for lo, hi in zip(np.concatenate([[0], cuts]), np.concatenate([cuts, [m]])):
+        cnt = later[lo:hi]
+        total = int(cnt.sum())
+        if not total:
+            continue
+        first = np.repeat(np.arange(lo, hi, dtype=np.int64), cnt)
+        stops = np.cumsum(cnt)
+        second = first + 1 + np.arange(total, dtype=np.int64) - np.repeat(stops - cnt, cnt)
+        u, v = leg[first], leg[second]
+        probe = u * n + v
+        at = np.minimum(np.searchsorted(keys, probe), m - 1)
+        closed = keys[at] == probe
+        for corner in (apex[first[closed]], u[closed], v[closed]):
+            tri += np.bincount(corner, minlength=n)
+    return {"id": ids, "triangles": tri[rank]}
+
+
 def triangles_per_vertex(g: LinkGraph) -> DataFrame:
     """(id, triangles) — vertices in no triangle get 0.
 
-    Returns a MATERIALIZED (lineage-truncated) frame; callers that want the
-    cached blocks back call ``superstep.release_state`` on the result."""
+    A graph inside the driver-local regime
+    (``plans.partitioning.local_regime``) with at most ``LOCAL_MAX_WEDGES``
+    oriented wedges is counted by ``_triangle_kernel`` on the driver: one
+    collect of the canonical edges, no wedge join.  Otherwise the
+    distributed wedge join runs.  The result's ``regime`` attribute says
+    which ran (``"local"`` or ``"distributed"``).
+
+    Either result is materialized: a local relation, or a
+    lineage-truncated frame whose cached blocks
+    ``superstep.release_state`` gives back."""
+    from tcr_kcore_spark.plans.partitioning import local_regime, solve_local
+
+    und = g.undirected_view()
+    if local_regime(und):
+        out = solve_local(und.edges, _triangle_kernel)
+        if out is not None:
+            out.regime = "local"
+            return out
+    out = _triangles_distributed(g)
+    out.regime = "distributed"
+    return out
+
+
+def _triangles_distributed(g: LinkGraph) -> DataFrame:
+    """The distributed wedge join (module docstring), materialized."""
     from tcr_kcore_spark.plans.partitioning import broadcast_max_rows
     from tcr_kcore_spark.superstep import truncate_lineage
 

@@ -9,6 +9,9 @@ and cumulative-degree searchsorted range splits
   axis where cumulative degree mass crosses ``i·E/P`` — so each partition
   of the edge table holds ~equal EDGES even under Zipf-skewed degrees (a
   plain hash partition holds equal *keys*, not equal edges);
+- ``local_regime`` / ``solve_local``: the one gate and transport of the
+  driver-local regime, where a small graph is solved by a NumPy kernel on
+  the driver instead of by Spark rounds;
 - ``dense_index``: dense row numbers ``0..N-1`` in key order (the
   distributed zipWithIndex behind every dense-id map), JVM-side;
 - ``salted_sum`` / ``salted_count``: two-level aggregation for aggregations
@@ -43,6 +46,91 @@ def broadcast_max_rows() -> int:
     the shuffle regime — used by tests and the scaling bench to prove the
     non-broadcast plan)."""
     return int(os.environ.get("SPARK_GRAFT_BROADCAST_MAX_ROWS", "2000000"))
+
+
+# Symmetric-entry cap of the driver-local regime.  The collect ships E/2
+# canonical pairs (16 B each: 64 MB at the cap) and the NumPy kernels keep
+# a few E-length int64 arrays; the layered BZ peel runs ~1.1M entries/s
+# single-threaded, so the cap bounds the kcore solve at ~8 s.
+LOCAL_MAX_ENTRIES = 8_000_000
+
+
+def local_caps(
+    max_vertices: int | None = None, max_entries: int | None = None
+) -> tuple[int, int]:
+    """``(max V, max symmetric entries)`` of the driver-local regime:
+    ``broadcast_max_rows()`` and ``LOCAL_MAX_ENTRIES``, each lowered to the
+    caller's cap when one is given."""
+    max_v = broadcast_max_rows()
+    if max_vertices is not None:
+        max_v = min(max_v, max_vertices)
+    max_e = LOCAL_MAX_ENTRIES
+    if max_entries is not None:
+        max_e = min(max_e, max_entries)
+    return max_v, max_e
+
+
+def local_regime(
+    graph,
+    max_vertices: int | None = None,
+    max_entries: int | None = None,
+    checkpoint_dir: str | None = None,
+    resume: bool = False,
+) -> bool:
+    """Whether an undirected ``graph`` is small enough to solve on the
+    driver (``solve_local``): V and the symmetric entries within
+    ``local_caps``, and no checkpoint or resume (their manifests
+    describe round-structured state).  ``SPARK_GRAFT_BROADCAST_MAX_ROWS=0``
+    therefore forces the distributed path too.
+
+    The cheap tests come first.  On a materialized graph E is the count
+    ``materialize()`` took and V the graph-owned vertex count, so the gate
+    runs no job once those exist; otherwise each is counted here."""
+    max_v, max_e = local_caps(max_vertices, max_entries)
+    if max_v <= 0 or max_e <= 0 or checkpoint_dir is not None or resume:
+        return False
+    if graph.edge_count() > max_e:
+        return False
+    verts, n = graph.vertex_set()
+    return (verts.count() if n is None else n) <= max_v
+
+
+def simple_pairs(src, dst):
+    """``(ids, s, d)`` from canonical (``src ≤ dst``) NumPy edge rows:
+    ``ids`` the sorted distinct endpoints of every row (a vertex whose only
+    row is a self-loop keeps its id), ``s < d`` the dense indices into
+    ``ids`` of the distinct loop-free pairs, sorted by ``(s, d)`` — the
+    reference's simple graph (self-loops dropped and duplicates merged,
+    ``KCoreGPU-master/.../src/graph.cpp:87-101``)."""
+    import numpy as np
+
+    ids = np.unique(np.concatenate([src, dst]))
+    n = ids.shape[0]
+    s = np.searchsorted(ids, src)
+    d = np.searchsorted(ids, dst)
+    loop_free = s != d
+    key = np.unique(s[loop_free] * n + d[loop_free])
+    return ids, key // n, key % n
+
+
+def solve_local(edges: DataFrame, kernel) -> DataFrame | None:
+    """The driver-local transport: the canonical ``src ≤ dst`` rows of a
+    symmetric edge table come to the driver in one ``toArrow()`` collect
+    (JVM-side Arrow encoding, one job, no Python worker), ``kernel(src,
+    dst)`` runs on the NumPy columns and returns ``{name: array}``, and
+    ``spark.createDataFrame(pyarrow.Table)`` turns that into a local
+    relation (a ``LocalTableScan``: no lineage, nothing cached to free).
+    A kernel that declines returns None, and so does this."""
+    import pyarrow as pa
+
+    rows = edges.where(F.col("src") <= F.col("dst")).select("src", "dst").toArrow()
+    cols = kernel(
+        rows.column("src").to_numpy().astype("int64", copy=False),
+        rows.column("dst").to_numpy().astype("int64", copy=False),
+    )
+    if cols is None:
+        return None
+    return edges.sparkSession.createDataFrame(pa.table(cols))
 
 
 def state_side(df: DataFrame, bcast: bool) -> DataFrame:

@@ -28,7 +28,16 @@ from tcr_kcore_spark.sources import corpus_to_edges, synth_corpus
 from tcr_kcore_spark.sources.ingest import file_ids
 from tcr_kcore_spark.superstep import release_state
 
-PY_EXEC_NODES = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython")
+# physical-plan names of the operators that run a Python worker
+# ("MapInArrow" also matches the older "PythonMapInArrow")
+PY_EXEC_NODES = (
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+)
 
 # 1 = a single partition; 64 > every small input's row count, so some
 # range partitions are empty

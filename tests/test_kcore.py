@@ -357,6 +357,7 @@ def test_layered_bz_arrays_matches_oracle():
     import numpy as np
 
     from tcr_kcore_spark.operators.kcore import _layered_bz_arrays
+    from tcr_kcore_spark.plans.partitioning import simple_pairs
 
     rng = np.random.default_rng(11)
     cases = [oracles.er_graph(n=200, avg_deg=7, seed=s) for s in (1, 2, 3)]
@@ -364,61 +365,105 @@ def test_layered_bz_arrays_matches_oracle():
     cases.append([(i, i + 1) for i in range(500)])  # path: V/2 levels
     for edges in cases:
         want = oracles.coreness(edges)
-        # the engine's data model: symmetrized, DEDUPED, loop-free edges
-        canon = sorted({(min(a, b), max(a, b)) for a, b in edges if a != b})
-        a = np.array([e[0] for e in canon], dtype=np.int64)
-        b = np.array([e[1] for e in canon], dtype=np.int64)
-        src = np.concatenate([a, b])
-        dst = np.concatenate([b, a])
-        ids, core = _layered_bz_arrays(src, dst)
+        # canonical rows, loops and duplicates included: simple_pairs
+        # reduces them to the simple graph
+        a = np.array([min(e) for e in edges] * 2, dtype=np.int64)
+        b = np.array([max(e) for e in edges] * 2, dtype=np.int64)
+        ids, s, d = simple_pairs(a, b)
+        core = _layered_bz_arrays(ids.shape[0], s, d)
         assert dict(zip(ids.tolist(), core.tolist())) == want
+        # a floor k: vertices of coreness ≤ k take k, the rest keep theirs
+        floored = _layered_bz_arrays(ids.shape[0], s, d, k_floor=3)
+        assert floored.tolist() == [max(3, c) for c in core.tolist()]
 
 
-def _nodes_below(df, name: str) -> set:
-    """Physical-plan node names in the subtree under the first ``name``
-    node of ``df``'s plan (a cached scan is a leaf: its build plan is not
-    part of this query)."""
+def _plan_nodes(df) -> set:
+    """Physical-plan node names of ``df`` (a cached scan is a leaf: its
+    build plan is not part of this query)."""
 
-    def walk(p, under: bool):
+    def walk(p):
         if p.nodeName().startswith("AdaptiveSparkPlan"):
             p = p.inputPlan()
-        here = under or p.nodeName() == name
-        found = {p.nodeName()} if under else set()
+        found = {p.nodeName()}
         kids = p.children()
         for i in range(kids.size()):
-            found |= walk(kids.apply(i), here)
+            found |= walk(kids.apply(i))
         return found
 
-    return walk(df._jdf.queryExecution().executedPlan(), False)
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def _collected(spark, monkeypatch) -> list:
+    """Record every DataFrame collected through ``toArrow()``."""
+    cls = type(spark.range(0))  # the concrete (classic) DataFrame class
+    frames = []
+    real = cls.toArrow
+
+    def record(self):
+        frames.append(self)
+        return real(self)
+
+    monkeypatch.setattr(cls, "toArrow", record)
+    return frames
 
 
 def test_local_kernel_reads_cached_view_of_materialized_directed_graph(spark, monkeypatch):
-    """The one-task kernel's ``coalesce(1)`` input: a directed graph that is
-    not materialized symmetrizes per call below the coalesce (an exchange
-    and an aggregate); a materialized one reads its cached view."""
-    import importlib
-
-    # the module, not the ``operators.kcore`` function the package exports
-    kc = importlib.import_module("tcr_kcore_spark.operators.kcore")
-    kernels = []
-    real = kc.truncate_lineage
-
-    def capture(df):
-        kernels.append(df)
-        return real(df)
-
-    monkeypatch.setattr(kc, "truncate_lineage", capture)
+    """The driver-local collect: a directed graph that is not materialized
+    symmetrizes per call inside the collected plan (an exchange and an
+    aggregate); a materialized one collects its cached view."""
+    collected = _collected(spark, monkeypatch)
     edges = oracles.er_graph(n=80, avg_deg=6, seed=11)
     want = oracles.coreness(edges)
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=True)
     shuffles = {"Exchange", "HashAggregate"}
 
     kcore(g)
-    assert shuffles & _nodes_below(kernels[-1], "Coalesce")
+    assert shuffles & _plan_nodes(collected[-1])
     g.materialize()
     out, st = kcore(g)
     assert st.local_finish_secs > 0
-    below = _nodes_below(kernels[-1], "Coalesce")
-    assert "InMemoryTableScan" in below and not shuffles & below, below
+    nodes = _plan_nodes(collected[-1])
+    assert "InMemoryTableScan" in nodes and not shuffles & nodes, nodes
     assert {r["id"]: r["coreness"] for r in out.collect()} == want
     g.unpersist()
+
+
+def test_local_regime_runs_no_python_worker(spark):
+    """kcore (hindex) and triangles_per_vertex on a small materialized
+    graph: no Python exec node in any plan they run, and one Spark job
+    each — the collect of the cached edges; reading the result (a local
+    relation) runs none.  The vertex set is counted before, as the first
+    operator on a graph does it for all later ones."""
+    from tcr_kcore_spark.operators.triangles import triangles_per_vertex
+    from tests.test_dense_ids import PY_EXEC_NODES, _plans_of
+
+    edges = oracles.er_graph(n=80, avg_deg=6, seed=11)
+    g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
+    g.materialize()
+    g.vertex_set()
+    sc = spark.sparkContext
+    got, jobs = {}, {}
+
+    def run(name, call):
+        sc.setJobGroup(name, name)
+        try:
+            got[name] = call().collect()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(name))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    plans = _plans_of(
+        spark,
+        lambda: (
+            run("kcore", lambda: kcore(g)[0]),
+            run("triangles", lambda: triangles_per_vertex(g)),
+        ),
+    )
+    g.unpersist()
+    assert plans, "no SQL executions recorded"
+    for plan in plans:
+        for node in PY_EXEC_NODES:
+            assert node not in plan, f"{node} in a local-regime plan:\n{plan}"
+    assert jobs == {"kcore": 1, "triangles": 1}
+    assert {r["id"]: r["coreness"] for r in got["kcore"]} == oracles.coreness(edges)
+    assert {r["id"]: r["triangles"] for r in got["triangles"]} == oracles.triangles(edges)

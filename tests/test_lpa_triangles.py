@@ -54,6 +54,40 @@ def test_triangles_er_vs_oracle(spark):
     assert total == sum(want.values()) // 3
 
 
+def test_triangles_wedge_cap_falls_back_to_wedge_join(spark, monkeypatch):
+    """Above LOCAL_MAX_WEDGES oriented wedges the driver-local kernel
+    declines and the distributed wedge join counts the same triangles."""
+    from tcr_kcore_spark.operators import triangles
+
+    edges = oracles.er_graph(n=150, avg_deg=10, seed=21)
+    g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
+    assert triangles_per_vertex(g).regime == "local"
+    monkeypatch.setattr(triangles, "LOCAL_MAX_WEDGES", 0)
+    out = triangles_per_vertex(g)
+    assert out.regime == "distributed"
+    assert {r["id"]: r["triangles"] for r in out.collect()} == oracles.triangles(edges)
+
+
+def test_triangle_kernel_chunks_match_oracle(monkeypatch):
+    """NumPy-level (no Spark): the chunked wedge enumeration gives the
+    oracle's counts for any chunk size, hubs included."""
+    import numpy as np
+
+    from tcr_kcore_spark.operators import triangles
+
+    for edges in (
+        oracles.er_graph(n=120, avg_deg=9, seed=4),
+        oracles.zipf_hub_graph(n=300, m=1500, seed=5),
+    ):
+        src = np.array([min(e) for e in edges], dtype=np.int64)
+        dst = np.array([max(e) for e in edges], dtype=np.int64)
+        want = oracles.triangles(edges)
+        for chunk in (1, 7, 1 << 21):
+            monkeypatch.setattr(triangles, "_WEDGE_CHUNK", chunk)
+            got = triangles._triangle_kernel(src, dst)
+            assert dict(zip(got["id"].tolist(), got["triangles"].tolist())) == want
+
+
 def test_lcc(spark):
     edges = [(0, 1), (1, 2), (0, 2), (2, 3)]
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)

@@ -168,76 +168,35 @@ def plan_lpa_round(spark):
 
 
 def plan_triangles(spark):
-    """The full lazy triangle plan (pre-truncation), mirroring
-    triangles_per_vertex's CURRENT shape (r6: no eager o.count, broadcast
-    zero-fill under the V-row regime)."""
-    from pyspark.sql import functions as F
-
-    from tcr_kcore_spark.operators.triangles import _oriented
-    from tcr_kcore_spark.plans.partitioning import broadcast_max_rows
+    """The distributed triangle plan as the operator builds it (the local
+    regime is bypassed): the lazy zero-filled per-vertex frame that
+    ``_triangles_distributed`` materializes."""
+    from tcr_kcore_spark.operators.triangles import _triangles_distributed
 
     g = _graph(spark)
-    verts, _ = g.undirected_view().vertex_set()
-    vrow = verts.agg(
-        F.count(F.lit(1)).alias("n"), F.min("id").alias("mn"), F.max("id").alias("mx")
-    ).first()
-    use_int = (
-        vrow["mn"] is not None and vrow["mn"] >= -(2**31) and vrow["mx"] < 2**31
-    )
-    o = _oriented(g)
-    if use_int:
-        o = o.select(
-            F.col("src").cast("int"), F.col("dst").cast("int"), F.col("dd").cast("int")
-        )
-    o = o.persist()
-    w = (
-        o.alias("a")
-        .join(o.alias("b"), F.col("a.src") == F.col("b.src"))
-        .where(
-            (F.col("a.dd") < F.col("b.dd"))
-            | ((F.col("a.dd") == F.col("b.dd")) & (F.col("a.dst") < F.col("b.dst")))
-        )
-        .select(
-            F.col("a.src").alias("apex"),
-            F.col("a.dst").alias("u"),
-            F.col("b.dst").alias("v"),
-        )
-    )
-    closing = o.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    tris = w.join(closing, ["u", "v"], "left_semi")
-    per_vertex = (
-        tris.select(F.col("apex").alias("id"))
-        .unionByName(tris.select(F.col("u").alias("id")))
-        .unionByName(tris.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("triangles"))
-    )
-    if use_int:
-        per_vertex = per_vertex.select(F.col("id").cast("long").alias("id"), "triangles")
-    if vrow["n"] <= broadcast_max_rows():
-        per_vertex = F.broadcast(per_vertex)
-    out = verts.join(per_vertex, "id", "left").select(
-        "id", F.coalesce(F.col("triangles"), F.lit(0)).alias("triangles")
-    )
-    return _explain_str(out)
+    return _capture_operator_step(spark, lambda: _triangles_distributed(g))
 
 
 def plan_ktruss_support(spark):
-    from pyspark.sql import functions as F
-
-    from tcr_kcore_spark.operators.triangles import edge_support
+    """The ``edge_support`` plan ktruss builds in its first round (over the
+    truncated canonical edges, int32 narrowing decided by ktruss)."""
+    from tcr_kcore_spark.operators import triangles
 
     g = _graph(spark)
-    cur = (
-        g.undirected_view()
-        .edges.where(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .distinct()
-    )
-    from tcr_kcore_spark.superstep import truncate_lineage
+    plans = []
+    orig = triangles.edge_support
 
-    cur = truncate_lineage(cur)
-    return _explain_str(edge_support(cur))
+    def capture(*args, **kwargs):
+        out = orig(*args, **kwargs)
+        plans.append(_explain_str(out))
+        return out
+
+    triangles.edge_support = capture
+    try:
+        triangles.ktruss(g, 12, max_iter=1)
+    finally:
+        triangles.edge_support = orig
+    return plans[0]
 
 
 UNITS = {

@@ -184,6 +184,22 @@ def triangles(edges: list[tuple[int, int]]) -> dict[int, int]:
     return tri
 
 
+def ktruss(edges: list[tuple[int, int]], k: int) -> set[tuple[int, int]]:
+    """Canonical (a < b) edges of the k-truss of the undirected simple
+    graph: repeatedly drop every edge in fewer than k−2 triangles of the
+    remaining edges until none drops."""
+    cur = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    while True:
+        adj: dict[int, set[int]] = {}
+        for a, b in cur:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        nxt = {(a, b) for a, b in cur if len(adj[a] & adj[b]) >= k - 2}
+        if nxt == cur:
+            return cur
+        cur = nxt
+
+
 def hindex_rounds(edges: list[tuple[int, int]], rounds: int) -> dict[int, int]:
     """Fixed rounds of the h-operator (est0 = degree)."""
     adj = _adj(edges, symmetric=True)

@@ -115,7 +115,6 @@ def test_edge_support_matches_triangle_total(spark):
 
 
 def test_ktruss_python_oracle(spark):
-    import itertools
     import random
 
     from tcr_kcore_spark.operators.triangles import ktruss
@@ -126,21 +125,7 @@ def test_ktruss_python_oracle(spark):
     for k in (3, 4, 5):
         got, stats = ktruss(g, k)
         assert stats.converged
-        # python peel
-        cur = set(edges)
-        while True:
-            adj = {}
-            for a, b in cur:
-                adj.setdefault(a, set()).add(b)
-                adj.setdefault(b, set()).add(a)
-            sup = {
-                (a, b): len(adj[a] & adj[b]) for a, b in cur
-            }
-            nxt = {e for e in cur if sup[e] >= k - 2}
-            if nxt == cur:
-                break
-            cur = nxt
-        assert sorted(map(tuple, got.collect())) == sorted(cur)
+        assert sorted(map(tuple, got.collect())) == sorted(oracles.ktruss(edges, k))
 
 
 def test_ktruss_k4_is_k4(spark):
@@ -153,3 +138,47 @@ def test_ktruss_k4_is_k4(spark):
     assert sorted(map(tuple, got.collect())) == [
         (0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)
     ]
+
+
+def test_triangle_job_budgets(spark, monkeypatch):
+    """Spark jobs per call (the call plus one count of its result, counted
+    with ``setJobGroup``/``getJobIdsForGroup``) of the distributed triangle
+    paths on the 80-vertex ER graph, materialized: ``triangles_per_vertex``
+    forced past the local regime (``SPARK_GRAFT_BROADCAST_MAX_ROWS=0``;
+    its first call counts the graph's vertex set), then ``ktruss(g, 3)``,
+    whose rounds each truncate and count the survivors.  Before → after
+    one wedge enumerator: triangles 24 → 21, ktruss 37-40 → 35 (the full
+    recount runs no per-round drop count).  With the decrement arm,
+    ktruss's count moved by up to three jobs from run to run, so it is
+    held to a budget."""
+    from tcr_kcore_spark.operators.triangles import ktruss
+    from tcr_kcore_spark.superstep import release_state
+
+    spark.catalog.clearCache()  # a leaked identical plan would hide jobs
+    edges = oracles.er_graph(n=80, avg_deg=6, seed=11)
+    g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
+    g.materialize()
+    sc = spark.sparkContext
+
+    def jobs(name, run):
+        sc.setJobGroup(name, name)
+        try:
+            out = run()
+            out.count()
+            n = len(sc.statusTracker().getJobIdsForGroup(name))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, n
+
+    with monkeypatch.context() as m:
+        m.setenv("SPARK_GRAFT_BROADCAST_MAX_ROWS", "0")
+        tri, n_tri = jobs("triangles", lambda: triangles_per_vertex(g))
+    assert tri.regime == "distributed"
+    assert {r["id"]: r["triangles"] for r in tri.collect()} == oracles.triangles(edges)
+    release_state(tri)
+    truss, n_truss = jobs("ktruss", lambda: ktruss(g, 3)[0])
+    assert set(map(tuple, truss.collect())) == oracles.ktruss(edges, 3)
+    release_state(truss)
+    g.unpersist()
+    assert n_tri == 21
+    assert n_truss <= 35

@@ -109,6 +109,19 @@ def _rows(df, col):
     return {r["id"]: r[col] for r in df.collect()}
 
 
+def _adversarial_graph(spark, raw, directed):
+    """Materialized graph of ``raw``.  Undirected: symmetrized and deduped,
+    self-loops kept in the table; directed: the raw rows, duplicates and
+    loops included."""
+    g = (
+        LinkGraph(edges_df(spark, raw), directed=True)
+        if directed
+        else LinkGraph.from_edges(edges_df(spark, raw), directed=False, drop_self_loops=False)
+    )
+    g.materialize()
+    return g
+
+
 @settings(
     max_examples=4,
     deadline=None,
@@ -119,14 +132,7 @@ def test_local_and_distributed_regimes_agree(spark, monkeypatch, raw, directed):
     from tcr_kcore_spark.operators.triangles import triangles_per_vertex
 
     verts, edges = _simple(raw)
-    # undirected: symmetrized and deduped, self-loops kept in the table;
-    # directed: the raw rows, duplicates and loops included
-    g = (
-        LinkGraph(edges_df(spark, raw), directed=True)
-        if directed
-        else LinkGraph.from_edges(edges_df(spark, raw), directed=False, drop_self_loops=False)
-    )
-    g.materialize()
+    g = _adversarial_graph(spark, raw, directed)
     # the undirected view of a directed graph drops loops at build time, so
     # a vertex whose only edge is a self-loop is not one of its vertices
     want_ids = {r["id"] for r in g.undirected_view().vertices().collect()}
@@ -146,3 +152,51 @@ def test_local_and_distributed_regimes_agree(spark, monkeypatch, raw, directed):
     assert (tl.regime, td.regime) == ("local", "distributed")
     assert _rows(tl, "triangles") == _rows(td, "triangles") == tri
     g.unpersist()
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(raw=adversarial_edges, directed=st.booleans())
+def test_edge_support_enumerator_random_graphs(spark, monkeypatch, raw, directed):
+    """The distributed triangle enumerator and its readers against the
+    oracles: ``edge_support``, ``ktruss`` (k = 3, 4) and the distributed
+    ``triangles_per_vertex`` (broadcast zero-fill), once with every id
+    inside int32 (narrowed wedge join) and once with every id ≥ 2^33."""
+    from tcr_kcore_spark.operators.triangles import edge_support, ktruss, triangles_per_vertex
+    from tcr_kcore_spark.superstep import release_state
+
+    # the local kernel declines every graph, even one with no wedge
+    monkeypatch.setattr("tcr_kcore_spark.operators.triangles.LOCAL_MAX_WEDGES", -1)
+    for shift in (0, _BIG):
+        shifted = [(a % _BIG + shift, b % _BIG + shift) for a, b in raw]
+        _, edges = _simple(shifted)
+        g = _adversarial_graph(spark, shifted, directed)
+        want_ids = {r["id"]: 0 for r in g.undirected_view().vertices().collect()}
+        adj = {}
+        for a, b in edges:
+            adj.setdefault(a, set()).add(b)
+        support = {(a, b): len(adj[a] & adj[b]) for a, b in edges if a < b}
+
+        canon = (
+            g.undirected_view().edges.where("src < dst")
+            .selectExpr("src as a", "dst as b").distinct()
+        )
+        sup = edge_support(canon)
+        got = {(r["a"], r["b"]): r["support"] for r in sup.collect()}
+        assert got == {e: s for e, s in support.items() if s}
+        release_state(sup)
+
+        for k in (3, 4):
+            out, stats = ktruss(g, k)
+            assert stats.converged
+            assert set(map(tuple, out.collect())) == oracles.ktruss(edges, k)
+            release_state(out)
+
+        tri = triangles_per_vertex(g)
+        assert tri.regime == "distributed"
+        assert _rows(tri, "triangles") == want_ids | oracles.triangles(edges)
+        release_state(tri)
+        g.unpersist()

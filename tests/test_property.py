@@ -13,7 +13,7 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -128,15 +128,18 @@ def _adversarial_graph(spark, raw, directed):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(raw=adversarial_edges, directed=st.booleans())
+# a second loop-only vertex, 0, beside 11 + 2^33
+@example(raw=[(0, 0), (11 + _BIG, 11 + _BIG), (0, 0), (0, 0)], directed=True)
 def test_local_and_distributed_regimes_agree(spark, monkeypatch, raw, directed):
     from tcr_kcore_spark.operators.triangles import triangles_per_vertex
 
     verts, edges = _simple(raw)
     g = _adversarial_graph(spark, raw, directed)
     # the undirected view of a directed graph drops loops at build time, so
-    # a vertex whose only edge is a self-loop is not one of its vertices
+    # a vertex whose only edges are self-loops (11 + 2^33 always, and any
+    # raw[0] = (v, v)) is not one of its vertices
     want_ids = {r["id"] for r in g.undirected_view().vertices().collect()}
-    assert want_ids == (verts - {11 + _BIG} if directed else verts)
+    assert want_ids == ({v for e in edges for v in e} if directed else verts)
     core = {v: 0 for v in want_ids} | oracles.coreness(edges)
     tri = {v: 0 for v in want_ids} | oracles.triangles(edges)
 

@@ -76,23 +76,27 @@ def plan_kcore_exact(spark):
 
 def _capture_operator_step(spark, run):
     """One superstep's plan as the OPERATOR builds it: hook
-    truncate_lineage, run the 1-step call `run`, return the last captured
-    plan (the step's; an operator that truncates its init state captures
-    that first)."""
+    truncate_lineage, run the 1-step call `run` with the driver-local
+    regime off (its entry cap 0, so the distributed superstep runs),
+    return the last captured plan (the step's; an operator that truncates
+    its init state captures that first)."""
+    import tcr_kcore_spark.plans.partitioning as pp
     import tcr_kcore_spark.superstep as ss
 
     plans = []
-    orig = ss.truncate_lineage
+    orig, cap = ss.truncate_lineage, pp.LOCAL_MAX_ENTRIES
 
     def capture(df):
         plans.append(_explain_str(df))
         return orig(df)
 
     ss.truncate_lineage = capture
+    pp.LOCAL_MAX_ENTRIES = 0
     try:
         run()
     finally:
         ss.truncate_lineage = orig
+        pp.LOCAL_MAX_ENTRIES = cap
     return plans[-1]
 
 

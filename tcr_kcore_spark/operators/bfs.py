@@ -9,6 +9,10 @@ identical to the reference's fixpoint.
 
 Unreachable vertices: distance NULL (the reference leaves them at inf and
 its writer prints inf; NULL is our typed equivalent — documented deviation).
+
+Inside the driver-local regime (``superstep.VertexProgram.run``) the same
+level-by-level expansion runs in NumPy on the driver (``_bfs_local``) from
+one collect of the edge rows, and stops on an empty frontier.
 """
 
 from __future__ import annotations
@@ -18,7 +22,40 @@ from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
 from tcr_kcore_spark.plans.partitioning import state_side
-from tcr_kcore_spark.superstep import SuperstepStats, vertex_program
+from tcr_kcore_spark.superstep import LocalProgram, SuperstepStats, vertex_program
+
+
+def _bfs_local(source: int):
+    """BFS on the driver: state ``(dist, frontier)`` over dense indices,
+    ``dist = -1`` until reached; superstep ``i`` reaches the unreached
+    targets of the frontier's rows at distance ``i + 1``.  A source that
+    is not a vertex leaves the frontier empty from the start."""
+
+    def program(ids, s, d) -> LocalProgram:
+        import numpy as np
+        import pyarrow as pa
+
+        n = ids.shape[0]
+        dist = np.full(n, -1, dtype=np.int64)
+        at = np.searchsorted(ids, source)
+        if at < n and ids[at] == source:
+            dist[at] = 0
+
+        def step(state, i):
+            dist, frontier = state
+            hit = np.zeros(n, dtype=bool)
+            hit[d[frontier[s]]] = True
+            new = hit & (dist < 0)
+            return np.where(new, i + 1, dist), new
+
+        return LocalProgram(
+            (dist, dist == 0),
+            step,
+            result=lambda state: {"distance": pa.array(state[0], mask=state[0] < 0)},
+            halt=lambda state: not state[1].any(),
+        )
+
+    return program
 
 
 def bfs(
@@ -75,6 +112,7 @@ def bfs(
             step,
             halt=(F.sum(F.col("frontier").cast("long")).alias("n"), lambda row: not row["n"]),
             result=("id", F.col("dist").alias("distance")),
+            local=_bfs_local(source),
             max_iter=max_iter,
             checkpoint_dir=checkpoint_dir,
             checkpoint_every=checkpoint_every,

@@ -16,6 +16,10 @@ Two Spark formulations:
   PAPERS.md): alternates two edge-rewriting rounds and converges in
   O(log n) supersteps — the scale path for 100 TB graphs whose diameter is
   large.  Same output contract (min id per component).
+
+Inside the driver-local regime (``superstep.VertexProgram.run``) hashmin
+runs the same frontier rounds in NumPy on the driver (``_hashmin_local``),
+from one collect of the edge rows, until no label changes.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from pyspark.sql import functions as F
 from tcr_kcore_spark.graph import LinkGraph
 from tcr_kcore_spark.plans.partitioning import state_side
 from tcr_kcore_spark.superstep import (
+    LocalProgram,
     SuperstepStats,
     propagate_release,
     run_supersteps,
@@ -48,6 +53,29 @@ def connected_components(
     if mode == "smallstar":
         return _alternating_star(g, max_iter, checkpoint_dir, checkpoint_every, resume)
     raise ValueError(f"unknown mode {mode!r}")
+
+
+def _hashmin_local(ids, s, d) -> LocalProgram:
+    """hashmin on the driver: state ``(component, changed)`` over dense
+    indices (ids are sorted, so the least index is the least id); each
+    round only changed vertices send their component along their rows."""
+    import numpy as np
+
+    n = ids.shape[0]
+
+    def step(state, i):
+        comp, changed = state
+        live = changed[s]
+        new = comp.copy()
+        np.minimum.at(new, d[live], comp[s[live]])
+        return new, new < comp
+
+    return LocalProgram(
+        (np.arange(n), np.ones(n, dtype=bool)),
+        step,
+        result=lambda state: {"component": ids[state[0]]},
+        halt=lambda state: not state[1].any(),
+    )
 
 
 def _hashmin(
@@ -93,6 +121,7 @@ def _hashmin(
             step,
             halt=(F.sum(F.col("changed").cast("long")).alias("n"), lambda row: not row["n"]),
             result=("id", "component"),
+            local=_hashmin_local,
             max_iter=max_iter,
             checkpoint_dir=checkpoint_dir,
             checkpoint_every=checkpoint_every,

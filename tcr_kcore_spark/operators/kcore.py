@@ -291,7 +291,7 @@ def _hindex(
     # On a materialized graph the gate reads kept counts: no planning
     # aggregate, no degree table, one collect of the cached edges.
     if local_regime(g, local_finish_vertices, local_finish_edges, checkpoint_dir, resume):
-        stats = SuperstepStats()
+        stats = SuperstepStats(regime="local")
         t0 = time.time()
         out = solve_local(g.edges, _coreness_kernel())
         stats.actions += 1  # the one collect
@@ -856,8 +856,9 @@ def _peel(
                 .join(survivors.withColumnRenamed("id", "dst"), "dst", "left_semi")
             )
             t_fin = time.time()
-            # the residual is symmetric: its canonical rows go to the
-            # driver-local kernel (plans.partitioning.solve_local)
+            # the residual's rows go to the driver-local kernel
+            # (plans.partitioning.solve_local), which merges both
+            # directions of each pair
             local = solve_local(residual, _coreness_kernel(k if k is not None else 0))
             stats.actions += 1
             stats.local_finish_secs = round(time.time() - t_fin, 3)

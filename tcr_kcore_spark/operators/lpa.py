@@ -14,6 +14,10 @@ map-side-combinable aggregations, no window.  Both levels absorb in-degree
 hubs through partial aggregation.  The first is a hash aggregation; the
 second plans as ``SortAggregate`` over a ``Sort`` on each side of its
 exchange, because a struct aggregation buffer is not hash-aggregatable.
+
+Inside the driver-local regime (``superstep.VertexProgram.run``) the same
+rounds run in NumPy on the driver (``_lpa_local``) from one collect of the
+edge rows: one vote per row, the same tie-break.
 """
 
 from __future__ import annotations
@@ -23,7 +27,7 @@ from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
 from tcr_kcore_spark.plans.partitioning import state_side
-from tcr_kcore_spark.superstep import SuperstepStats, vertex_program
+from tcr_kcore_spark.superstep import LocalProgram, SuperstepStats, vertex_program
 
 
 def lpa_round(edges: DataFrame, labels: DataFrame, bcast: bool = True) -> DataFrame:
@@ -57,6 +61,29 @@ def lpa_round(edges: DataFrame, labels: DataFrame, bcast: bool = True) -> DataFr
     )
 
 
+def _lpa_local(ids, s, d) -> LocalProgram:
+    """LPA on the driver: labels as dense indices (ids are sorted, so
+    index order is label order); each row ``(s, d)`` is one vote of
+    ``label[s]`` for ``d``, the (count desc, label asc) winner is taken,
+    and a vertex with no votes keeps its label."""
+    import numpy as np
+
+    n = ids.shape[0]
+
+    def step(label, i):
+        votes, cnt = np.unique(d * n + label[s], return_counts=True)
+        v, lab = votes // n, votes % n
+        order = np.lexsort((lab, -cnt, v))
+        v, lab = v[order], lab[order]
+        first = np.ones(v.shape[0], dtype=bool)
+        first[1:] = v[1:] != v[:-1]
+        new = label.copy()
+        new[v[first]] = lab[first]
+        return new
+
+    return LocalProgram(np.arange(n), step, result=lambda label: {"label": ids[label]})
+
+
 def label_propagation(
     graph: LinkGraph,
     rounds: int = 3,
@@ -73,6 +100,7 @@ def label_propagation(
             vp.verts.select("id", F.col("id").alias("label")),
             lambda state, i: lpa_round(vp.edges, state, vp.bcast),
             result=("id", "label"),
+            local=_lpa_local,
             max_iter=rounds,
             checkpoint_dir=checkpoint_dir,
             checkpoint_every=checkpoint_every,

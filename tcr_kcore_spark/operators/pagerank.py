@@ -24,6 +24,11 @@ Spark-first design:
 - sums accumulate in float64 (Spark `double`) so allclose(1e-6) holds even
   though the reference accumulates float32;
 - the state is double-buffered + checkpointed by the superstep driver.
+
+Inside the driver-local regime (``superstep.VertexProgram.run``) pagerank
+and ppr run the same supersteps in NumPy on the driver (``_rank_local``)
+from one collect of the edge rows: the same ``w``, base term and dangling
+mass, and the same ``max|Δ| ≤ tol`` test every ``truncate_every`` steps.
 """
 
 from __future__ import annotations
@@ -33,7 +38,7 @@ from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
 from tcr_kcore_spark.plans.partitioning import state_side
-from tcr_kcore_spark.superstep import SuperstepStats, vertex_program
+from tcr_kcore_spark.superstep import LocalProgram, SuperstepStats, vertex_program
 
 
 def _rank_init(vp, graph: LinkGraph, damping: float, keep: tuple, rank) -> DataFrame:
@@ -81,6 +86,44 @@ def _rank_step(vp, base, keep: tuple = (), mass=None):
     return step
 
 
+def _rank_local(damping: float, done, dangling: bool = False, reset=None):
+    """``_rank_init`` + ``_rank_step`` on the driver: ``w = damping/outdeg``
+    per row's source (a vertex with no rows sends nothing and is dangling),
+    ``rank' = base + Σ w·rank`` (+ the dangling mass), and the halt test
+    ``done(max|Δ|)``.  ``reset(ids)`` gives ppr's reset vector ``p``
+    (``rank₀ = p``, ``base = (1−d)·p``); None is plain pagerank
+    (``rank₀ = 1``, ``base = 1−d``)."""
+
+    def program(ids, s, d) -> LocalProgram:
+        import numpy as np
+
+        n = ids.shape[0]
+        out_deg = np.bincount(s, minlength=n)
+        w = damping / np.maximum(out_deg, 1)
+        sinks = out_deg == 0
+        if reset is None:
+            base, rank = 1.0 - damping, np.ones(n)
+        else:
+            p = reset(ids)
+            base, rank = (1.0 - damping) * p, p
+
+        def step(state, i):
+            rank = state[0]
+            new = base + np.bincount(d, weights=(w * rank)[s], minlength=n)
+            if dangling:
+                new = new + damping * (rank[sinks].sum() / n)
+            return new, np.abs(new - rank)
+
+        return LocalProgram(
+            (rank, None),
+            step,
+            result=lambda state: {"rank": state[0]},
+            halt=lambda state: done(state[1].max(initial=0.0)),
+        )
+
+    return program
+
+
 def pagerank(
     graph: LinkGraph,
     damping: float = 0.85,
@@ -113,11 +156,15 @@ def pagerank(
                 row = state.where(F.col("w").isNull()).agg(F.sum("rank")).first()
                 return damping * ((row[0] or 0.0) / vp.n)
 
+        def done(max_delta: float) -> bool:
+            return max_delta <= tol
+
         return vp.run(
             _rank_init(vp, graph, damping, (), F.lit(1.0)),
             _rank_step(vp, F.lit(1.0 - damping), mass=mass),
-            halt=(F.max("delta").alias("d"), lambda row: (row["d"] or 0.0) <= tol),
+            halt=(F.max("delta").alias("d"), lambda row: done(row["d"] or 0.0)),
             result=("id", "rank"),
+            local=_rank_local(damping, done, dangling),
             max_iter=max_iter,
             checkpoint_dir=checkpoint_dir,
             checkpoint_every=checkpoint_every,
@@ -172,26 +219,41 @@ def personalized_pagerank(
     ``max_iter`` supersteps (the SQL-oracle-pinned mode); ``tol > 0``
     stops at max |Δr| ≤ tol."""
     spark = graph.edges.sparkSession
-    if not isinstance(seeds, DataFrame):
-        seeds = spark.createDataFrame([(int(s),) for s in seeds], "id long")
-    k = seeds.count()
+    if isinstance(seeds, DataFrame):
+        seed_ids, k = None, seeds.count()
+    else:
+        seed_ids = [int(s) for s in seeds]
+        seeds = spark.createDataFrame([(s,) for s in seed_ids], "id long")
+        k = len(seed_ids)
     if k == 0:
         raise ValueError("personalized_pagerank needs at least one seed")
     verts, n = graph.vertex_set()
     verts_p = verts.join(
         seeds.select("id", F.lit(1.0 / k).alias("p")), "id", "left"
     ).select("id", F.coalesce("p", F.lit(0.0)).alias("p"))
+
+    def reset(ids):
+        """``p`` over the driver-local program's ids (a DataFrame of seeds
+        is collected here, only in that regime)."""
+        import numpy as np
+
+        want = seed_ids
+        if want is None:
+            want = seeds.select("id").toArrow().column("id").to_numpy()
+        return np.where(np.isin(ids, want), 1.0 / k, 0.0)
+
+    def done(max_delta: float) -> bool:
+        return tol > 0 and max_delta <= tol
+
     with vertex_program(graph, verts_p, n=n) as vp:
         # carry the reset probability in the state so the apply phase is ONE
         # outer join (state ⟕ msgs) instead of verts_p ⟕ msgs ⋈ state
         return vp.run(
             _rank_init(vp, graph, damping, ("p",), F.col("p")),
             _rank_step(vp, F.lit(1.0 - damping) * F.col("p"), keep=("p",)),
-            halt=(
-                F.max("delta").alias("d"),
-                lambda row: tol > 0 and (row["d"] or 0.0) <= tol,
-            ),
+            halt=(F.max("delta").alias("d"), lambda row: done(row["d"] or 0.0)),
             result=("id", "rank"),
+            local=_rank_local(damping, done, reset=reset),
             max_iter=max_iter,
             checkpoint_dir=checkpoint_dir,
             checkpoint_every=checkpoint_every,

@@ -48,17 +48,17 @@ def broadcast_max_rows() -> int:
     return int(os.environ.get("SPARK_GRAFT_BROADCAST_MAX_ROWS", "2000000"))
 
 
-# Symmetric-entry cap of the driver-local regime.  The collect ships E/2
-# canonical pairs (16 B each: 64 MB at the cap) and the NumPy kernels keep
-# a few E-length int64 arrays; the layered BZ peel runs ~1.1M entries/s
-# single-threaded, so the cap bounds the kcore solve at ~8 s.
+# Edge-row cap of the driver-local regime.  The collect ships every row
+# (16 B each: 128 MB at the cap) and the NumPy kernels keep a few E-length
+# int64 arrays; the layered BZ peel runs ~1.1M entries/s single-threaded,
+# so the cap bounds the kcore solve at ~8 s.
 LOCAL_MAX_ENTRIES = 8_000_000
 
 
 def local_caps(
     max_vertices: int | None = None, max_entries: int | None = None
 ) -> tuple[int, int]:
-    """``(max V, max symmetric entries)`` of the driver-local regime:
+    """``(max V, max edge rows)`` of the driver-local regime:
     ``broadcast_max_rows()`` and ``LOCAL_MAX_ENTRIES``, each lowered to the
     caller's cap when one is given."""
     max_v = broadcast_max_rows()
@@ -76,54 +76,71 @@ def local_regime(
     max_entries: int | None = None,
     checkpoint_dir: str | None = None,
     resume: bool = False,
+    n_vertices: int | None = None,
 ) -> bool:
-    """Whether an undirected ``graph`` is small enough to solve on the
-    driver (``solve_local``): V and the symmetric entries within
-    ``local_caps``, and no checkpoint or resume (their manifests
-    describe round-structured state).  ``SPARK_GRAFT_BROADCAST_MAX_ROWS=0``
-    therefore forces the distributed path too.
+    """Whether ``graph``, directed or undirected, is small enough to solve
+    on the driver (``solve_local``): V and the edge rows (an undirected
+    graph's symmetric entries) within ``local_caps``, and no checkpoint or
+    resume (their manifests describe round-structured state).
+    ``SPARK_GRAFT_BROADCAST_MAX_ROWS=0`` therefore forces the distributed
+    path too.
 
-    The cheap tests come first.  On a materialized graph E is the count
-    ``materialize()`` took and V the graph-owned vertex count, so the gate
-    runs no job once those exist; otherwise each is counted here."""
+    The cheap tests come first.  ``n_vertices`` is V when the caller has
+    counted it.  On a materialized graph E is the count ``materialize()``
+    took and V the graph-owned vertex count, so the gate runs no job once
+    those exist; otherwise each is counted here."""
     max_v, max_e = local_caps(max_vertices, max_entries)
     if max_v <= 0 or max_e <= 0 or checkpoint_dir is not None or resume:
         return False
+    if n_vertices is not None and n_vertices > max_v:
+        return False
     if graph.edge_count() > max_e:
         return False
-    verts, n = graph.vertex_set()
-    return (verts.count() if n is None else n) <= max_v
+    if n_vertices is None:
+        verts, n = graph.vertex_set()
+        n_vertices = verts.count() if n is None else n
+    return n_vertices <= max_v
 
 
-def simple_pairs(src, dst):
-    """``(ids, s, d)`` from canonical (``src ≤ dst``) NumPy edge rows:
-    ``ids`` the sorted distinct endpoints of every row (a vertex whose only
-    row is a self-loop keeps its id), ``s < d`` the dense indices into
-    ``ids`` of the distinct loop-free pairs, sorted by ``(s, d)`` — the
-    reference's simple graph (self-loops dropped and duplicates merged,
-    ``KCoreGPU-master/.../src/graph.cpp:87-101``)."""
+def dense_rows(src, dst):
+    """``(ids, s, d)`` from NumPy edge rows: ``ids`` the sorted distinct
+    endpoints of every row, ``s`` and ``d`` each row's dense indices into
+    ``ids``, in row order.  Every row is kept, multi-edges and self-loops
+    included, so a kernel that counts rows (out-degrees, label votes)
+    counts them as a Spark step over the same table does."""
     import numpy as np
 
     ids = np.unique(np.concatenate([src, dst]))
+    return ids, np.searchsorted(ids, src), np.searchsorted(ids, dst)
+
+
+def simple_pairs(src, dst):
+    """``(ids, s, d)`` from NumPy edge rows in either orientation: ``ids``
+    as ``dense_rows`` (a vertex whose only row is a self-loop keeps its
+    id), ``s < d`` the dense indices of the distinct loop-free undirected
+    pairs, sorted by ``(s, d)`` — the reference's simple graph (self-loops
+    dropped and duplicates merged, ``KCoreGPU-master/.../src/graph.cpp:87-101``)."""
+    import numpy as np
+
+    ids, s, d = dense_rows(src, dst)
     n = ids.shape[0]
-    s = np.searchsorted(ids, src)
-    d = np.searchsorted(ids, dst)
-    loop_free = s != d
-    key = np.unique(s[loop_free] * n + d[loop_free])
+    lo, hi = np.minimum(s, d), np.maximum(s, d)
+    loop_free = lo != hi
+    key = np.unique(lo[loop_free] * n + hi[loop_free])
     return ids, key // n, key % n
 
 
 def solve_local(edges: DataFrame, kernel) -> DataFrame | None:
-    """The driver-local transport: the canonical ``src ≤ dst`` rows of a
-    symmetric edge table come to the driver in one ``toArrow()`` collect
-    (JVM-side Arrow encoding, one job, no Python worker), ``kernel(src,
+    """The driver-local transport: every ``(src, dst)`` row of an edge
+    table, directed or symmetric, comes to the driver in one ``toArrow()``
+    collect (JVM-side Arrow encoding, one job, no Python worker), ``kernel(src,
     dst)`` runs on the NumPy columns and returns ``{name: array}``, and
     ``spark.createDataFrame(pyarrow.Table)`` turns that into a local
     relation (a ``LocalTableScan``: no lineage, nothing cached to free).
     A kernel that declines returns None, and so does this."""
     import pyarrow as pa
 
-    rows = edges.where(F.col("src") <= F.col("dst")).select("src", "dst").toArrow()
+    rows = edges.select("src", "dst").toArrow()
     cols = kernel(
         rows.column("src").to_numpy().astype("int64", copy=False),
         rows.column("dst").to_numpy().astype("int64", copy=False),

@@ -33,6 +33,16 @@ observed halt into ``run_supersteps`` and frees every cache it made on
 normal and error exits alike.  On a materialized graph the vertex set, its
 count and the edge layouts are the graph's own, built once and shared by
 every call (``graph.py``); the program neither persists nor frees them.
+
+A program that also gives its driver-local form (``VertexProgram.run``'s
+``local``, a :class:`LocalProgram` over NumPy arrays) runs that instead
+when the graph is inside the driver-local regime
+(``plans.partitioning.local_regime``, checked in ``run`` for every such
+program): one Arrow collect of the edge rows, the same synchronous rounds
+and halt test in NumPy, a local relation back — the reference's
+single-device strategy for a graph that fits (``SimpleStrategy.compute``,
+``TCR/src/framework/strategy/SimpleStrategy.py:43-77``).
+``SuperstepStats.regime`` says which ran.
 """
 
 from __future__ import annotations
@@ -289,6 +299,10 @@ class SuperstepStats:
     # scc: forward-backward coloring outer rounds (each runs one joint
     # fixpoint; supersteps counts trim levels + each direction's rounds)
     outer_rounds: int = 0
+    # the physical regime that ran: "local" (driver-local NumPy),
+    # "broadcast" or "shuffle" (vertex_program's Spark regimes); "" for
+    # runs that pick none (kcore peel, smallstar components, scc)
+    regime: str = ""
 
     @property
     def supersteps_per_sec(self) -> float:
@@ -467,6 +481,21 @@ def run_supersteps(
     return state, st
 
 
+@dataclass
+class LocalProgram:
+    """A vertex program's driver-local form over the ``dense_rows`` arrays
+    ``(ids, s, d)`` of its graph's edge rows: ``state`` the init state,
+    ``step(state, i)`` superstep ``i`` (the distributed step's synchronous
+    round), ``result(state)`` the ``{column: array}`` output beside
+    ``id``, and ``halt(state)`` the halt test on a step's output (None:
+    run ``max_iter`` supersteps)."""
+
+    state: object
+    step: Callable[[object, int], object]
+    result: Callable[[object], dict]
+    halt: Callable[[object], bool] | None = None
+
+
 class VertexProgram:
     """Handle yielded by :func:`vertex_program`."""
 
@@ -505,6 +534,7 @@ class VertexProgram:
         *,
         result: tuple,
         halt: tuple | None = None,
+        local: Callable[..., LocalProgram] | None = None,
         **kw,
     ) -> tuple[DataFrame, SuperstepStats]:
         """``run_supersteps`` from ``init``, a projection of the persisted
@@ -513,7 +543,22 @@ class VertexProgram:
         job and stops once ``pred(observed_row)`` holds; ``halt=None`` runs
         ``max_iter`` supersteps.  Returns the final state's ``result``
         columns, carrying its release handles, and the stats; ``kw`` goes
-        to ``run_supersteps``."""
+        to ``run_supersteps``.
+
+        ``local(ids, s, d)`` builds the program's :class:`LocalProgram`.
+        When it is given and the graph is inside the driver-local regime
+        (``plans.partitioning.local_regime``: within its caps, no
+        checkpoint or resume), that runs instead and the result is a
+        local relation."""
+        from tcr_kcore_spark.plans.partitioning import local_regime
+
+        if local is not None and local_regime(
+            self._graph,
+            checkpoint_dir=kw.get("checkpoint_dir"),
+            resume=kw.get("resume", False),
+            n_vertices=self.n,
+        ):
+            return self._run_local(local, kw.get("max_iter", 100), kw.get("truncate_every", 1))
         converged = None
         if halt is not None:
             agg, pred = halt
@@ -527,7 +572,40 @@ class VertexProgram:
                 return pred(oc.take())
 
         state, stats = run_supersteps(init, step, converged, truncate_init=False, **kw)
+        stats.regime = "broadcast" if self.bcast else "shuffle"
         return propagate_release(state.select(*result), state), stats
+
+    def _run_local(
+        self, local: Callable[..., LocalProgram], max_iter: int, truncate_every: int
+    ) -> tuple[DataFrame, SuperstepStats]:
+        """``local`` on the driver (``plans.partitioning.solve_local``) in
+        ``run_supersteps``' round structure: the halt test after every
+        ``truncate_every`` supersteps, at most ``max_iter`` in all."""
+        from tcr_kcore_spark.plans.partitioning import dense_rows, solve_local
+
+        st = SuperstepStats(regime="local", actions=1)
+        t0 = time.time()
+
+        def kernel(src, dst):
+            ids, s, d = dense_rows(src, dst)
+            prog = local(ids, s, d)
+            state, i = prog.state, 0
+            while i < max_iter:
+                t_step = time.time()
+                k = min(truncate_every, max_iter - i)
+                for j in range(i, i + k):
+                    state = prog.step(state, j)
+                i += k
+                st.supersteps = i
+                st.history.append(round(time.time() - t_step, 3))
+                if prog.halt is not None and prog.halt(state):
+                    st.converged = True
+                    break
+            return {"id": ids, **prog.result(state)}
+
+        out = solve_local(self._graph.edges, kernel)
+        st.wall_secs = time.time() - t0
+        return out, st
 
 
 @contextmanager
@@ -543,7 +621,8 @@ def vertex_program(
     ``n`` to its row count; otherwise ``verts`` is persisted and counted
     unless the caller knows ``n``.  The regime is ``bcast`` when the V-row
     state fits a broadcast (the message join is map-side), else the state
-    shuffle-joins src-partitioned edges.  ``edges``, when given, is
+    shuffle-joins src-partitioned edges; a program with a driver-local
+    form may skip both (``VertexProgram.run``).  ``edges``, when given, is
     partitioned for that regime ONCE and cached (``plan_superstep_edges``:
     no per-superstep exchange is ever proportional to E); without it
     ``vp.edges`` is the graph's own layout.  No eager count: superstep 1
@@ -566,7 +645,9 @@ def vertex_program(
             n = n_graph if n is None else n
         vp.verts = vp.keep(verts)
         vp.n = vp.verts.count() if n is None else n
-        vp.bcast = vp.n <= broadcast_max_rows()
+        # a cap of 0 forces the shuffle regime, on an empty graph too
+        max_rows = broadcast_max_rows()
+        vp.bcast = 0 < max_rows and vp.n <= max_rows
         if edges is not None:
             vp._edges = vp.keep(plan_superstep_edges(edges, vp.bcast))
         yield vp

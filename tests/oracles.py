@@ -58,18 +58,29 @@ def pagerank(
     damping: float = 0.85,
     dangling: bool = False,
     max_iter: int = 1000,
+    simple: bool = True,
+    seeds: list[int] | None = None,
 ) -> dict[int, float]:
     """Reference D1/D2 formula: r0=1; r' = 0.15 + 0.85·Σ r_u/outdeg_u
     (+ damping·Σ r_dead/N when dangling=True).  Edge set semantics match the
-    engine's ingest: dedup + self-loop removal."""
-    edges = sorted({(s, d) for s, d in edges if s != d})
+    engine's ingest: dedup + self-loop removal.  ``simple=False`` takes the
+    rows as an edge table holds them instead: every endpoint is a vertex
+    and every row, duplicate or self-loop, counts in the out-degree and
+    sends a message.  ``seeds`` makes it personalized: with ``p = 1/len(seeds)``
+    on each seed that is a vertex (0 elsewhere), r0 = p and the base term
+    is (1 − damping)·p."""
+    if simple:
+        edges = sorted({(s, d) for s, d in edges if s != d})
     verts = sorted({v for e in edges for v in e})
     idx = {v: i for i, v in enumerate(verts)}
     n = len(verts)
     out = np.zeros(n)
     for s, _ in edges:
         out[idx[s]] += 1
-    r = np.ones(n)
+    base, r = 1 - damping, np.ones(n)
+    if seeds is not None:
+        p = np.array([1.0 / len(seeds) if v in set(seeds) else 0.0 for v in verts])
+        base, r = (1 - damping) * p, p
     it = 0
     while True:
         msg = np.zeros(n)
@@ -77,9 +88,9 @@ def pagerank(
             msg[idx[d]] += r[idx[s]] / out[idx[s]]
         if dangling:
             mass = r[out == 0].sum() / n
-            new = (1 - damping) + damping * (msg + mass)
+            new = base + damping * (msg + mass)
         else:
-            new = (1 - damping) + damping * msg
+            new = base + damping * msg
         delta = np.abs(new - r).max()
         r = new
         it += 1
@@ -110,8 +121,15 @@ def components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {v: find(v) for v in parent}
 
 
-def bfs(edges: list[tuple[int, int]], source: int, symmetric: bool = True) -> dict[int, int | None]:
+def bfs(
+    edges: list[tuple[int, int]], source: int, symmetric: bool = True, simple: bool = True
+) -> dict[int, int | None]:
+    """Distances from ``source`` (None: unreachable).  ``simple=False``:
+    every endpoint of the rows is a vertex, one whose only row is a
+    self-loop included."""
     adj = _adj(edges, symmetric=symmetric)
+    if not simple:
+        adj = {v: set() for e in edges for v in e} | adj
     dist = {v: None for v in adj}
     if source in dist:
         dist[source] = 0
@@ -149,9 +167,17 @@ def sssp(
     return dist
 
 
-def lpa(edges: list[tuple[int, int]], rounds: int) -> dict[int, int]:
-    """Synchronous LPA, deterministic tie-break: (count desc, label asc)."""
-    adj = _adj(edges, symmetric=True)
+def lpa(edges: list[tuple[int, int]], rounds: int, simple: bool = True) -> dict[int, int]:
+    """Synchronous LPA, deterministic tie-break: (count desc, label asc).
+    ``simple=False`` takes ``edges`` as the rows of a symmetric edge table:
+    each row ``(u, v)``, a self-loop or a duplicate too, is one vote of
+    ``u``'s label for ``v``."""
+    if simple:
+        adj = {v: list(ns) for v, ns in _adj(edges, symmetric=True).items()}
+    else:
+        adj = {v: [] for e in edges for v in e}
+        for u, v in edges:
+            adj[v].append(u)
     label = {v: v for v in adj}
     for _ in range(rounds):
         new = {}

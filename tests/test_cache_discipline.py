@@ -206,7 +206,8 @@ def test_vertex_programs_error_exit_release_to_baseline(spark, tmp_path, monkeyp
     Every case runs on a graph that is not materialized (everything the
     call persisted must go) and on a materialized one, whose tables the
     cleared cache makes it rebuild: the exit keeps exactly the graph-owned
-    caches, and ``unpersist`` returns to the baseline."""
+    caches, and ``unpersist`` returns to the baseline.  The driver-local
+    regime is off (its entry cap 0): it runs no superstep to fail."""
     import pytest
 
     from tcr_kcore_spark import superstep
@@ -224,6 +225,7 @@ def test_vertex_programs_error_exit_release_to_baseline(spark, tmp_path, monkeyp
         sssp,
     )
 
+    monkeypatch.setattr("tcr_kcore_spark.plans.partitioning.LOCAL_MAX_ENTRIES", 0)
     g = _graph(spark)
     d = LinkGraph(g.edges, directed=True)
     cg = compress_graph(d)

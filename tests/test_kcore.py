@@ -429,11 +429,20 @@ def test_local_kernel_reads_cached_view_of_materialized_directed_graph(spark, mo
 
 
 def test_local_regime_runs_no_python_worker(spark):
-    """kcore (hindex) and triangles_per_vertex on a small materialized
-    graph: no Python exec node in any plan they run, and one Spark job
-    each — the collect of the cached edges; reading the result (a local
-    relation) runs none.  The vertex set is counted before, as the first
-    operator on a graph does it for all later ones."""
+    """kcore (hindex), triangles_per_vertex and the five vertex programs
+    with a driver-local form (hashmin components, bfs, lpa, pagerank, ppr)
+    on a small materialized graph: no Python exec node in any plan they
+    run, and one Spark job each — the collect of the cached edges;
+    reading the result (a local relation) runs none.  The vertex set is
+    counted before, as the first operator on a graph does it for all later
+    ones."""
+    from tcr_kcore_spark.operators import (
+        bfs,
+        connected_components,
+        label_propagation,
+        pagerank,
+        personalized_pagerank,
+    )
     from tcr_kcore_spark.operators.triangles import triangles_per_vertex
     from tests.test_dense_ids import PY_EXEC_NODES, _plans_of
 
@@ -442,28 +451,42 @@ def test_local_regime_runs_no_python_worker(spark):
     g.materialize()
     g.vertex_set()
     sc = spark.sparkContext
-    got, jobs = {}, {}
+    got, jobs, regimes = {}, {}, {}
 
     def run(name, call):
-        sc.setJobGroup(name, name)
+        # job groups are session-wide: a name another test uses would add
+        # its jobs to this count
+        group = f"local_regime_{name}"
+        sc.setJobGroup(group, group)
         try:
-            got[name] = call().collect()
-            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(name))
+            out, stats = call()
+            got[name] = out.collect()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        regimes[name] = out.regime if stats is None else stats.regime
 
-    plans = _plans_of(
-        spark,
-        lambda: (
-            run("kcore", lambda: kcore(g)[0]),
-            run("triangles", lambda: triangles_per_vertex(g)),
-        ),
-    )
+    calls = {
+        "kcore": lambda: kcore(g),
+        "triangles": lambda: (triangles_per_vertex(g), None),
+        "components": lambda: connected_components(g),
+        "bfs": lambda: bfs(g, source=0),
+        "lpa": lambda: label_propagation(g, rounds=3),
+        "pagerank": lambda: pagerank(g, tol=1e-6),
+        "ppr": lambda: personalized_pagerank(g, seeds=[0, 1]),
+    }
+    plans = _plans_of(spark, lambda: [run(name, call) for name, call in calls.items()])
     g.unpersist()
     assert plans, "no SQL executions recorded"
     for plan in plans:
         for node in PY_EXEC_NODES:
             assert node not in plan, f"{node} in a local-regime plan:\n{plan}"
-    assert jobs == {"kcore": 1, "triangles": 1}
+    assert regimes == {name: "local" for name in calls}
+    assert jobs == {name: 1 for name in calls}
+    assert {r["id"]: r["component"] for r in got["components"]} == oracles.components(edges)
+    assert {r["id"]: r["distance"] for r in got["bfs"]} == oracles.bfs(edges, 0)
+    assert {r["id"]: r["label"] for r in got["lpa"]} == oracles.lpa(edges, 3)
+    want = oracles.pagerank(edges + [(b, a) for a, b in edges], max_iter=100)
+    assert {r["id"]: r["rank"] for r in got["pagerank"]} == pytest.approx(want, rel=1e-9)
     assert {r["id"]: r["coreness"] for r in got["kcore"]} == oracles.coreness(edges)
     assert {r["id"]: r["triangles"] for r in got["triangles"]} == oracles.triangles(edges)

@@ -18,8 +18,18 @@ from hypothesis import strategies as st
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+import numpy as np
+
 from tcr_kcore_spark.graph import LinkGraph
-from tcr_kcore_spark.operators import connected_components, kcore
+from tcr_kcore_spark.operators import (
+    bfs,
+    connected_components,
+    kcore,
+    label_propagation,
+    pagerank,
+    personalized_pagerank,
+)
+from tcr_kcore_spark.superstep import release_state
 
 from tests import oracles
 from tests.conftest import edges_df
@@ -55,7 +65,9 @@ def test_components_random_graphs(spark, raw):
     if not edges:
         return
     g = LinkGraph.from_edges(edges_df(spark, raw), directed=False)
-    got = {r["id"]: r["component"] for r in connected_components(g)[0].collect()}
+    out = connected_components(g)[0]
+    got = {r["id"]: r["component"] for r in out.collect()}
+    release_state(out)
     assert got == oracles.components(edges)
 
 
@@ -70,7 +82,9 @@ def test_kcore_random_graphs(spark, raw, mode):
     if not edges:
         return
     g = LinkGraph.from_edges(edges_df(spark, raw), directed=False)
-    got = {r["id"]: r["coreness"] for r in kcore(g, mode=mode)[0].collect()}
+    out = kcore(g, mode=mode)[0]
+    got = {r["id"]: r["coreness"] for r in out.collect()}
+    release_state(out)
     assert got == oracles.coreness(edges)
 
 
@@ -106,7 +120,10 @@ def _both_regimes(monkeypatch, run):
 
 
 def _rows(df, col):
-    return {r["id"]: r[col] for r in df.collect()}
+    """``{id: col}`` of a result, which is then released."""
+    got = {r["id"]: r[col] for r in df.collect()}
+    release_state(df)
+    return got
 
 
 def _adversarial_graph(spark, raw, directed):
@@ -146,6 +163,7 @@ def test_local_and_distributed_regimes_agree(spark, monkeypatch, raw, directed):
     (kl, sl), (kd, sd) = _both_regimes(monkeypatch, lambda: kcore(g))
     assert sl.supersteps == 1 and sl.local_finish_secs > 0
     assert sd.local_finish_secs == 0.0
+    assert (sl.regime, sd.regime) == ("local", "shuffle")
     assert _rows(kl, "coreness") == _rows(kd, "coreness") == core
 
     pl, pd = _both_regimes(monkeypatch, lambda: kcore(g, mode="peel")[0])
@@ -201,5 +219,98 @@ def test_edge_support_enumerator_random_graphs(spark, monkeypatch, raw, directed
         tri = triangles_per_vertex(g)
         assert tri.regime == "distributed"
         assert _rows(tri, "triangles") == want_ids | oracles.triangles(edges)
-        release_state(tri)
         g.unpersist()
+
+
+# The vertex programs in the three regimes: the driver-local kernels, the
+# broadcast-distributed supersteps (local entry cap 0) and the shuffle ones
+# (SPARK_GRAFT_BROADCAST_MAX_ROWS=0).
+_REGIMES = ("local", "broadcast", "shuffle")
+
+
+def _in_regime(monkeypatch, regime, run):
+    with monkeypatch.context() as m:
+        if regime != "local":
+            m.setattr("tcr_kcore_spark.plans.partitioning.LOCAL_MAX_ENTRIES", 0)
+        if regime == "shuffle":
+            m.setenv("SPARK_GRAFT_BROADCAST_MAX_ROWS", "0")
+        out, stats = run()
+        rows = sorted((r[0], r[1]) for r in out.collect())
+        release_state(out)
+    assert stats.regime == regime
+    return rows, stats
+
+
+def _assert_same(want: dict, got: list, exact: bool) -> None:
+    """``got`` rows equal ``want``: ints exactly, ranks to rtol 1e-9."""
+    ids = [i for i, _ in got]
+    assert ids == sorted(want), (ids, sorted(want))
+    vals = [v for _, v in got]
+    if exact:
+        assert vals == [want[i] for i in ids]
+    else:
+        np.testing.assert_allclose(vals, [want[i] for i in ids], rtol=1e-9)
+
+
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(raw=adversarial_edges, directed=st.booleans())
+@example(raw=[(0, 0), (11 + _BIG, 11 + _BIG), (0, 0), (0, 0)], directed=True)
+def test_vertex_programs_agree_across_regimes(spark, monkeypatch, raw, directed):
+    """hashmin components, bfs (from a vertex and from an id outside the
+    graph), lpa, pagerank (converging, fixed 5 steps, dangling) and ppr
+    (one seed outside the graph): the same ids, values, supersteps and
+    convergence in all three regimes, each equal to the oracle.  The
+    engine counts every row of its edge table, so the oracles read the
+    same rows: the directed graph's raw rows (multi-edges and self-loops
+    included) and the undirected graph's symmetric table (self-loops
+    kept); components and lpa run on the undirected view, which drops a
+    directed graph's self-loops."""
+    g = _adversarial_graph(spark, raw, directed)
+    table = raw if directed else sorted({(a, b) for a, b in raw} | {(b, a) for a, b in raw})
+    view = _clean(raw) if directed else table
+    src, seeds = raw[0][0], [raw[0][1], 3 * _BIG]
+    cases = {
+        "components": (
+            lambda: connected_components(g, mode="hashmin"),
+            oracles.components(view),
+        ),
+        "bfs": (lambda: bfs(g, src), oracles.bfs(table, src, not directed, simple=False)),
+        "bfs_absent": (
+            lambda: bfs(g, 3 * _BIG),
+            oracles.bfs(table, 3 * _BIG, not directed, simple=False),
+        ),
+        "lpa": (lambda: label_propagation(g, rounds=3), oracles.lpa(view, 3, simple=False)),
+        "pagerank": (
+            lambda: pagerank(g, tol=1e-6),
+            oracles.pagerank(table, max_iter=100, simple=False),
+        ),
+        "pagerank_i5": (
+            lambda: pagerank(g, tol=-1.0, max_iter=5),
+            oracles.pagerank(table, iters=5, simple=False),
+        ),
+        "pagerank_dangling": (
+            lambda: pagerank(g, dangling=True),
+            oracles.pagerank(table, dangling=True, max_iter=100, simple=False),
+        ),
+        "ppr": (
+            lambda: personalized_pagerank(g, seeds, max_iter=6),
+            oracles.pagerank(table, iters=6, simple=False, seeds=seeds),
+        ),
+    }
+    for name, (run, want) in cases.items():
+        exact = not name.startswith(("pagerank", "ppr"))
+        got = {r: _in_regime(monkeypatch, r, run) for r in _REGIMES}
+        for regime, (rows, stats) in got.items():
+            _assert_same(want, rows, exact)
+            local = got["local"][1]
+            assert (stats.supersteps, stats.converged) == (local.supersteps, local.converged), (
+                name,
+                regime,
+            )
+        if name == "bfs_absent":
+            assert got["local"][1].supersteps == 1
+    g.unpersist()

@@ -66,9 +66,11 @@ def test_run_supersteps_error_exits_release_state(spark, tmp_path, monkeypatch):
     assert _persistent_ids(spark) - base == set()
 
 
-def test_vertex_program_job_budgets(spark):
+def test_vertex_program_job_budgets(spark, monkeypatch):
     """Spark jobs per call (the call plus one count of its result, counted
-    with ``setJobGroup``/``getJobIdsForGroup``) on the 80-vertex ER graph.
+    with ``setJobGroup``/``getJobIdsForGroup``) on the 80-vertex ER graph,
+    in the distributed broadcast regime (the driver-local one is off: its
+    budget is pinned in ``test_kcore.py``).
 
     The calls run in this order on one materialized graph, which owns its
     vertex set (counted once), out-degree table and superstep layouts:
@@ -77,7 +79,8 @@ def test_vertex_program_job_budgets(spark):
     persisting, counting and partitioning their own.  Before → after
     graph-owned tables: pagerank 19 → 21 (the first call builds the
     shared tables; the out-degree cache materializes as its own job),
-    personalized_pagerank 23 → 19,
+    personalized_pagerank 23 → 19 (→ 17 once a seed list was counted
+    with ``len`` instead of a Spark count),
     components 23 → 17, bfs 23 → 17, sssp 23 → 19 (its weighted edges
     stay per call), lpa 17 → 11, hits (3 steps) 47 → 47, louvain_phase1
     (3 rounds) 54 → 50."""
@@ -96,6 +99,7 @@ def test_vertex_program_job_budgets(spark):
     from tests import oracles
     from tests.conftest import edges_df
 
+    monkeypatch.setattr("tcr_kcore_spark.plans.partitioning.LOCAL_MAX_ENTRIES", 0)
     spark.catalog.clearCache()  # a leaked identical plan would hide jobs
     g = LinkGraph.from_edges(
         edges_df(spark, oracles.er_graph(n=80, avg_deg=6, seed=11)), directed=False
@@ -129,15 +133,16 @@ def test_vertex_program_job_budgets(spark):
     }
     g.unpersist()
     assert got == {
-        "pagerank": 21, "ppr": 19, "components": 17, "bfs": 17, "sssp": 19, "lpa": 11,
+        "pagerank": 21, "ppr": 17, "components": 17, "bfs": 17, "sssp": 19, "lpa": 11,
         "hits": 47, "louvain": 50,
     }, got
 
 
-def test_shared_layout_no_edge_shuffle(spark):
+def test_shared_layout_no_edge_shuffle(spark, monkeypatch):
     """Once one operator has run on a materialized graph, bfs, lpa and
     pagerank read its cached superstep layout: no stage of theirs writes an
-    E-row shuffle (per-stage shuffle records from Spark's status store)."""
+    E-row shuffle (per-stage shuffle records from Spark's status store).
+    The driver-local regime, which reads no layout, is off."""
     from py4j.protocol import Py4JJavaError
 
     from tcr_kcore_spark.graph import LinkGraph
@@ -146,6 +151,7 @@ def test_shared_layout_no_edge_shuffle(spark):
     from tests import oracles
     from tests.conftest import edges_df
 
+    monkeypatch.setattr("tcr_kcore_spark.plans.partitioning.LOCAL_MAX_ENTRIES", 0)
     spark.catalog.clearCache()
     g = LinkGraph.from_edges(
         edges_df(spark, oracles.er_graph(n=60, avg_deg=40, seed=3)), directed=False

@@ -293,7 +293,7 @@ def _hindex(
     if local_regime(g, local_finish_vertices, local_finish_edges, checkpoint_dir, resume):
         stats = SuperstepStats(regime="local")
         t0 = time.time()
-        out = solve_local(g.edges, _coreness_kernel())
+        out = solve_local(g.edges, _coreness_kernel(), canonical=True)
         stats.actions += 1  # the one collect
         stats.supersteps = 1
         stats.converged = True
@@ -856,10 +856,11 @@ def _peel(
                 .join(survivors.withColumnRenamed("id", "dst"), "dst", "left_semi")
             )
             t_fin = time.time()
-            # the residual's rows go to the driver-local kernel
-            # (plans.partitioning.solve_local), which merges both
-            # directions of each pair
-            local = solve_local(residual, _coreness_kernel(k if k is not None else 0))
+            # the residual is symmetric: its canonical rows go to the
+            # driver-local kernel (plans.partitioning.solve_local)
+            local = solve_local(
+                residual, _coreness_kernel(k if k is not None else 0), canonical=True
+            )
             stats.actions += 1
             stats.local_finish_secs = round(time.time() - t_fin, 3)
             # survivors with no residual edges peel at the current k

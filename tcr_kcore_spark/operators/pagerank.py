@@ -208,8 +208,9 @@ def personalized_pagerank(
     truncate_every: int = 1,
 ) -> tuple[DataFrame, SuperstepStats]:
     """Personalized PageRank: ``r' = (1−d)·p + d·Σ_{u∈in(v)} r_u/outdeg_u``
-    with the reset distribution ``p`` uniform over ``seeds`` (a DataFrame
-    with an ``id`` column, or an iterable of vertex ids) and ``r₀ = p`` —
+    with the reset distribution ``p`` uniform over the distinct ``seeds``
+    (a DataFrame with an ``id`` column, or an iterable of vertex ids; a
+    repeated seed counts once) and ``r₀ = p`` —
     the seed-relative relevance vector used for related-item retrieval
     over link graphs.  The reference has no PPR; this reuses the plain
     PageRank plan unchanged (damping/outdeg folded into the state, the
@@ -220,9 +221,10 @@ def personalized_pagerank(
     stops at max |Δr| ≤ tol."""
     spark = graph.edges.sparkSession
     if isinstance(seeds, DataFrame):
+        seeds = seeds.select("id").distinct()
         seed_ids, k = None, seeds.count()
     else:
-        seed_ids = [int(s) for s in seeds]
+        seed_ids = list(dict.fromkeys(int(s) for s in seeds))
         seeds = spark.createDataFrame([(s,) for s in seed_ids], "id long")
         k = len(seed_ids)
     if k == 0:

@@ -23,8 +23,8 @@ per-vertex count is half the support summed over its edges; ``ktruss``
 recounts support inside the surviving edges every round.
 
 A small graph skips the wedge join: inside the driver-local regime
-(``plans.partitioning.local_regime``, the gate kcore uses) its edge
-rows come to the driver in one Arrow collect and ``_triangle_kernel`` runs
+(``plans.partitioning.local_regime``, the gate kcore uses) its canonical
+edges come to the driver in one Arrow collect and ``_triangle_kernel`` runs
 steps 1-3 in NumPy and credits the three corners, unless the graph has more
 than ``LOCAL_MAX_WEDGES`` oriented wedges.  ``triangle_count`` and
 ``local_clustering_coefficient`` read ``triangles_per_vertex``, so they
@@ -128,7 +128,7 @@ def triangles_per_vertex(g: LinkGraph) -> DataFrame:
     A graph inside the driver-local regime
     (``plans.partitioning.local_regime``) with at most ``LOCAL_MAX_WEDGES``
     oriented wedges is counted by ``_triangle_kernel`` on the driver: one
-    collect of the edge rows, no wedge join.  Otherwise the
+    collect of the canonical edges, no wedge join.  Otherwise the
     distributed wedge join runs.  The result's ``regime`` attribute says
     which ran (``"local"`` or ``"distributed"``).
 
@@ -139,7 +139,7 @@ def triangles_per_vertex(g: LinkGraph) -> DataFrame:
 
     und = g.undirected_view()
     if local_regime(und):
-        out = solve_local(und.edges, _triangle_kernel)
+        out = solve_local(und.edges, _triangle_kernel, canonical=True)
         if out is not None:
             out.regime = "local"
             return out

@@ -130,16 +130,22 @@ def simple_pairs(src, dst):
     return ids, key // n, key % n
 
 
-def solve_local(edges: DataFrame, kernel) -> DataFrame | None:
+def solve_local(edges: DataFrame, kernel, canonical: bool = False) -> DataFrame | None:
     """The driver-local transport: every ``(src, dst)`` row of an edge
     table, directed or symmetric, comes to the driver in one ``toArrow()``
     collect (JVM-side Arrow encoding, one job, no Python worker), ``kernel(src,
     dst)`` runs on the NumPy columns and returns ``{name: array}``, and
     ``spark.createDataFrame(pyarrow.Table)`` turns that into a local
     relation (a ``LocalTableScan``: no lineage, nothing cached to free).
-    A kernel that declines returns None, and so does this."""
+    A kernel that declines returns None, and so does this.
+
+    ``canonical`` ships only the ``src ≤ dst`` rows of a symmetric table
+    (self-loops kept, so a loop-only vertex keeps its id): half the rows,
+    and all a kernel that reads the simple graph (``simple_pairs``) needs."""
     import pyarrow as pa
 
+    if canonical:
+        edges = edges.where(F.col("src") <= F.col("dst"))
     rows = edges.select("src", "dst").toArrow()
     cols = kernel(
         rows.column("src").to_numpy().astype("int64", copy=False),

@@ -35,3 +35,12 @@ def edges_df(spark, edges, weights=None):
         return spark.createDataFrame(rows, "src long, dst long, weight double")
     rows = [(int(s), int(d)) for s, d in edges]
     return spark.createDataFrame(rows, "src long, dst long")
+
+
+@pytest.fixture
+def broadcast(monkeypatch):
+    """Close the driver-local gate (``LOCAL_MAX_ENTRIES = 0``), so the
+    vertex programs run their broadcast supersteps on a small test graph;
+    the value is the regime their stats then report."""
+    monkeypatch.setattr("tcr_kcore_spark.plans.partitioning.LOCAL_MAX_ENTRIES", 0)
+    return "broadcast"

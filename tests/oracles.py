@@ -66,9 +66,9 @@ def pagerank(
     engine's ingest: dedup + self-loop removal.  ``simple=False`` takes the
     rows as an edge table holds them instead: every endpoint is a vertex
     and every row, duplicate or self-loop, counts in the out-degree and
-    sends a message.  ``seeds`` makes it personalized: with ``p = 1/len(seeds)``
-    on each seed that is a vertex (0 elsewhere), r0 = p and the base term
-    is (1 − damping)·p."""
+    sends a message.  ``seeds`` makes it personalized: with ``p = 1/k`` on
+    each seed that is a vertex (0 elsewhere), k the number of distinct
+    seeds, r0 = p and the base term is (1 − damping)·p."""
     if simple:
         edges = sorted({(s, d) for s, d in edges if s != d})
     verts = sorted({v for e in edges for v in e})
@@ -79,7 +79,8 @@ def pagerank(
         out[idx[s]] += 1
     base, r = 1 - damping, np.ones(n)
     if seeds is not None:
-        p = np.array([1.0 / len(seeds) if v in set(seeds) else 0.0 for v in verts])
+        seeds = set(seeds)
+        p = np.array([1.0 / len(seeds) if v in seeds else 0.0 for v in verts])
         base, r = (1 - damping) * p, p
     it = 0
     while True:

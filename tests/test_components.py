@@ -9,7 +9,7 @@ from tests.conftest import edges_df
 
 
 @pytest.mark.parametrize("mode", ["hashmin", "smallstar"])
-def test_two_components(spark, mode):
+def test_two_components(spark, mode, regime="local"):
     # FIXTURES F3.2: labels = min id per component
     edges = [(0, 1), (1, 2), (3, 4)]
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
@@ -17,16 +17,28 @@ def test_two_components(spark, mode):
     got = {r["id"]: r["component"] for r in result.collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3}
     assert stats.converged
+    if mode == "hashmin":  # smallstar always runs distributed
+        assert stats.regime == regime
+
+
+def test_two_components_hashmin_broadcast(spark, broadcast):
+    test_two_components(spark, "hashmin", broadcast)
 
 
 @pytest.mark.parametrize("mode", ["hashmin", "smallstar"])
-def test_components_er(spark, mode):
+def test_components_er(spark, mode, regime="local"):
     edges = oracles.er_graph(n=300, avg_deg=2, seed=3)  # sparse → many comps
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
-    result, _ = connected_components(g, mode=mode)
+    result, stats = connected_components(g, mode=mode)
     got = {r["id"]: r["component"] for r in result.collect()}
     want = oracles.components(edges)
     assert got == want
+    if mode == "hashmin":
+        assert stats.regime == regime
+
+
+def test_components_er_hashmin_broadcast(spark, broadcast):
+    test_components_er(spark, "hashmin", broadcast)
 
 
 def test_long_path_graph(spark):

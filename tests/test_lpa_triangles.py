@@ -13,26 +13,36 @@ from tests import oracles
 from tests.conftest import edges_df
 
 
-def test_lpa_two_cliques_bridge(spark):
+def test_lpa_two_cliques_bridge(spark, regime="local"):
     # two 4-cliques joined by one edge: labels converge per clique
     c1 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
     c2 = [(a, b) for a in range(4, 8) for b in range(a + 1, 8)]
     edges = c1 + c2 + [(3, 4)]
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
-    result, _ = label_propagation(g, rounds=5)
+    result, stats = label_propagation(g, rounds=5)
     got = {r["id"]: r["label"] for r in result.collect()}
     want = oracles.lpa(edges, rounds=5)
     assert got == want
+    assert stats.regime == regime
 
 
-def test_lpa_er_matches_oracle(spark):
+def test_lpa_two_cliques_bridge_broadcast(spark, broadcast):
+    test_lpa_two_cliques_bridge(spark, broadcast)
+
+
+def test_lpa_er_matches_oracle(spark, regime="local"):
     edges = oracles.er_graph(n=200, avg_deg=5, seed=13)
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
     for rounds in (1, 3):
-        result, _ = label_propagation(g, rounds=rounds)
+        result, stats = label_propagation(g, rounds=rounds)
         got = {r["id"]: r["label"] for r in result.collect()}
         want = oracles.lpa(edges, rounds=rounds)
         assert got == want, rounds
+        assert stats.regime == regime
+
+
+def test_lpa_er_matches_oracle_broadcast(spark, broadcast):
+    test_lpa_er_matches_oracle(spark, broadcast)
 
 
 def test_triangle_tail_counts(spark):

@@ -262,8 +262,9 @@ def _assert_same(want: dict, got: list, exact: bool) -> None:
 def test_vertex_programs_agree_across_regimes(spark, monkeypatch, raw, directed):
     """hashmin components, bfs (from a vertex and from an id outside the
     graph), lpa, pagerank (converging, fixed 5 steps, dangling) and ppr
-    (one seed outside the graph): the same ids, values, supersteps and
-    convergence in all three regimes, each equal to the oracle.  The
+    (one seed outside the graph and one repeated, as a list and as a
+    DataFrame): the same ids, values, supersteps and convergence in all
+    three regimes, each equal to the oracle.  The
     engine counts every row of its edge table, so the oracles read the
     same rows: the directed graph's raw rows (multi-edges and self-loops
     included) and the undirected graph's symmetric table (self-loops
@@ -272,7 +273,8 @@ def test_vertex_programs_agree_across_regimes(spark, monkeypatch, raw, directed)
     g = _adversarial_graph(spark, raw, directed)
     table = raw if directed else sorted({(a, b) for a, b in raw} | {(b, a) for a, b in raw})
     view = _clean(raw) if directed else table
-    src, seeds = raw[0][0], [raw[0][1], 3 * _BIG]
+    src, seeds = raw[0][0], [raw[0][1], 3 * _BIG, raw[0][1]]
+    seed_df = spark.createDataFrame([(s,) for s in seeds], "id long")
     cases = {
         "components": (
             lambda: connected_components(g, mode="hashmin"),
@@ -298,6 +300,10 @@ def test_vertex_programs_agree_across_regimes(spark, monkeypatch, raw, directed)
         ),
         "ppr": (
             lambda: personalized_pagerank(g, seeds, max_iter=6),
+            oracles.pagerank(table, iters=6, simple=False, seeds=seeds),
+        ),
+        "ppr_df": (
+            lambda: personalized_pagerank(g, seed_df, max_iter=6),
             oracles.pagerank(table, iters=6, simple=False, seeds=seeds),
         ),
     }

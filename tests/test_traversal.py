@@ -8,22 +8,32 @@ from tests import oracles
 from tests.conftest import edges_df
 
 
-def test_bfs_directed_chain(spark):
+def test_bfs_directed_chain(spark, regime="local"):
     edges = [(0, 1), (1, 2), (2, 3), (5, 0)]
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=True)
     result, stats = bfs(g, source=0)
     got = {r["id"]: r["distance"] for r in result.collect()}
     assert got == {0: 0, 1: 1, 2: 2, 3: 3, 5: None}
     assert stats.converged
+    assert stats.regime == regime
 
 
-def test_bfs_undirected_er(spark):
+def test_bfs_directed_chain_broadcast(spark, broadcast):
+    test_bfs_directed_chain(spark, broadcast)
+
+
+def test_bfs_undirected_er(spark, regime="local"):
     edges = oracles.er_graph(n=300, avg_deg=4, seed=5)
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
-    result, _ = bfs(g, source=0)
+    result, stats = bfs(g, source=0)
     got = {r["id"]: r["distance"] for r in result.collect()}
     want = oracles.bfs(edges, source=0, symmetric=True)
     assert got == want
+    assert stats.regime == regime
+
+
+def test_bfs_undirected_er_broadcast(spark, broadcast):
+    test_bfs_undirected_er(spark, broadcast)
 
 
 def test_sssp_weighted(spark):

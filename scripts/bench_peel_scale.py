@@ -5,9 +5,10 @@ vertices), one fresh JVM.  Reports rounds / shrinks / finisher-task seconds
 broken out, appending to BENCH/peel_scale.jsonl.
 
 Usage: python scripts/bench_peel_scale.py [copies] [mode] [n_blocks]
-  mode: "cascade" (default — ADAPTIVE hybrid local+global rounds; set
-  SPARK_GRAFT_CASCADE_PROBE=0 to pin pure cascade rounds) or "legacy"
-  (one-level-per-round global peel, the pre-r5 shape, for A/B).
+  mode: "cascade" (default — ADAPTIVE hybrid local+global rounds: the
+  in-block edge fraction picks the first round type, measured throughput
+  the later ones) or "legacy" (one-level-per-round global peel, the
+  pre-r5 shape, for A/B).
   n_blocks: override the cascade block count.  The 64-copy graph holds
   20k-vertex components on contiguous id ranges; the default (=shuffle
   partitions, 32) aligns blocks with component boundaries (every block

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from tcr_kcore_spark.graph import LinkGraph
 from tcr_kcore_spark.plans.partitioning import (
+    broadcast_max_rows,
     local_caps,
     local_regime,
     simple_pairs,
@@ -72,7 +73,6 @@ def kcore(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 20,
     resume: bool = False,
-    shrink_factor: float = 0.5,
     truncate_every: int = 1,
     local_finish_vertices: int = 2_000_000,
     local_finish_edges: int = 8_000_000,
@@ -86,53 +86,42 @@ def kcore(
     peel (the inner ``while B`` loop between all-reduces,
     ``TCR/src/demo/KCore_big.py:208-234``): survivor edges are
     range-partitioned into contiguous vertex blocks co-partitioned with the
-    degree table, and each global superstep runs a per-block bin-sorted BZ
-    cascade at the current k inside ``applyInPandas`` — in-block decrements
-    apply immediately (many local peel rounds per shuffle round); only
-    boundary decrements to other blocks cross the shuffle.  A block whose
-    alive subgraph has NO external edges is *closed* and finishes its
-    entire coreness decomposition locally in that superstep (valid because
-    every survivor has coreness ≥ the current k, so BZ with floor k on the
-    independent subgraph is exact).  Global supersteps per k-level collapse
-    from the cascade depth to the cross-block boundary depth.
-    ``local_cascade=False`` keeps the one-level-per-round global peel
-    (each round peels only ``deg ≤ k`` once; used for A/B benches).
+    degree table, and each global superstep peels every block at the
+    current k inside ``applyInPandas`` with the layered BZ core
+    (``_layered_peel``) — in-block decrements apply immediately (many
+    local peel rounds per shuffle round); only boundary decrements to
+    other blocks cross the shuffle.  A block whose alive subgraph has NO
+    external edges is *closed* and finishes its entire decomposition in
+    that superstep (every survivor has coreness ≥ the current k, so BZ
+    with floor k on the independent subgraph is exact).  Global supersteps
+    per k-level collapse from the cascade depth to the cross-block
+    boundary depth.  ``local_cascade=False`` keeps the one-level-per-round
+    global peel (for A/B benches).
 
-    The hybrid is ADAPTIVE (round 5): a cascade round pays an Arrow
-    round-trip of the active blocks' edges — a measured 7.5x regression
-    over legacy decrement rounds when blocks straddle components and
-    in-block depth is ~1 (BENCH/peel_scale.jsonl, n_blocks=48 row).  The
-    measured in-block edge fraction (one ~free aggregation that doubles
-    as the cache warm-up; ``stats.local_edge_frac``) seeds the starting
-    round type, then the loop measures per-round peel throughput, runs
-    the faster round type, and re-probes the loser with exponential
-    backoff (see _peel).  Set SPARK_GRAFT_CASCADE_PROBE=0 to force pure
-    cascade rounds (A/B).
+    The hybrid is ADAPTIVE: a cascade round pays an Arrow round-trip of
+    the active blocks' edges — a measured 7.5x regression over legacy
+    decrement rounds when blocks straddle components and in-block depth
+    is ~1 (BENCH/peel_scale.jsonl, n_blocks=48 row).  The in-block edge
+    fraction (``stats.local_edge_frac``) picks the first round type; then
+    the loop runs the round type of the better measured peel throughput
+    and re-probes the other with exponential backoff (see _peel).
 
     ``local_finish_vertices/edges`` cap the driver-local regime
-    (``plans.partitioning.local_caps``: V ≤ ``broadcast_max_rows()`` and
-    at most ``LOCAL_MAX_ENTRIES`` symmetric entries); 0 disables it (pure
-    distributed rounds).  In hindex mode a graph within the caps, and with
-    no checkpoint or resume, is solved outright: one ``toArrow()`` collect
-    of its canonical edges, the layered BZ kernel on the driver, and a
-    local relation back (``plans.partitioning.solve_local`` — no Python
-    worker, no rounds).  In
-    peel mode, once the survivor set shrinks within the caps, the residual
-    goes the same way with the current k as floor — the reference's phase
-    2, collapsing the long tail of tiny peel rounds (each a full Spark job)
-    into one collect.
-
-    The peel's trigger is EDGE-mass-driven and free: deg[v] is maintained
-    as the degree to survivors, so sum(deg) in the per-round bounds action
-    IS the exact residual edge count — no probe join.  Cap rationale: the
-    BZ kernel is linear in E (BENCH/bz_finisher.jsonl: 1.1M edges/s for
-    the serial kernel this one replaced), so the 8M cap bounds the serial
-    tail at a few seconds.  On the 64x-disjoint 153M-edge bench the
-    residual holds >8M edges until the final cascade, so the finisher
-    never fires there (BENCH/peel_scale.jsonl local_finish_secs=0.0) — the
-    cap pays off on graphs whose residual shrinks gradually
-    (test_peel_midway_edge_mass_handoff exercises a mid-peel fire).
-    ``stats.local_finish_secs`` reports the actual cost per run."""
+    (``plans.partitioning.local_caps``); 0 disables it (pure distributed
+    rounds).  In hindex mode a graph within the caps, with no checkpoint
+    or resume, is solved outright: one ``toArrow()`` collect of its
+    canonical edges, the layered BZ core on the driver, and a local
+    relation back (``plans.partitioning.solve_local`` — no Python worker,
+    no rounds).  In peel mode, once the survivor set shrinks within the
+    caps, the residual goes the same way with the current k as floor —
+    the reference's phase 2, collapsing the long tail of tiny peel rounds
+    (each a full Spark job) into one collect.  The trigger is free: deg[v]
+    is maintained as the degree to survivors, so sum(deg) in the
+    per-round bounds action IS the exact residual edge count.  On the
+    64x-disjoint 153M-edge bench the residual holds >8M edges until the
+    final cascade, so the finish never fires there; it pays on graphs
+    whose residual shrinks gradually (test_peel_midway_edge_mass_handoff).
+    ``stats.local_finish_secs`` reports its cost per run."""
     g = graph.undirected_view()
     if mode == "hindex":
         return _hindex(
@@ -149,7 +138,6 @@ def kcore(
         return _peel(
             g,
             max_iter,
-            shrink_factor,
             checkpoint_dir,
             checkpoint_every,
             resume,
@@ -273,9 +261,9 @@ def _hindex_round(
 def _hindex(
     g: LinkGraph,
     max_iter: int,
-    checkpoint_dir: str | None,
-    checkpoint_every: int,
-    resume: bool,
+    checkpoint_dir: str | None = None,
+    checkpoint_every: int = 20,
+    resume: bool = False,
     truncate_every: int = 1,
     local_finish_vertices: int = 2_000_000,
     local_finish_edges: int = 8_000_000,
@@ -360,29 +348,19 @@ def _hindex(
 def kcore_hindex_rounds(
     graph: LinkGraph, rounds: int, truncate_every: int = 1
 ) -> DataFrame:
-    """Fixed number of h-operator rounds (no convergence check) — used by
+    """Fixed number of h-operator rounds (no local solve) — used by
     oracle-checked query entries where the SQL oracle unrolls the identical
-    rounds.  At convergence (rounds ≥ needed) equals exact coreness.
-    ``truncate_every``: rounds chained lazily per materialization
-    (amortizes fixed per-job costs; see run_supersteps)."""
-    g = graph.undirected_view()
-    degrees = g.out_degree_table()
-    # one planning action for V and max degree (was two driver actions)
-    prow = degrees.agg(
-        F.count(F.lit(1)).alias("v"), F.max("out_deg").alias("mx")
-    ).first()
-    hub_safe = (prow["mx"] or 0) > _HUB_WINDOW_MAX_DEG
-    with vertex_program(g, degrees, n=prow["v"]) as vp:
-        out, _ = vp.run(
-            vp.verts.select("id", F.col("out_deg").cast("long").alias("est")),
-            lambda est, i: _hindex_round(
-                vp.edges, est, bcast=vp.bcast, hub_safe=hub_safe
-            ).select("id", "est"),
-            result=("id", F.col("est").alias("coreness")),
-            max_iter=rounds,
-            name="kcore_hindex_rounds",
-            truncate_every=truncate_every,
-        )
+    rounds.  At convergence (rounds ≥ needed) equals exact coreness.  The
+    distributed ``_hindex`` fixpoint capped at ``rounds``: halting early at
+    the fixpoint or skipping the vertices no changed neighbor touches
+    moves no estimate.  ``truncate_every``: rounds chained lazily per
+    materialization (amortizes fixed per-job costs; see run_supersteps)."""
+    out, _ = _hindex(
+        graph.undirected_view(),
+        max_iter=rounds,
+        truncate_every=truncate_every,
+        local_finish_vertices=0,
+    )
     return out
 
 
@@ -391,18 +369,81 @@ def kcore_hindex_rounds(
 # ---------------------------------------------------------------------------
 
 
+# The peel re-materializes the survivor edge set each time the alive set
+# falls below this fraction of its size at the last shrink (the
+# reference's two-phase shrink, ``PKC/pkc.c:23``, repeated).
+_SHRINK_FACTOR = 0.5
+
+
+def _csr(n, src, dst):
+    """``(row_ptr, adj)``: the rows ``src → dst`` on dense ids ``0..n-1`` in
+    CSR form (``adj[row_ptr[v]:row_ptr[v + 1]]`` are ``v``'s targets)."""
+    import numpy as np
+
+    row_ptr = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(src, minlength=n), out=row_ptr[1:])
+    return row_ptr, dst[np.argsort(src, kind="stable")]
+
+
+def _gather(row_ptr, adj, rows):
+    """The CSR slices of ``rows`` concatenated, by one repeat/cumsum index
+    instead of a Python loop over the rows."""
+    import numpy as np
+
+    lens = row_ptr[rows + 1] - row_ptr[rows]
+    stops = np.cumsum(lens)
+    idx = np.repeat(row_ptr[rows] - (stops - lens), lens) + np.arange(
+        int(lens.sum()), dtype=np.int64
+    )
+    return adj[idx]
+
+
+def _layered_peel(row_ptr, adj, deg, k: int, advance: bool = True):
+    """The layered ("parallel") Batagelj–Zaveršnik peel, the one BZ core
+    of every kcore peel (the reference's degree-bucketed frontier,
+    ``PKC/pkc.c:267-349``).  ``row_ptr``/``adj`` is the CSR of the edges
+    the peel decrements along; ``deg``, each vertex's starting degree, may
+    also count edges outside it (a block's edges to other blocks).
+
+    Each inner step peels the WHOLE ``deg ≤ k`` frontier at once: its
+    adjacency slices are gathered and decrements land via ``bincount``,
+    so every adjacency entry is gathered once over the run — O(E)
+    vectorized + O(#levels) small steps, no per-vertex Python.  Between
+    levels ``k`` jumps to the minimum remaining degree if ``advance``;
+    otherwise the peel stops at the first level past ``k``.
+
+    Returns ``(core, cur)``: the level each vertex peeled at (-1 for one
+    the peel did not reach) and the degrees after every decrement."""
+    import numpy as np
+
+    n = deg.shape[0]
+    alive = np.ones(n, dtype=bool)
+    core = np.full(n, -1, dtype=np.int64)
+    cur = deg.astype(np.int64)
+    n_alive = n
+    while n_alive:
+        mn = int(cur[alive].min())
+        if mn > k:
+            if not advance:
+                break
+            k = mn
+        frontier = np.flatnonzero(alive & (cur <= k))
+        while frontier.size:
+            core[frontier] = k
+            alive[frontier] = False
+            n_alive -= frontier.size
+            t = _gather(row_ptr, adj, frontier)
+            t = t[alive[t]]
+            if t.size:
+                cur -= np.bincount(t, minlength=n)
+            frontier = np.flatnonzero(alive & (cur <= k))
+    return core, cur
+
+
 def _layered_bz_arrays(n, s, d, k_floor: int = 0):
-    """Vectorized exact coreness of the simple graph on dense vertices
-    ``0..n-1`` with one ``(s, d)`` row per undirected edge (both NumPy):
-    the layered ("parallel") Batagelj–Zaveršnik peel.  Instead of the
-    serial process-one-vertex-at-a-time loop (pure Python over every
-    adjacency entry), each inner step peels the WHOLE ``deg ≤ k`` frontier
-    at once with NumPy gathers: the frontier's adjacency slices are
-    concatenated via repeat/cumsum, decrements land via ``bincount``, and
-    ``k`` jumps to the minimum remaining degree between levels.  Every
-    adjacency entry is gathered exactly once over the run (when its
-    source peels), so total work is O(E) vectorized + O(#levels) small
-    steps.
+    """Exact coreness of the simple graph on dense vertices ``0..n-1``
+    with one ``(s, d)`` row per undirected edge (both NumPy), by
+    ``_layered_peel`` over its symmetric CSR.
 
     ``k_floor`` is the starting k: continuing a partial distributed peel
     is order-independent, so peeling the residual (whose degrees already
@@ -412,39 +453,8 @@ def _layered_bz_arrays(n, s, d, k_floor: int = 0):
     edge gets ``k_floor``.  Returns the coreness array."""
     import numpy as np
 
-    src = np.concatenate([s, d])
-    dst = np.concatenate([d, s])
-    deg = np.bincount(src, minlength=n).astype(np.int64)
-    row_ptr = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(deg, out=row_ptr[1:])
-    adj = dst[np.argsort(src, kind="stable")]
-    alive = np.ones(n, dtype=bool)
-    core = np.zeros(n, dtype=np.int64)
-    cur = deg.copy()
-    k = k_floor
-    n_alive = n
-    while n_alive:
-        mn = int(cur[alive].min())
-        if mn > k:
-            k = mn
-        frontier = np.flatnonzero(alive & (cur <= k))
-        while frontier.size:
-            core[frontier] = k
-            alive[frontier] = False
-            n_alive -= frontier.size
-            lens = row_ptr[frontier + 1] - row_ptr[frontier]
-            total = int(lens.sum())
-            if total:
-                stops = np.cumsum(lens)
-                idx = np.repeat(
-                    row_ptr[frontier] - (stops - lens), lens
-                ) + np.arange(total, dtype=np.int64)
-                t = adj[idx]
-                t = t[alive[t]]
-                if t.size:
-                    cur -= np.bincount(t, minlength=n)
-            frontier = np.flatnonzero(alive & (cur <= k))
-    return core
+    row_ptr, adj = _csr(n, np.concatenate([s, d]), np.concatenate([d, s]))
+    return _layered_peel(row_ptr, adj, np.diff(row_ptr), k_floor)[0]
 
 
 def _coreness_kernel(k_floor: int = 0):
@@ -462,16 +472,15 @@ def _block_bz_kernel(k: int, span: int):
     """Per-block fixed-k cascade for the hybrid local+global peel — the
     Spark analog of the reference's inner local-peel loop between
     all-reduces (``KCore_big.py:208-234``).  One cogrouped ``applyInPandas``
-    call per (alive degrees of block, out-edges of block).
+    call per (alive degrees of block, out-edges of block); the workers
+    import this module for the BZ core.
 
-    The block runs a bin-sorted array BZ (vertices bucketed by degree,
-    the layout of the reference's multicore phase, ``PKC/pkc.c:267-349``)
-    over the *global* residual degrees from the degree table, with the
-    adjacency split in two:
+    The block runs ``_layered_peel`` over the *global* residual degrees
+    from the degree table, with the adjacency split in two:
 
-    - *local* adjacency: in-block neighbors that are alive — decrements
-      apply immediately, so a whole cascade at level k completes inside
-      the task (many local peel rounds per shuffle round);
+    - *local* adjacency: in-block neighbors that are alive — the peel's
+      CSR, so decrements apply immediately and a whole cascade at level k
+      completes inside the task (many local peel rounds per shuffle round);
     - *external* adjacency: neighbors in other blocks (aliveness unknown
       locally) — each peeled vertex emits one decrement per external
       neighbor; decrements to already-dead targets are dropped when the
@@ -481,22 +490,20 @@ def _block_bz_kernel(k: int, span: int):
     earlier superstep) are dropped outright — the degree table, not the
     edge table, is authoritative for residual degrees.
 
-    The scan peels in ascending-degree order while residual degree ≤ k
-    (every such vertex has coreness exactly k: the level-(k-1) cascade
-    completed globally before k advanced, and peeling is confluent).  If
-    the block has NO external adjacency it is *closed* — an independent
-    subgraph whose survivors all have coreness ≥ k — so the scan continues
-    past k as a full Batagelj–Zaveršnik run with floor k, finishing the
-    block's decomposition in this single superstep.
+    The peel runs while residual degree ≤ k (every such vertex has
+    coreness exactly k: the level-(k-1) cascade completed globally before
+    k advanced, and peeling is confluent).  If the block has NO external
+    adjacency it is *closed* — an independent subgraph whose survivors all
+    have coreness ≥ k — so the peel advances past k as a full
+    Batagelj–Zaveršnik run with floor k, finishing the block's
+    decomposition in this single superstep.
 
     Output rows (kind, id, val): kind 0 = peeled (val = coreness),
     kind 1 = survivor (val = residual degree after local decrements,
     before cross-block decrements), kind 2 = boundary decrement
     (val = count, pre-aggregated per target within the block).
 
-    Memory: ~16 B per block edge + ~56 B per block vertex, plus a bin
-    array sized by the max in-block degree (same bound as the reference's
-    per-device bin sort, ``PKC/pkc.c:267-349``)."""
+    Memory: a few int64 arrays per block edge and per block vertex."""
 
     def kernel(deg_pdf, edge_pdf):
         import numpy as np
@@ -516,7 +523,6 @@ def _block_bz_kernel(k: int, span: int):
         degs = deg_pdf["deg"].to_numpy(dtype="int64", copy=False)
         o = np.argsort(ids, kind="stable")
         ids = ids[o]
-        deg = degs[o].astype(np.int64, copy=True)
         blk = ids[0] // span
 
         src = edge_pdf["src"].to_numpy(dtype="int64", copy=False)
@@ -535,48 +541,11 @@ def _block_bz_kernel(k: int, span: int):
         ext_mask = ~same_blk  # other block: aliveness unknown, emit decs
         # (same_blk & ~alive_dst: stale edge to an in-block dead vertex — drop)
 
-        ls, ld = src_l[local_mask], dl[local_mask]
-        lorder = np.argsort(ls, kind="stable")
-        ladj = ld[lorder]
-        lptr = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(np.bincount(ls, minlength=n), out=lptr[1:])
-        es, ed = src_l[ext_mask], dst_g[ext_mask]
-        eorder = np.argsort(es, kind="stable")
-        eadj = ed[eorder]
-        eptr = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(np.bincount(es, minlength=n), out=eptr[1:])
+        lptr, ladj = _csr(n, src_l[local_mask], dl[local_mask])
+        eptr, eadj = _csr(n, src_l[ext_mask], dst_g[ext_mask])
         closed = eadj.shape[0] == 0
-
-        vert = np.argsort(deg, kind="stable").astype(np.int64)
-        pos = np.empty(n, dtype=np.int64)
-        pos[vert] = np.arange(n, dtype=np.int64)
-        max_deg = int(deg.max())
-        bin_start = np.zeros(max_deg + 2, dtype=np.int64)
-        np.cumsum(np.bincount(deg, minlength=max_deg + 1), out=bin_start[1:])
-        core = np.full(n, -1, dtype=np.int64)
-        kr = k
-        for i in range(n):
-            v = vert[i]
-            dv = deg[v]
-            if dv > kr:
-                if not closed:
-                    break  # open block: levels past k need global knowledge
-                kr = int(dv)
-            core[v] = kr
-            for j in range(lptr[v], lptr[v + 1]):
-                u = ladj[j]
-                du = deg[u]
-                if du > dv:
-                    pu = pos[u]
-                    pw = bin_start[du]
-                    w = vert[pw]
-                    if u != w:
-                        vert[pu] = w
-                        vert[pw] = u
-                        pos[u] = pw
-                        pos[w] = pu
-                    bin_start[du] = pw + 1
-                    deg[u] = du - 1
+        # open block: levels past k need global knowledge
+        core, deg = _layered_peel(lptr, ladj, degs[o], k, advance=closed)
 
         peeled = core >= 0
         parts = []
@@ -592,26 +561,19 @@ def _block_bz_kernel(k: int, span: int):
                 )
             )
             if eadj.shape[0]:
-                pv = np.flatnonzero(peeled)
-                lens = eptr[pv + 1] - eptr[pv]
-                total = int(lens.sum())
-                if total:
-                    # gather the concatenated external slices of peeled verts
-                    stops = np.cumsum(lens)
-                    idx = (
-                        np.repeat(eptr[pv] - (stops - lens), lens)
-                        + np.arange(total, dtype=np.int64)
+                # the concatenated external slices of the peeled vertices
+                targets, counts = np.unique(
+                    _gather(eptr, eadj, np.flatnonzero(peeled)), return_counts=True
+                )
+                parts.append(
+                    pd.DataFrame(
+                        {
+                            "kind": np.full(targets.shape[0], 2, dtype="int32"),
+                            "id": targets,
+                            "val": counts.astype("int64"),
+                        }
                     )
-                    targets, counts = np.unique(eadj[idx], return_counts=True)
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                "kind": np.full(targets.shape[0], 2, dtype="int32"),
-                                "id": targets,
-                                "val": counts.astype("int64"),
-                            }
-                        )
-                    )
+                )
         n_surv = n - n_peeled
         if n_surv:
             surv = ~peeled
@@ -632,7 +594,6 @@ def _block_bz_kernel(k: int, span: int):
 def _peel(
     g: LinkGraph,
     max_iter: int,
-    shrink_factor: float,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 20,
     resume: bool = False,
@@ -655,15 +616,12 @@ def _peel(
     the whole loop — per superstep only the V-row degree table is
     exchanged to meet it, and the cogrouped ``_block_bz_kernel`` runs a
     whole fixed-k cascade (or a full BZ finish for closed blocks) per
-    block per round.  Driver-action budget per round: exactly 2 for a
-    cascade round (the state truncation job + the per-block bounds
-    collect) and 3 for a legacy round (plus the frontier count that
-    gives the planner the frontier's true size so the decrement join
-    broadcasts it), plus O(log rounds) coreness folds and O(log V)
-    shrink re-materializations — ``stats.actions`` counts them and tests
-    assert the budget."""
+    block per round.  Driver-action budget per round: exactly 2 (the
+    state truncation job + the bounds aggregate, per block under the
+    cascade), plus O(log rounds) coreness folds and O(log V) shrink
+    re-materializations — ``stats.actions`` counts them and tests assert
+    the budget."""
     import json
-    import os
 
     spark = g.edges.sparkSession
     stats = SuperstepStats()
@@ -818,28 +776,23 @@ def _peel(
     last_shrink = alive
     rounds_since_ckpt = 0
     local_finished = False
-    # --- adaptive round-type controller (local_cascade only).  A cascade
-    # round collapses all in-block depth at the current k (and finishes
-    # closed blocks outright) but pays an Arrow round-trip of the active
-    # blocks' edges; a legacy decrement round advances one peel level via
-    # cheap JVM aggregations.  Neither dominates: aligned/closed blocks
-    # peel in ONE cascade round (153M-edge bench: 144 rounds -> 1), while
-    # a homogeneous graph whose blocks straddle components pays the full
-    # Arrow cost per round for ~one level of progress (measured 7.5x WORSE
-    # than legacy, BENCH/peel_scale.jsonl n_blocks=48).  So the loop
-    # measures peel throughput (vertices/sec) per round type, runs the
-    # incumbent, and re-probes the other type with exponential backoff
-    # (immediately after shrinks, which change both types' costs).
-    # SPARK_GRAFT_CASCADE_PROBE=0 forces pure cascade rounds (A/B).
-    # The measured in-block edge fraction seeds the incumbent (round 5.1):
-    # an aligned layout (frac → 1) starts on cascade rounds — round 1 is
-    # where closed blocks finish outright — while a straddling layout
-    # (frac → 0) starts on legacy rounds and NEVER pays the old
-    # full-price round-2 cascade probe blind: when the prior is confident
-    # (frac outside [0.1, 0.9]) the first cross-probe is deferred to the
-    # normal backoff cadence; in the ambiguous band the round-2 probe is
-    # kept so a wrong prior costs at most one mispriced round.
-    probing_on = os.environ.get("SPARK_GRAFT_CASCADE_PROBE", "1") != "0"
+    # --- adaptive round-type controller (local_cascade only), the one
+    # cascade policy.  A cascade round collapses all in-block depth at the
+    # current k (and finishes closed blocks outright) but pays an Arrow
+    # round-trip of the active blocks' edges; a legacy decrement round
+    # advances one peel level via cheap JVM aggregations.  Neither
+    # dominates: aligned blocks peel in ONE cascade round (153M-edge bench:
+    # 144 rounds -> 1), while blocks that straddle components pay the full
+    # Arrow cost per round for ~one level (measured 7.5x WORSE than legacy,
+    # BENCH/peel_scale.jsonl n_blocks=48).  So the loop measures peel
+    # throughput (vertices/sec) per round type, runs the incumbent, and
+    # re-probes the other with exponential backoff (soon after shrinks,
+    # which change both costs).  The in-block edge fraction seeds the
+    # incumbent: an aligned layout (frac → 1) starts on cascade rounds, a
+    # straddling one (frac → 0) on legacy rounds.  A confident prior (frac
+    # outside [0.1, 0.9]) defers the first cross-probe to round 5 (two
+    # rounds after a shrink, if sooner); in the ambiguous band round 2
+    # probes, so a wrong prior costs at most one mispriced round.
     # the phase-2 handoff's caps: the driver-local regime's
     max_v, max_e = local_caps(local_finish_vertices, local_finish_edges)
     frac = getattr(stats, "local_edge_frac", -1.0)
@@ -878,8 +831,6 @@ def _peel(
 
         if not local_cascade:
             round_mode, probing = "legacy", False
-        elif not probing_on:
-            round_mode, probing = "cascade", False
         elif probe_countdown <= 0:
             round_mode = "legacy" if incumbent == "cascade" else "cascade"
             probing = True
@@ -932,22 +883,13 @@ def _peel(
                 (out, out.where("kind = 0").select("id", F.col("val").alias("coreness")))
             )
         else:
+            # the frontier (never empty: k ≥ min_deg) is a subset of the
+            # alive vertices, so it is broadcast whenever they fit one —
+            # shuffling the full edge table to meet it cost ~10 s per round
+            # at 153M edges where the broadcast join takes 2 s
             peeled = deg.where(F.col("deg") <= k).select("id").persist()
-            # the count is not just a safety valve: materializing the
-            # frontier cache gives the planner its true (tiny) size, so
-            # the decrement join broadcasts it instead of shuffling the
-            # full edge table (measured 2 s vs ~10 s per round at 153M
-            # edges when the stats are missing)
-            n_peeled = peeled.count()
-            stats.actions += 1
+            bcast = alive <= broadcast_max_rows()
             stats.supersteps += 1
-            if n_peeled == 0:
-                # unreachable with the min-degree jump (some vertex always
-                # has deg ≤ k = max(k, min_deg)); kept as a safety valve
-                k += 1
-                peeled.unpersist()
-                continue
-
             pending.append(
                 (peeled, peeled.select("id", F.lit(k).cast("long").alias("coreness")))
             )
@@ -955,12 +897,16 @@ def _peel(
             # degree decrements: every edge from a peeled vertex to a
             # survivor (reference: torch.unique — KCore_new_v3.py:68-69)
             decr = (
-                edges.join(peeled.withColumnRenamed("id", "src"), "src", "left_semi")
+                edges.join(
+                    state_side(peeled.withColumnRenamed("id", "src"), bcast),
+                    "src",
+                    "left_semi",
+                )
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.count(F.lit(1)).alias("dec"))
             )
             new_deg = (
-                deg.join(peeled, "id", "left_anti")
+                deg.join(state_side(peeled, bcast), "id", "left_anti")
                 .join(decr, "id", "left")
                 .select(
                     "id",
@@ -977,7 +923,7 @@ def _peel(
         release_state(deg)
         deg = new_deg
 
-        if local_cascade and probing_on:
+        if local_cascade:
             # refresh this round type's measured peel throughput; on a
             # probe round, flip the incumbent only on a clear (1.3x) win,
             # else back off the next probe exponentially
@@ -1004,7 +950,7 @@ def _peel(
 
         # two-phase shrink: re-materialize the survivor edge set once the
         # alive set halves (generalizes PKC frac=0.98 / KCore_big phase 2)
-        if alive > 0 and alive < last_shrink * shrink_factor:
+        if alive > 0 and alive < last_shrink * _SHRINK_FACTOR:
             survivors = deg.select("id")
             new_edges = (
                 edges.join(survivors.withColumnRenamed("id", "src"), "src", "left_semi")

@@ -243,6 +243,61 @@ def hindex_rounds(edges: list[tuple[int, int]], rounds: int) -> dict[int, int]:
     return est
 
 
+def block_cascade(
+    degs: dict[int, int], rows: list[tuple[int, int]], k: int, span: int
+) -> list[tuple[int, int, int]]:
+    """One block of the hybrid peel at level k, serially.  ``degs`` maps
+    the block's alive ids (all in one ``id // span`` block) to their
+    residual degrees; ``rows`` are the block's edge rows, stale ones
+    included (a dead src, or a dead dst in the block).  Every alive vertex
+    of degree ≤ k peels at k, and each peel decrements its alive in-block
+    neighbors at once.  A block with no row to another block is closed: it
+    goes on past k, raising k to the least remaining degree.  Returns the
+    sorted (kind, id, val) rows: 0 peeled (coreness), 1 survivor (residual
+    degree), 2 per target in another block, the peeled rows to it."""
+    blk = next(iter(degs)) // span
+    deg = dict(degs)
+    alive = set(deg)
+    local: dict[int, list[int]] = {v: [] for v in alive}
+    external: dict[int, list[int]] = {v: [] for v in alive}
+    for s, d in rows:
+        if s not in alive:
+            continue
+        if d // span != blk:
+            external[s].append(d)
+        elif d in alive:
+            local[s].append(d)
+    closed = not any(external.values())
+    core: dict[int, int] = {}
+    while alive:
+        mn = min(deg[v] for v in alive)
+        if mn > k:
+            if not closed:
+                break
+            k = mn
+        peel = [v for v in alive if deg[v] <= k]
+        while peel:
+            v = peel.pop()
+            if v not in alive:
+                continue
+            core[v] = k
+            alive.discard(v)
+            for u in local[v]:
+                if u in alive:
+                    deg[u] -= 1
+                    if deg[u] <= k:
+                        peel.append(u)
+    decs: dict[int, int] = {}
+    for v in core:
+        for t in external[v]:
+            decs[t] = decs.get(t, 0) + 1
+    return sorted(
+        [(0, v, c) for v, c in core.items()]
+        + [(1, v, deg[v]) for v in alive]
+        + [(2, t, c) for t, c in decs.items()]
+    )
+
+
 def hits(
     edges: list[tuple[int, int]],
     max_iter: int = 50,

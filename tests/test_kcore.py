@@ -61,15 +61,14 @@ def test_cascade_hub_graph_vs_bz_oracle(spark):
     assert got == oracles.coreness(edges)
 
 
-def test_cascade_closed_blocks_single_activation(spark, monkeypatch):
+def test_cascade_closed_blocks_single_activation(spark):
     """Two disjoint ER copies on contiguous id ranges aligned with the
     block split: each block is CLOSED (no external adjacency), so its
     single activation runs full BZ locally — total rounds bounded by the
     number of distinct per-block min-degree levels (2 here), a collapse
-    from the ~15 cascade rounds the legacy peel needs.  Probing disabled:
-    the adaptive controller would insert a legacy probe between the two
-    activations (timing-dependent round counts)."""
-    monkeypatch.setenv("SPARK_GRAFT_CASCADE_PROBE", "0")
+    from the ~15 cascade rounds the legacy peel needs.  The layout's
+    in-block fraction (≥ 0.9) defers the adaptive controller's first
+    legacy probe past round 4, so the round count is not timing-dependent."""
     e1 = oracles.er_graph(n=250, avg_deg=8)
     e2 = [(a + 250, b + 250) for a, b in oracles.er_graph(n=250, avg_deg=8, seed=9)]
     edges = e1 + e2
@@ -80,14 +79,13 @@ def test_cascade_closed_blocks_single_activation(spark, monkeypatch):
     assert st.supersteps <= 2, st.supersteps
 
 
-def test_cascade_boundary_chain(spark, monkeypatch):
+def test_cascade_boundary_chain(spark):
     """A path graph laid across 4 blocks: the level-1 cascade must cross
     block boundaries via emitted decrements (each crossing costs one
     global round), and every vertex still resolves to coreness 1 in a
-    handful of rounds — not the ~V/2 the legacy peel pays.  Probing is
-    disabled so the round-count assert pins the pure cascade (the
-    adaptive controller's probe rounds are timing-dependent)."""
-    monkeypatch.setenv("SPARK_GRAFT_CASCADE_PROBE", "0")
+    handful of rounds — not the ~V/2 the legacy peel pays.  The in-block
+    fraction (≥ 0.9) defers the first legacy probe past round 4, so the
+    run is pure cascade."""
     n = 41
     path = [(i, i + 1) for i in range(n - 1)]
     g = LinkGraph.from_edges(edges_df(spark, path), directed=False)
@@ -236,10 +234,11 @@ def test_peel_path_graph_output_folds_logarithmic(spark):
 
 
 @pytest.mark.parametrize("cascade", [False, True])
-def test_peel_round_driver_action_budget(spark, cascade, monkeypatch):
-    """Each peel round issues TWO Python-level driver actions — the
-    truncation job and ONE combined bounds aggregation (count+min+sum, or
-    its per-block variant under the hybrid cascade).  Counted by wrapping
+def test_peel_round_driver_action_budget(spark, cascade):
+    """Each peel round issues TWO driver actions — the truncation job and
+    ONE combined bounds aggregation (count+min+sum, or its per-block
+    variant under the hybrid cascade); the legacy round runs no frontier
+    count.  Counted by wrapping
     DataFrame.count/first/collect; raw Spark job ids cannot discriminate
     this because AQE splits one action into several jobs (broadcast/
     shuffle query stages).  ``stats.actions`` (the engine's own counter)
@@ -247,10 +246,9 @@ def test_peel_round_driver_action_budget(spark, cascade, monkeypatch):
     loop calls once at setup.  NOTE: the patch must target the RUNTIME
     DataFrame class (pyspark.sql.classic in Spark 4) — patching the
     public ``pyspark.sql.DataFrame`` base is a silent no-op because the
-    classic subclass overrides these methods.  Probing is disabled: the
-    adaptive controller's probe rounds are timing-dependent, and this
-    test pins the per-round-type budgets."""
-    monkeypatch.setenv("SPARK_GRAFT_CASCADE_PROBE", "0")
+    classic subclass overrides these methods.  The path's in-block
+    fraction (≥ 0.9) defers the adaptive controller's first legacy probe
+    past round 4, so the cascade run stays pure cascade."""
     from tcr_kcore_spark.graph import LinkGraph
     from tcr_kcore_spark.operators import kcore
     from tests.conftest import edges_df
@@ -287,7 +285,7 @@ def test_peel_round_driver_action_budget(spark, cascade, monkeypatch):
         per_round = 2  # truncation job + per-block bounds collect
     else:
         assert rounds >= n // 2 - 2
-        per_round = 3  # peel count + truncation job + bounds
+        per_round = 2  # truncation job + bounds
     budget = per_round * rounds + 20  # + setup/fold/shrink slack
     assert stats.actions <= budget, (stats.actions, rounds, budget)
     # independent cross-check: the wrapped count/first/collect calls must
@@ -375,6 +373,56 @@ def test_layered_bz_arrays_matches_oracle():
         # a floor k: vertices of coreness ≤ k take k, the rest keep theirs
         floored = _layered_bz_arrays(ids.shape[0], s, d, k_floor=3)
         assert floored.tolist() == [max(3, c) for c in core.tolist()]
+
+
+def test_block_bz_kernel_matches_oracle():
+    """NumPy-level test of the hybrid peel's per-block kernel (no Spark)
+    against the serial fixed-k cascade: random open and closed blocks,
+    stale rows from and to dead in-block vertices, rows to other blocks,
+    k from 0 to 5."""
+    import numpy as np
+    import pandas as pd
+
+    from tcr_kcore_spark.operators.kcore import _block_bz_kernel
+
+    rng = np.random.default_rng(5)
+    span = 30
+    kinds = {"open": 0, "closed": 0}
+    for _ in range(150):
+        blk = int(rng.integers(0, 4))
+        ids = np.arange(blk * span, (blk + 1) * span)
+        alive = {int(v) for v in ids[rng.random(span) < 0.8]}
+        if not alive:
+            continue
+        # in-block edges over every block id: a dead endpoint makes a stale row
+        a, b = rng.choice(ids, (2, int(rng.integers(0, 4 * span))))
+        pairs = {(int(x), int(y)) for x, y in zip(a, b) if x != y}
+        rows = sorted(pairs | {(y, x) for x, y in pairs})
+        closed = rng.random() < 0.4
+        if not closed:  # rows to ids of other blocks, dead or alive there
+            m = int(rng.integers(1, 2 * span))
+            src = rng.choice(ids, m).tolist()
+            rows += list(zip(src, rng.integers(4 * span, 8 * span, m).tolist()))
+        kinds["closed" if closed else "open"] += 1
+        # residual degree: the alive in-block neighbors plus some of the
+        # other-block targets (those still alive)
+        degs = {
+            v: sum(1 for s, d in rows if s == v and d in alive)
+            + int(rng.integers(0, 1 + sum(1 for s, d in rows if s == v and d // span != blk)))
+            for v in alive
+        }
+        k = int(rng.integers(0, 6))
+        order = rng.permutation(len(rows))
+        edge_pdf = pd.DataFrame(
+            np.array(rows, dtype=np.int64).reshape(-1, 2)[order], columns=["src", "dst"]
+        )
+        deg_pdf = pd.DataFrame(
+            {"id": list(degs), "deg": list(degs.values())}, dtype="int64"
+        ).sample(frac=1, random_state=int(rng.integers(1 << 30)))
+        out = _block_bz_kernel(k, span)(deg_pdf, edge_pdf)
+        got = sorted(zip(out["kind"].tolist(), out["id"].tolist(), out["val"].tolist()))
+        assert got == oracles.block_cascade(degs, rows, k, span), (blk, k, closed)
+    assert min(kinds.values()) >= 30, kinds
 
 
 def _plan_nodes(df) -> set:

@@ -171,11 +171,12 @@ def test_triangle_job_budgets(spark, monkeypatch):
     sc = spark.sparkContext
 
     def jobs(name, run):
-        sc.setJobGroup(name, name)
+        group = f"triangle_job_budgets_{name}"  # job groups are session-wide
+        sc.setJobGroup(group, group)
         try:
             out = run()
             out.count()
-            n = len(sc.statusTracker().getJobIdsForGroup(name))
+            n = len(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         return out, n

@@ -109,11 +109,14 @@ def test_vertex_program_job_budgets(spark, monkeypatch):
     sc = spark.sparkContext
 
     def jobs(name, run):
-        sc.setJobGroup(name, name)
+        # job groups are session-wide: a bare operator name would count the
+        # jobs other tests ran under it
+        group = f"vertex_program_job_budgets_{name}"
+        sc.setJobGroup(group, group)
         try:
             out, _ = run()
             out.count()
-            n = len(sc.statusTracker().getJobIdsForGroup(name))
+            n = len(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         release_state(out)
@@ -161,11 +164,12 @@ def test_shared_layout_no_edge_shuffle(spark, monkeypatch):
     store = sc._jsc.sc().statusStore()
 
     def max_stage_shuffle_records(name, run):
-        sc.setJobGroup(name, name)
+        group = f"shared_layout_no_edge_shuffle_{name}"  # unique per test
+        sc.setJobGroup(group, group)
         try:
             out, _ = run()
             out.count()
-            jobs = sc.statusTracker().getJobIdsForGroup(name)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         release_state(out)

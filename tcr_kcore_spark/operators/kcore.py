@@ -406,11 +406,14 @@ def _layered_peel(row_ptr, adj, deg, k: int, advance: bool = True):
     also count edges outside it (a block's edges to other blocks).
 
     Each inner step peels the WHOLE ``deg ≤ k`` frontier at once: its
-    adjacency slices are gathered and decrements land via ``bincount``,
-    so every adjacency entry is gathered once over the run — O(E)
-    vectorized + O(#levels) small steps, no per-vertex Python.  Between
-    levels ``k`` jumps to the minimum remaining degree if ``advance``;
-    otherwise the peel stops at the first level past ``k``.
+    adjacency slices are gathered, and only a vertex a decrement touched
+    can join the next frontier, so a step costs O(its gathered entries)
+    — ``unique`` on the targets, or one O(n) ``bincount`` when they number
+    at least n/8.  A deep cascade (a path inside a block) thus stays
+    O(n + E) in all, plus one O(n) scan per level for the minimum degree;
+    no per-vertex Python.  Between levels ``k`` jumps to the minimum
+    remaining degree if ``advance``; otherwise the peel stops at the
+    first level past ``k``.
 
     Returns ``(core, cur)``: the level each vertex peeled at (-1 for one
     the peel did not reach) and the degrees after every decrement."""
@@ -434,9 +437,14 @@ def _layered_peel(row_ptr, adj, deg, k: int, advance: bool = True):
             n_alive -= frontier.size
             t = _gather(row_ptr, adj, frontier)
             t = t[alive[t]]
-            if t.size:
-                cur -= np.bincount(t, minlength=n)
-            frontier = np.flatnonzero(alive & (cur <= k))
+            if 8 * t.size >= n:
+                dec = np.bincount(t, minlength=n)
+                cur -= dec
+                frontier = np.flatnonzero((dec > 0) & (cur <= k))
+            else:
+                t, dec = np.unique(t, return_counts=True)
+                cur[t] -= dec
+                frontier = t[cur[t] <= k]
     return core, cur
 
 
@@ -509,16 +517,10 @@ def _block_bz_kernel(k: int, span: int):
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "kind": np.array([], dtype="int32"),
-                "id": np.array([], dtype="int64"),
-                "val": np.array([], dtype="int64"),
-            }
-        )
         n = len(deg_pdf)
-        if n == 0:
-            return empty
+        if n == 0:  # stale edges of a block with no alive vertex
+            empty = {"kind": "int32", "id": "int64", "val": "int64"}
+            return pd.DataFrame({c: np.array([], t) for c, t in empty.items()})
         ids = deg_pdf["id"].to_numpy(dtype="int64", copy=False)
         degs = deg_pdf["deg"].to_numpy(dtype="int64", copy=False)
         o = np.argsort(ids, kind="stable")
@@ -548,45 +550,21 @@ def _block_bz_kernel(k: int, span: int):
         core, deg = _layered_peel(lptr, ladj, degs[o], k, advance=closed)
 
         peeled = core >= 0
-        parts = []
+        # one decrement per external neighbor of a peeled vertex, summed per target
+        targets, counts = np.unique(
+            _gather(eptr, eadj, np.flatnonzero(peeled)), return_counts=True
+        )
         n_peeled = int(peeled.sum())
-        if n_peeled:
-            parts.append(
-                pd.DataFrame(
-                    {
-                        "kind": np.zeros(n_peeled, dtype="int32"),
-                        "id": ids[peeled],
-                        "val": core[peeled],
-                    }
-                )
-            )
-            if eadj.shape[0]:
-                # the concatenated external slices of the peeled vertices
-                targets, counts = np.unique(
-                    _gather(eptr, eadj, np.flatnonzero(peeled)), return_counts=True
-                )
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "kind": np.full(targets.shape[0], 2, dtype="int32"),
-                            "id": targets,
-                            "val": counts.astype("int64"),
-                        }
-                    )
-                )
-        n_surv = n - n_peeled
-        if n_surv:
-            surv = ~peeled
-            parts.append(
-                pd.DataFrame(
-                    {
-                        "kind": np.ones(n_surv, dtype="int32"),
-                        "id": ids[surv],
-                        "val": deg[surv],
-                    }
-                )
-            )
-        return pd.concat(parts, ignore_index=True) if parts else empty
+        return pd.DataFrame(
+            {
+                "kind": np.repeat(
+                    np.array([0, 2, 1], dtype="int32"),
+                    [n_peeled, targets.shape[0], n - n_peeled],
+                ),
+                "id": np.concatenate([ids[peeled], targets, ids[~peeled]]),
+                "val": np.concatenate([core[peeled], counts, deg[~peeled]]),
+            }
+        )
 
     return kernel
 
@@ -618,9 +596,10 @@ def _peel(
     whole fixed-k cascade (or a full BZ finish for closed blocks) per
     block per round.  Driver-action budget per round: exactly 2 (the
     state truncation job + the bounds aggregate, per block under the
-    cascade), plus O(log rounds) coreness folds and O(log V) shrink
-    re-materializations — ``stats.actions`` counts them and tests assert
-    the budget."""
+    cascade; a legacy round adds a frontier count while the alive
+    vertices exceed the broadcast cap), plus O(log rounds) coreness folds
+    and O(log V) shrink re-materializations — ``stats.actions`` counts
+    them and tests assert the budget."""
     import json
 
     spark = g.edges.sparkSession
@@ -883,12 +862,17 @@ def _peel(
                 (out, out.where("kind = 0").select("id", F.col("val").alias("coreness")))
             )
         else:
-            # the frontier (never empty: k ≥ min_deg) is a subset of the
-            # alive vertices, so it is broadcast whenever they fit one —
-            # shuffling the full edge table to meet it cost ~10 s per round
-            # at 153M edges where the broadcast join takes 2 s
+            # the frontier (never empty: k ≥ min_deg) must meet the edges
+            # as a broadcast (their shuffle cost ~10 s per round at 153M
+            # edges, the broadcast 2 s): outright while the alive vertices
+            # fit one, else counted so the planner sees its true size
             peeled = deg.where(F.col("deg") <= k).select("id").persist()
-            bcast = alive <= broadcast_max_rows()
+            if alive <= broadcast_max_rows():
+                side = F.broadcast(peeled)
+            else:
+                peeled.count()
+                stats.actions += 1
+                side = peeled
             stats.supersteps += 1
             pending.append(
                 (peeled, peeled.select("id", F.lit(k).cast("long").alias("coreness")))
@@ -897,16 +881,12 @@ def _peel(
             # degree decrements: every edge from a peeled vertex to a
             # survivor (reference: torch.unique — KCore_new_v3.py:68-69)
             decr = (
-                edges.join(
-                    state_side(peeled.withColumnRenamed("id", "src"), bcast),
-                    "src",
-                    "left_semi",
-                )
+                edges.join(side.withColumnRenamed("id", "src"), "src", "left_semi")
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.count(F.lit(1)).alias("dec"))
             )
             new_deg = (
-                deg.join(state_side(peeled, bcast), "id", "left_anti")
+                deg.join(side, "id", "left_anti")
                 .join(decr, "id", "left")
                 .select(
                     "id",

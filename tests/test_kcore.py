@@ -4,8 +4,18 @@ import pytest
 
 from tcr_kcore_spark.graph import LinkGraph
 from tcr_kcore_spark.operators import kcore, kcore_hindex_rounds
+from tcr_kcore_spark.superstep import release_state
 from tests import oracles
 from tests.conftest import edges_df
+
+
+def _coreness(df) -> dict:
+    """``{id: coreness}`` of a kcore result, which is then released: a
+    result left cached is freed by the context cleaner at some later GC,
+    possibly in the middle of a test that counts persistent RDDs."""
+    got = {r["id"]: r["coreness"] for r in df.collect()}
+    release_state(df)
+    return got
 
 
 @pytest.mark.parametrize("mode", ["hindex", "peel"])
@@ -14,7 +24,7 @@ def test_triangle_tail(spark, mode):
     edges = [(0, 1), (1, 2), (0, 2), (2, 3)]
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
     result, stats = kcore(g, mode=mode)
-    got = {r["id"]: r["coreness"] for r in result.collect()}
+    got = _coreness(result)
     assert got == {0: 2, 1: 2, 2: 2, 3: 1}
 
 
@@ -23,7 +33,7 @@ def test_star(spark, mode):
     edges = [(0, i) for i in range(1, 6)]
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
     result, _ = kcore(g, mode=mode)
-    got = {r["id"]: r["coreness"] for r in result.collect()}
+    got = _coreness(result)
     assert got == {v: 1 for v in range(6)}
 
 
@@ -45,7 +55,7 @@ def test_er_graph_vs_bz_oracle(spark, mode, lfv, cascade):
     result, _ = kcore(
         g, mode=mode, local_finish_vertices=lfv, local_cascade=cascade
     )
-    got = {r["id"]: r["coreness"] for r in result.collect()}
+    got = _coreness(result)
     want = oracles.coreness(edges)
     assert got == want
 
@@ -57,7 +67,7 @@ def test_cascade_hub_graph_vs_bz_oracle(spark):
     edges = oracles.zipf_hub_graph(n=300, m=2000, seed=7)
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
     result, st = kcore(g, mode="peel", local_finish_vertices=0, n_blocks=4)
-    got = {r["id"]: r["coreness"] for r in result.collect()}
+    got = _coreness(result)
     assert got == oracles.coreness(edges)
 
 
@@ -74,7 +84,7 @@ def test_cascade_closed_blocks_single_activation(spark):
     edges = e1 + e2
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
     result, st = kcore(g, mode="peel", local_finish_vertices=0, n_blocks=2)
-    got = {r["id"]: r["coreness"] for r in result.collect()}
+    got = _coreness(result)
     assert got == oracles.coreness(edges)
     assert st.supersteps <= 2, st.supersteps
 
@@ -90,7 +100,7 @@ def test_cascade_boundary_chain(spark):
     path = [(i, i + 1) for i in range(n - 1)]
     g = LinkGraph.from_edges(edges_df(spark, path), directed=False)
     result, st = kcore(g, mode="peel", local_finish_vertices=0, n_blocks=4)
-    got = {r["id"]: r["coreness"] for r in result.collect()}
+    got = _coreness(result)
     assert got == {i: 1 for i in range(n)}
     assert st.supersteps <= 6, st.supersteps
     assert st.cascade_rounds == st.supersteps
@@ -106,7 +116,7 @@ def test_adaptive_probe_mixed_rounds(spark):
     path = [(i, i + 1) for i in range(n - 1)]
     g = LinkGraph.from_edges(edges_df(spark, path), directed=False)
     result, st = kcore(g, mode="peel", local_finish_vertices=0, n_blocks=4)
-    got = {r["id"]: r["coreness"] for r in result.collect()}
+    got = _coreness(result)
     assert got == {i: 1 for i in range(n)}
     assert 1 <= st.cascade_rounds <= st.supersteps
     assert st.supersteps <= n  # never worse than pure legacy's ~V/2 + slack
@@ -123,13 +133,15 @@ def test_layout_prior_seeds_round_type(spark):
     e2 = [(a + 250, b + 250) for a, b in oracles.er_graph(n=250, avg_deg=8, seed=9)]
     edges = e1 + e2
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
-    _, st = kcore(g, mode="peel", local_finish_vertices=0, n_blocks=2, max_iter=1)
+    out, st = kcore(g, mode="peel", local_finish_vertices=0, n_blocks=2, max_iter=1)
+    release_state(out)
     assert st.local_edge_frac >= 0.9, st.local_edge_frac
     assert st.cascade_rounds == 1, (st.cascade_rounds, st.supersteps)
 
     scrambled = [((a * 7919) % 500, (b * 7919) % 500) for a, b in edges]
     g2 = LinkGraph.from_edges(edges_df(spark, scrambled), directed=False)
-    _, st2 = kcore(g2, mode="peel", local_finish_vertices=0, n_blocks=4, max_iter=1)
+    out, st2 = kcore(g2, mode="peel", local_finish_vertices=0, n_blocks=4, max_iter=1)
+    release_state(out)
     assert st2.local_edge_frac < 0.5, st2.local_edge_frac
     assert st2.cascade_rounds == 0, (st2.cascade_rounds, st2.supersteps)
 
@@ -143,7 +155,7 @@ def test_sampled_cascade_probe_correct(spark):
     scrambled = [((a * 7) % 400, (b * 7) % 400) for a, b in edges]
     g = LinkGraph.from_edges(edges_df(spark, scrambled), directed=False)
     result, st = kcore(g, mode="peel", local_finish_vertices=0, n_blocks=16)
-    got = {r["id"]: r["coreness"] for r in result.collect()}
+    got = _coreness(result)
     assert got == oracles.coreness(scrambled)
     if st.supersteps >= 5:  # first cascade probe fires at round 5
         assert st.cascade_rounds >= 1
@@ -160,12 +172,13 @@ def test_cascade_checkpoint_resume(spark, tmp_path):
         checkpoint_dir=ck, checkpoint_every=3, max_iter=5,
     )
     assert st1.supersteps == 5
+    release_state(partial)
     g2 = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
     resumed, st2 = kcore(
         g2, mode="peel", local_finish_vertices=0, n_blocks=4,
         checkpoint_dir=ck, resume=True,
     )
-    got = {r["id"]: r["coreness"] for r in resumed.collect()}
+    got = _coreness(resumed)
     assert got == oracles.coreness(edges)
     assert st2.resumed_from == 3
 
@@ -180,7 +193,7 @@ def test_peel_midway_edge_mass_handoff(spark):
     result, stats = kcore(
         g, mode="peel", local_finish_vertices=10_000, local_finish_edges=800
     )
-    got = {r["id"]: r["coreness"] for r in result.collect()}
+    got = _coreness(result)
     assert got == oracles.coreness(edges)
     # the handoff really was midway: distributed rounds ran AND the
     # finisher fired
@@ -192,7 +205,7 @@ def test_zipf_hubs(spark, mode):
     edges = oracles.zipf_hub_graph(n=500, m=2500)
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
     result, _ = kcore(g, mode=mode)
-    got = {r["id"]: r["coreness"] for r in result.collect()}
+    got = _coreness(result)
     want = oracles.coreness(edges)
     assert got == want
 
@@ -202,7 +215,7 @@ def test_hindex_fixed_rounds_matches_oracle(spark):
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
     for rounds in (1, 3):
         result = kcore_hindex_rounds(g, rounds)
-        got = {r["id"]: r["coreness"] for r in result.collect()}
+        got = _coreness(result)
         want = oracles.hindex_rounds(edges, rounds)
         assert got == want, rounds
 
@@ -222,7 +235,7 @@ def test_peel_path_graph_output_folds_logarithmic(spark):
     # that produces ~V/2 rounds (the hybrid cascade collapses a path to a
     # handful of rounds, which can't exercise the fold cadence)
     out, stats = kcore(g, mode="peel", local_finish_vertices=0, local_cascade=False)
-    rows = {r["id"]: r["coreness"] for r in out.collect()}
+    rows = _coreness(out)
     assert rows == {i: 1 for i in range(n)}
     assert stats.supersteps >= n // 2 - 2
     import math
@@ -237,8 +250,9 @@ def test_peel_path_graph_output_folds_logarithmic(spark):
 def test_peel_round_driver_action_budget(spark, cascade):
     """Each peel round issues TWO driver actions — the truncation job and
     ONE combined bounds aggregation (count+min+sum, or its per-block
-    variant under the hybrid cascade); the legacy round runs no frontier
-    count.  Counted by wrapping
+    variant under the hybrid cascade); while the alive vertices fit the
+    broadcast cap the legacy round runs no frontier count.  Counted by
+    wrapping
     DataFrame.count/first/collect; raw Spark job ids cannot discriminate
     this because AQE splits one action into several jobs (broadcast/
     shuffle query stages).  ``stats.actions`` (the engine's own counter)
@@ -296,9 +310,39 @@ def test_peel_round_driver_action_budget(spark, cascade):
         stats.actions,
         rounds,
     )
-    rows = {r["id"]: r["coreness"] for r in out.collect()}
+    rows = _coreness(out)
     assert rows == {i: 1 for i in range(n)}
     g.unpersist()
+
+
+def test_legacy_round_broadcasts_frontier_above_cap(spark, monkeypatch):
+    """With the alive vertices above the broadcast cap, the legacy round's
+    two frontier joins (the edge semi-join and the degree anti-join) must
+    still broadcast the frontier, not shuffle the edge table to meet it:
+    every round's degree frame is planned with a broadcast hash join for
+    both, above the cap (40 alive, cap 10) and below it."""
+    import importlib
+
+    mod = importlib.import_module("tcr_kcore_spark.operators.kcore")
+    real = mod.truncate_lineage
+    plans = []
+
+    def record(df):
+        if df.columns == ["id", "deg"]:  # a round's new degree table
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df)
+
+    monkeypatch.setattr(mod, "truncate_lineage", record)
+    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_MAX_ROWS", "10")
+    n = 40
+    path = [(i, i + 1) for i in range(n - 1)]
+    g = LinkGraph.from_edges(edges_df(spark, path), directed=False)
+    out, st = kcore(g, mode="peel", local_finish_vertices=0, local_cascade=False)
+    assert _coreness(out) == {i: 1 for i in range(n)}
+    assert len(plans) == st.supersteps >= n // 2 - 2
+    for plan in plans:
+        joins = [l for l in plan.splitlines() if "LeftSemi" in l or "LeftAnti" in l]
+        assert len(joins) == 2 and all("BroadcastHashJoin" in l for l in joins), plan
 
 
 def test_peel_checkpoint_resume_identical(spark, tmp_path):
@@ -313,7 +357,7 @@ def test_peel_checkpoint_resume_identical(spark, tmp_path):
     edges = oracles.er_graph(n=250, avg_deg=6, seed=5)
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
     full, _ = kcore(g, mode="peel", local_finish_vertices=0)
-    want = {r["id"]: r["coreness"] for r in full.collect()}
+    want = _coreness(full)
 
     ck = str(tmp_path / "peel_ck")
     g2 = LinkGraph.from_edges(edges_df(spark, edges), directed=False)
@@ -322,6 +366,7 @@ def test_peel_checkpoint_resume_identical(spark, tmp_path):
         local_finish_vertices=0,
     )
     assert st1.supersteps == 4
+    release_state(partial)
 
     # resume WITH the local finisher on: it must seed k from the manifest
     # and complete to the identical coreness
@@ -330,7 +375,7 @@ def test_peel_checkpoint_resume_identical(spark, tmp_path):
         g3, mode="peel", checkpoint_dir=ck, checkpoint_every=2, resume=True
     )
     assert st2.resumed_from is not None and st2.resumed_from >= 2
-    got = {r["id"]: r["coreness"] for r in resumed.collect()}
+    got = _coreness(resumed)
     assert got == want
 
 
@@ -344,8 +389,8 @@ def test_hindex_local_fast_path_matches_distributed(spark):
     assert st_fast.local_finish_secs > 0 and st_fast.supersteps == 1
     slow, st_slow = kcore(g, mode="hindex", local_finish_vertices=0)
     assert st_slow.supersteps > 1 and st_slow.local_finish_secs == 0.0
-    got_fast = {r["id"]: r["coreness"] for r in fast.collect()}
-    got_slow = {r["id"]: r["coreness"] for r in slow.collect()}
+    got_fast = _coreness(fast)
+    got_slow = _coreness(slow)
     assert got_fast == got_slow == oracles.coreness(edges)
 
 
@@ -465,14 +510,14 @@ def test_local_kernel_reads_cached_view_of_materialized_directed_graph(spark, mo
     g = LinkGraph.from_edges(edges_df(spark, edges), directed=True)
     shuffles = {"Exchange", "HashAggregate"}
 
-    kcore(g)
+    release_state(kcore(g)[0])
     assert shuffles & _plan_nodes(collected[-1])
     g.materialize()
     out, st = kcore(g)
     assert st.local_finish_secs > 0
     nodes = _plan_nodes(collected[-1])
     assert "InMemoryTableScan" in nodes and not shuffles & nodes, nodes
-    assert {r["id"]: r["coreness"] for r in out.collect()} == want
+    assert _coreness(out) == want
     g.unpersist()
 
 
@@ -509,6 +554,7 @@ def test_local_regime_runs_no_python_worker(spark):
         try:
             out, stats = call()
             got[name] = out.collect()
+            release_state(out)
             jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)

@@ -10,7 +10,12 @@ from pyspark.sql import functions as F
 from tcr_kcore_spark.graph import LinkGraph
 from tcr_kcore_spark.operators.kcore import kcore
 from tcr_kcore_spark.plans.layout import locality_relabel
+from tcr_kcore_spark.superstep import release_state
 from tests.conftest import edges_df
+
+# Each test releases the results it creates: one left cached is freed by
+# the context cleaner at some later GC, possibly in the middle of a test
+# that counts persistent RDDs.
 
 
 def _two_cliques(spark, n=40):
@@ -25,6 +30,7 @@ def test_dense_bijection_and_component_contiguity(spark):
     g = _two_cliques(spark)
     _, mapping, stats = locality_relabel(g)
     m = {r["orig"]: r["id"] for r in mapping.collect()}
+    release_state(mapping)
     assert sorted(m.values()) == list(range(40))
     # even component (min id 0 < 1) occupies new ids 0..19, contiguous
     assert sorted(m[v] for v in range(0, 40, 2)) == list(range(20))
@@ -33,11 +39,13 @@ def test_dense_bijection_and_component_contiguity(spark):
 
 def test_inblock_fraction_restored(spark):
     g = _two_cliques(spark)
-    _, s_before = kcore(g, mode="peel", n_blocks=2, local_finish_vertices=0,
-                        local_finish_edges=0)
-    g2, _, _ = locality_relabel(g)
-    _, s_after = kcore(g2, mode="peel", n_blocks=2, local_finish_vertices=0,
-                       local_finish_edges=0)
+    before, s_before = kcore(g, mode="peel", n_blocks=2, local_finish_vertices=0,
+                             local_finish_edges=0)
+    g2, mapping, _ = locality_relabel(g)
+    after, s_after = kcore(g2, mode="peel", n_blocks=2, local_finish_vertices=0,
+                           local_finish_edges=0)
+    for df in (before, after, mapping):
+        release_state(df)
     assert s_before.local_edge_frac < 0.6
     assert s_after.local_edge_frac == 1.0
 
@@ -56,6 +64,8 @@ def test_coreness_invariant_through_relabel(spark):
         .select(F.col("orig").alias("id"), "coreness")
     )
     assert sorted(map(tuple, ref.collect())) == sorted(map(tuple, back.collect()))
+    for df in (ref, kc, mapping):
+        release_state(df)
 
 
 def test_caller_labels_string_key(spark):
@@ -69,6 +79,7 @@ def test_caller_labels_string_key(spark):
     )
     _, mapping, stats = locality_relabel(g, labels=labels)
     m = {r["orig"]: r["id"] for r in mapping.collect()}
+    release_state(mapping)
     assert stats.supersteps == 0  # no labeling run when labels are given
     assert sorted(m.values()) == list(range(6))
     # alpha cluster (1,2,5) first in id order, then zeta (0,3,4)
@@ -84,6 +95,7 @@ def test_edge_attrs_survive(spark):
     assert g2.edges.agg(F.sum("weight")).first()[0] == g.edges.agg(
         F.sum("weight")
     ).first()[0]
+    release_state(mapping)
 
 
 def test_align_span_bin_packing(spark):
@@ -120,6 +132,8 @@ def test_align_span_bin_packing(spark):
         .select(F.col("orig").alias("id"), "coreness")
     )
     assert sorted(map(tuple, ref.collect())) == sorted(map(tuple, back.collect()))
+    for df in (ref, kc, mapping):
+        release_state(df)
     # only the one size-9 cluster can straddle its bin boundary
     assert st.local_edge_frac > 0.9
 
@@ -133,10 +147,12 @@ def test_corpus_ingest_is_natively_local(spark):
     from tcr_kcore_spark.sources.corpus import synth_corpus
     from tcr_kcore_spark.sources.ingest import corpus_to_edges
 
-    edges, _ = corpus_to_edges(synth_corpus(spark, "small"))
+    edges, files = corpus_to_edges(synth_corpus(spark, "small"))
     g = LinkGraph.from_edges(edges, directed=False)
-    _, st = kcore(g, mode="peel", n_blocks=8, local_finish_vertices=0,
-                  local_finish_edges=0, max_iter=1)
+    out, st = kcore(g, mode="peel", n_blocks=8, local_finish_vertices=0,
+                    local_finish_edges=0, max_iter=1)
+    for df in (out, edges, files):
+        release_state(df)
     assert st.local_edge_frac >= 0.5, st.local_edge_frac
 
 
@@ -195,6 +211,8 @@ def test_align_span_edge_shapes(spark, sizes):
     groups = {}
     for r in comp.collect():
         groups.setdefault(r["component"], []).append(r["id"])
+    release_state(comp)
+    release_state(mapping)
     for mem in groups.values():
         bins = {m[v] // span for v in mem}
         assert len(mem) > span or len(bins) == 1, (len(mem), bins)
